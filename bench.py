@@ -134,6 +134,7 @@ def bench_bronze_blocks(spark, n_blocks: int = 2000) -> float:
         tables = run_bronze(df)
         total_rows = sum(t.count() for t in tables.values())
         elapsed = time.perf_counter() - t0
+        tables.release()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print(

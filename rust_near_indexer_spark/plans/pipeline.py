@@ -1,11 +1,12 @@
-"""End-to-end batch pipeline: block stream → bronze tables.
+"""End-to-end bronze DAG: block stream → bronze tables, batch and streaming.
 
 The per-block orchestration of the reference (R6,
 indexer-clickhouse/src/handlers/mod.rs:66-139 — transactions seed state
 first, then receipts/outcomes and events read it) becomes a declarative
 DAG here: state resolution is a fixpoint over the whole bounded input,
 which is equivalent for ordered replay because mapping validity windows
-are checked against the reader's block height.
+are checked against the reader's block height.  A streaming micro-batch
+runs the same DAG with the carried state table added to the seeds.
 """
 
 from __future__ import annotations
@@ -16,13 +17,28 @@ from .. import schemas
 from . import bronze, state
 
 
+class BronzeTables(dict):
+    """The bronze output tables by name.  ``mappings`` is the resolved
+    correlation state; ``release()`` unpersists what the DAG persisted."""
+
+    def __init__(self, tables: dict, mappings: DataFrame, persisted: list) -> None:
+        super().__init__(tables)
+        self.mappings = mappings
+        self._persisted = persisted
+
+    def release(self) -> None:
+        for df in self._persisted:
+            df.unpersist()
+
+
 def run_bronze(
     blocks: DataFrame,
     accounts: tuple = schemas.ACCOUNTS_OF_INTEREST,
     ttl_blocks: int = state.DEFAULT_TTL_BLOCKS,
     block_end: int | None = None,
     events_only: bool = False,
-) -> dict[str, DataFrame]:
+    carried: DataFrame | None = None,
+) -> BronzeTables:
     """Return the four bronze tables as DataFrames.
 
     block_end: bounded stop (R5, handlers/mod.rs:23-29) — the bound is
@@ -38,6 +54,15 @@ def run_bronze(
 
     events_only: R26 (config.rs:74-76) — extract & state-update everything
     but only produce the events table.
+
+    carried: mappings kept from earlier micro-batches (streaming).  The
+    fixpoint runs over carried ∪ batch seeds and the batch's edges: an
+    edge's parent mapping is either carried or produced in this batch —
+    there are no forward cross-batch dependencies because a parent
+    executes before its children are spawned.
+
+    The caller owns the persisted intermediates and frees them with
+    ``release()`` once every table has been consumed.
     """
     if block_end is not None:
         blocks = blocks.where(blocks["block_height"] <= block_end)
@@ -46,6 +71,8 @@ def run_bronze(
     flat_outcomes = bronze.flatten_outcomes(blocks).persist()
 
     seeds = state.seed_mappings(flat_txs, accounts)
+    if carried is not None:
+        seeds = carried.unionByName(seeds)
     edges = state.child_edges(flat_outcomes, accounts)
     mappings = state.resolve_mappings(seeds, edges, ttl_blocks)
 
@@ -71,4 +98,4 @@ def run_bronze(
             bronze.tx_outcome_rows(flat_txs, accounts)
         )
         out["receipts"] = receipt_rows
-    return out
+    return BronzeTables(out, mappings, [flat_outcomes, readers, resolved_rows])

@@ -37,7 +37,9 @@ deviation, can only increase NULLs in replay-of-duplicate scenarios).
 Scale: each iteration is one equi-join on receipt_id (shuffle bounded by
 frontier size, which shrinks geometrically with DAG depth ≤ ~6) and the
 TTL bound keeps resolved-state size O(receipts in window) under
-streaming; see streaming/ for the applyInPandasWithState form.
+streaming, where the state is a carried mapping table, not keyed
+operator state: streaming/pipeline.py explains why keyed state cannot
+express the cross-key fixpoint.
 """
 
 from __future__ import annotations

@@ -12,11 +12,25 @@ UTC-naive), and Arrow for any pandas exchange.
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
+import re
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+def _env_byte_size(var: str, default: str) -> str:
+    """Env var ``var`` (else ``default``) as a Spark byte size: digits and
+    an optional b/k/kb/m/mb/g/gb/t/tb/p/pb suffix.  Anything else raises
+    a ValueError naming ``var`` at import, not at the first shuffle."""
+    value = os.environ.get(var, default).strip()
+    if not re.fullmatch(r"\d+(b|[kmgtp]b?)?", value.lower()):
+        raise ValueError(f"{var}={value!r} is not a byte size such as 64m or 67108864")
+    return value
+
 
 # Configs applied to *every* session we build, and (idempotently, at
 # runtime) to sessions handed to us by the driver.  Only runtime-settable
@@ -44,7 +58,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # env-parameterised for deployments, default 64 MB (Spark's own
     # default — NOT a local-mode constant).
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": _env_byte_size(
         "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"
     ),
     # Arrow-batched pandas exchange: the only sanctioned Python boundary.
@@ -179,9 +193,7 @@ def ship_package(spark: SparkSession) -> None:
         sc.addPyFile(_package_zip())
         sc._rni_pkg_shipped = True
     except Exception:  # pragma: no cover - read-only contexts
-        import logging
-
-        logging.getLogger(__name__).warning(
+        log.warning(
             "could not addPyFile the package; executor-side imports "
             "require the JVM cwd (or PYTHONPATH) to reach the repo",
             exc_info=True,
@@ -210,40 +222,36 @@ def tune(spark: SparkSession) -> SparkSession:
     except Exception:  # pragma: no cover - connect-mode sessions
         app = None
     ship_package(spark)
-    for k, v in RUNTIME_CONFS.items():
+    # Join-strategy policy (memory red-team, r08): compile-time
+    # auto-broadcast is DISABLED because Catalyst's static size estimate
+    # passes through Generate (explode) and aggregate nodes without
+    # inflation — at sf1 it estimated the fully exploded 5-gram token
+    # table as broadcastable and built a multi-GB HashedRelation on the
+    # driver ("not enough memory to build and broadcast").  AQE instead
+    # decides from MEASURED shuffle sizes, bounded by a heap-aware
+    # threshold; explicit F.broadcast() hints on the known-small dims
+    # are unaffected.
+    thresh = _broadcast_threshold_bytes(spark)
+    confs = {
+        **RUNTIME_CONFS,
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": str(thresh),
+    }
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - immutable conf on some builds
-            pass
-    try:
-        # Join-strategy policy (memory red-team, r08): compile-time
-        # auto-broadcast is DISABLED because Catalyst's static size
-        # estimate passes through Generate (explode) and aggregate
-        # nodes without inflation — at sf1 it estimated the fully
-        # exploded 5-gram token table as broadcastable and built a
-        # multi-GB HashedRelation on the driver ("not enough memory to
-        # build and broadcast").  AQE instead decides from MEASURED
-        # shuffle sizes, bounded by a heap-aware threshold; explicit
-        # F.broadcast() hints on the known-small dims are unaffected.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        thresh = _broadcast_threshold_bytes(spark)
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", str(thresh)
-        )
-        # The threshold is heap-derived, so physical plan shape varies
-        # with -Xmx across machines (ADVICE r08): log it so a pinned-
-        # plan failure on a small-heap box is diagnosable, and let an
-        # operator pin it explicitly via env.
-        import logging
-
-        logging.getLogger(__name__).info(
-            "adaptive.autoBroadcastJoinThreshold = %d bytes (%s)",
-            thresh,
-            "env override" if os.environ.get(_ENV_BROADCAST_THRESHOLD) else
-            "min(64MB, driverHeap/64)",
-        )
-    except Exception:  # pragma: no cover
-        pass
+        except Exception:  # immutable conf on some builds
+            log.warning("could not set %s=%s on this session", k, v, exc_info=True)
+    # The threshold is heap-derived, so physical plan shape varies with
+    # -Xmx across machines (ADVICE r08): log it so a pinned-plan failure
+    # on a small-heap box is diagnosable, and let an operator pin it
+    # explicitly via env.
+    log.info(
+        "adaptive.autoBroadcastJoinThreshold = %d bytes (%s)",
+        thresh,
+        "env override" if os.environ.get(_ENV_BROADCAST_THRESHOLD) else
+        "min(64MB, driverHeap/64)",
+    )
     if app is not None:
         _TUNED_APPS.add(app)
     return spark

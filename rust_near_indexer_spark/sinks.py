@@ -76,11 +76,12 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import schemas
+from . import metrics, schemas
+from .tracing import TRACER
 
 HEIGHT_BUCKET_SIZE = 10_000
 
@@ -104,8 +105,6 @@ def with_retries(fn, attempts: int = RETRY_ATTEMPTS, base_delay: float = RETRY_B
     Feeds the R22 counters: each retry increments
     ``database_insert_retries_total``; exhaustion increments
     ``total_tx_store_errors`` (metrics.rs:74-84)."""
-    from . import metrics
-
     delay = base_delay
     for attempt in range(1, attempts + 1):
         try:
@@ -407,6 +406,54 @@ def resume_start(cli_start: int, force: bool, last_height: int | None) -> int:
     return max(cli_start, last_height + 1)
 
 
+def append_tables(
+    tables: dict[str, DataFrame],
+    base_dir: str,
+    ingest_seq: int,
+    with_silver: bool = False,
+) -> dict[str, str]:
+    """Append each table to ``base_dir/<name>``; return the paths.
+
+    ``with_silver`` also appends the 9 silver MVs under ``silver/`` (S18:
+    each ClickHouse MV sees only the inserted batch, and the transforms
+    are stateless projections of the events batch).  Each append is
+    retried (R23), traced as the reference's insert span (database.rs:41)
+    and sets the R22 per-asset-type captured gauge from a row count that
+    rides the write job via ``observe`` — zero extra Spark jobs."""
+    tables = dict(tables)
+    events = None
+    if with_silver:
+        from .plans.silver import all_silver_tables
+
+        events = tables["events"].persist()
+        for sname, sdf in all_silver_tables(events).items():
+            tables[f"silver/{sname}"] = sdf
+
+    def append_observed(df: DataFrame, path: str) -> int:
+        # a fresh Observation per attempt: one attaches only once
+        obs = Observation()
+        append(df.observe(obs, F.count(F.lit(1)).alias("n")), path, ingest_seq)
+        return obs.get["n"]
+
+    paths = {}
+    try:
+        for name, df in tables.items():
+            path = os.path.join(base_dir, name)
+            with TRACER.span("sink_append", table=name) as sp:
+                n = with_retries(lambda d=df, p=path: append_observed(d, p))
+                sp.attributes["rows"] = n
+            metrics.ASSETS_IN_BLOCK_CAPTURED_TOTAL.labels(asset_type=name).set(n)
+            paths[name] = path
+    finally:
+        # the events cache only exists to share the scan across the 9
+        # silver writes — drop it once they're flushed instead of pinning
+        # the batch in executor memory for the rest of the session
+        # (ADVICE r04 #4)
+        if events is not None:
+            events.unpersist()
+    return paths
+
+
 def ingest_bronze(
     spark: SparkSession,
     blocks: DataFrame,
@@ -418,40 +465,16 @@ def ingest_bronze(
     with_silver: bool = False,
 ) -> dict[str, str]:
     """Run the bronze pipeline and append every table to its sink — the
-    per-batch body of the streaming foreachBatch (SURVEY §3.1).
-    ``with_silver`` also materializes the 9 silver MVs under
-    ``silver/`` (the insert-triggered MV fan-out, batch rendering)."""
+    batch twin of the streaming micro-batch (SURVEY §3.1)."""
     from .plans.pipeline import run_bronze
 
     tables = run_bronze(
         blocks, accounts=accounts, block_end=block_end, events_only=events_only
     )
-    if with_silver:
-        # the batch twin of the streaming with_silver fan-out (S18): the
-        # silver MV transforms are stateless projections of the events
-        # batch, so materializing them at ingest time == the reference's
-        # insert-triggered MVs
-        from .plans.silver import all_silver_tables
-
-        events = tables["events"].persist()
-        for sname, sdf in all_silver_tables(events).items():
-            tables[f"silver/{sname}"] = sdf
-    else:
-        events = None
-    paths = {}
     try:
-        for name, df in tables.items():
-            path = os.path.join(base_dir, name)
-            with_retries(lambda d=df, p=path: append(d, p, ingest_seq))
-            paths[name] = path
+        return append_tables(tables, base_dir, ingest_seq, with_silver)
     finally:
-        # the events cache only exists to share the scan across the 9
-        # silver writes — drop it once they're flushed instead of pinning
-        # the batch in executor memory for the rest of the session
-        # (ADVICE r04 #4)
-        if events is not None:
-            events.unpersist()
-    return paths
+        tables.release()
 
 
 # ---------------------------------------------------------------------------

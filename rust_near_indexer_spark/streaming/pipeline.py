@@ -20,50 +20,52 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
   ``transformWithStateInPandas``) partition state BY KEY and forbid
   cross-key reads inside a batch, so chained same-batch resolution is
   inexpressible there.  The idiomatic Spark equivalent of a shared KV
-  is an incrementally-maintained **state table**: each batch unions the
-  carried mappings with the batch's seeds, runs the bounded fixpoint
-  (plans/state.py), emits rows, and persists the surviving window of
-  mappings (TTL-pruned by height distance).  Deterministic, and the
-  whole state lives in columnar storage instead of an external Redis.
-- **Incremental MVs (S18)**: silver transforms are stateless per batch
-  (exactly ClickHouse MV semantics — each MV sees only the insert
-  batch), so the same ``plans/silver.py`` functions run inside
-  ``foreachBatch`` unchanged.
+  is an incrementally-maintained **state table**: each batch passes the
+  carried mappings to the one bronze DAG (``run_bronze(carried=...)``,
+  shared with batch ingest, as is the ``sinks.append_tables`` loop with
+  its silver MV fan-out), which adds them to the seeds of the bounded
+  fixpoint; the batch then saves the surviving window of mappings
+  (TTL-pruned by height distance).  Deterministic, and the whole state
+  lives in columnar storage instead of an external Redis.
 - **Exactly-once**: ``foreachBatch`` may replay a batch after failure;
   every append is stamped with ``ingest_seq = batch_id`` and the sinks
   dedup by declared PK on read/compact (sinks.py), so replays collapse —
   the same ReplacingMergeTree + re-insert-overlap idempotency model the
-  reference relies on (SURVEY §1.3).
+  reference relies on (SURVEY §1.3).  The state is saved last, as a new
+  generation swapped in by symlink (artifact_io.publish_artifact): a
+  crash anywhere, inside the state write included, leaves the previous
+  generation, so the replay reads the state the first attempt read.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import metrics, schemas, sinks
-from ..plans import bronze, state
+from ..artifact_io import publish_artifact
+from ..plans.pipeline import run_bronze
+from ..plans.state import DEFAULT_TTL_BLOCKS
 from ..tracing import TRACER
 
 _STATE_COLS = ("receipt_id", "tx_hash", "tier", "write_block")
 
 
-def _load_state(spark: SparkSession, state_dir: str) -> DataFrame:
+def _load_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     path = os.path.join(state_dir, "mappings")
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame(
-        [], "receipt_id string, tx_hash string, tier string, write_block long"
-    )
+    return spark.read.parquet(path) if os.path.exists(path) else None
 
 
 def _save_state(df: DataFrame, state_dir: str) -> None:
-    path = os.path.join(state_dir, "mappings")
-    # materialize before overwriting the directory we just read from
-    df = df.localCheckpoint(eager=True)
-    df.select(*_STATE_COLS).write.mode("overwrite").parquet(path)
+    # a new generation swapped in atomically: a write that fails leaves
+    # the previous generation, the one this batch read, as the state
+    publish_artifact(
+        os.path.join(state_dir, "mappings"),
+        None,
+        lambda tmp: df.select(*_STATE_COLS).write.parquet(tmp),
+    )
 
 
 def process_batch(
@@ -72,7 +74,7 @@ def process_batch(
     out_dir: str,
     state_dir: str,
     accounts: tuple = schemas.ACCOUNTS_OF_INTEREST,
-    ttl_blocks: int = state.DEFAULT_TTL_BLOCKS,
+    ttl_blocks: int = DEFAULT_TTL_BLOCKS,
     events_only: bool = False,
     with_silver: bool = False,
 ) -> int:
@@ -85,114 +87,42 @@ def process_batch(
     handlers/mod.rs:58-65) with per-sink child spans; a no-op unless
     tracing.init_tracing configured an exporter."""
     with TRACER.span("handle_block_batch", batch_id=batch_id) as sp:
-        n = _process_batch_inner(
-            blocks, batch_id, out_dir, state_dir, accounts, ttl_blocks,
-            events_only, with_silver,
+        sp.attributes["n_blocks"] = 0
+        if blocks.isEmpty():
+            return 0
+        # One JSON parse per batch: blocks feeds both flattens (each read
+        # by several consumers) and the max-height agg.
+        blocks = blocks.persist()
+        tables = run_bronze(
+            blocks,
+            accounts,
+            ttl_blocks,
+            events_only=events_only,
+            carried=_load_state(blocks.sparkSession, state_dir),
         )
+        try:
+            sinks.append_tables(tables, out_dir, batch_id, with_silver)
+            # TTL prune: a mapping written at W is unreadable once every
+            # future reader height exceeds W + ttl; batches arrive in
+            # height order, so pruning against the batch's max height is
+            # safe.  The same (only) collect also feeds the R22
+            # throughput/height metrics.
+            agg = blocks.agg(
+                F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
+            ).collect()[0]
+            max_h, n = agg["h"], int(agg["n"])
+            metrics.BLOCK_PROCESSED_TOTAL.inc(n)
+            metrics.LATEST_BLOCK_HEIGHT.set(max_h)
+            with TRACER.span("save_state", max_block_height=int(max_h)):
+                _save_state(
+                    tables.mappings.where(F.col("write_block") >= max_h - ttl_blocks),
+                    state_dir,
+                )
+        finally:
+            tables.release()
+            blocks.unpersist()
         sp.attributes["n_blocks"] = n
         return n
-
-
-def _process_batch_inner(
-    blocks: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    state_dir: str,
-    accounts: tuple,
-    ttl_blocks: int,
-    events_only: bool,
-    with_silver: bool,
-) -> int:
-    spark = blocks.sparkSession
-    if blocks.isEmpty():
-        return 0
-
-    # One JSON parse per batch: blocks feeds the two flattens and the
-    # max-height agg, and flat_txs feeds three consumers (seeds,
-    # transaction rows, tx-outcome rows) — without caching, each action
-    # re-parses the JSON micro-batch from scratch.
-    blocks = blocks.persist()
-    flat_txs = bronze.flatten_transactions(blocks).persist()
-    flat_outcomes = bronze.flatten_outcomes(blocks).persist()
-
-    carried = _load_state(spark, state_dir)
-    seeds = carried.unionByName(state.seed_mappings(flat_txs, accounts))
-    edges = state.child_edges(flat_outcomes, accounts)
-    # fixpoint over (carried ∪ batch seeds) and the batch's edges: an
-    # edge's parent mapping is either carried (earlier batch) or produced
-    # in this batch — there are no forward cross-batch dependencies
-    # because a parent executes before its children are spawned.
-    mappings = state.resolve_mappings(seeds, edges, ttl_blocks)
-
-    # readers feeds both resolve passes and resolved_rows feeds both the
-    # outcome and receipt sink appends — without a persist each append
-    # action replays the distinct/join/agg chain per table (r12, same
-    # rationale as the flatten persists above; released below)
-    readers = state.readers_from_outcomes(flat_outcomes).persist()
-    resolved_rows = state.resolve(readers, mappings, accounts, ttl_blocks).persist()
-    resolved_events = state.resolve(
-        readers, mappings, accounts, ttl_blocks, events_path=True
-    )
-
-    tables = {"events": bronze.event_rows(flat_outcomes, resolved_events, accounts)}
-    if not events_only:
-        outcome_rows, receipt_rows = bronze.outcome_and_receipt_rows(
-            flat_outcomes, resolved_rows, accounts
-        )
-        tables["transactions"] = bronze.transaction_rows(flat_txs, accounts)
-        tables["execution_outcomes"] = outcome_rows.unionByName(
-            bronze.tx_outcome_rows(flat_txs, accounts)
-        )
-        tables["receipts"] = receipt_rows
-
-    if with_silver:
-        # S18 incremental view maintenance: each ClickHouse MV sees only
-        # the inserted block batch (SURVEY §3.2) — exactly this shape.
-        # The transforms are stateless, so per-batch append == full
-        # recompute ∪-ed over batches.
-        from ..plans import silver as silver_plans
-
-        events_batch = tables["events"].persist()
-        for sname, sdf in silver_plans.all_silver_tables(events_batch).items():
-            tables[f"silver/{sname}"] = sdf
-
-    def _append_observed(d: DataFrame, p: str) -> int:
-        # R22: the appended row count rides the write job via observe —
-        # the per-asset-type captured gauge costs zero extra Spark jobs.
-        # A fresh Observation per attempt: one attaches only once.
-        obs = Observation()
-        sinks.append(d.observe(obs, F.count(F.lit(1)).alias("n")), p, batch_id)
-        return obs.get["n"]
-
-    for name, df in tables.items():
-        # the reference's instrumented insert span (database.rs:41)
-        with TRACER.span("sink_append", table=name) as ssp:
-            n = sinks.with_retries(
-                lambda d=df, p=os.path.join(out_dir, name): _append_observed(d, p)
-            )
-            ssp.attributes["rows"] = n
-        metrics.ASSETS_IN_BLOCK_CAPTURED_TOTAL.labels(asset_type=name).set(n)
-
-    # TTL prune: a mapping written at W is unreadable once every future
-    # reader height exceeds W + ttl; batches arrive in height order, so
-    # pruning against the batch's max height is safe.  The same (only)
-    # collect also feeds the R22 throughput/height metrics.
-    agg = blocks.agg(
-        F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    max_h = agg["h"]
-    metrics.BLOCK_PROCESSED_TOTAL.inc(agg["n"])
-    metrics.LATEST_BLOCK_HEIGHT.set(max_h)
-    with TRACER.span("save_state", max_block_height=int(max_h)):
-        _save_state(
-            mappings.where(F.col("write_block") >= max_h - ttl_blocks), state_dir
-        )
-    resolved_rows.unpersist()
-    readers.unpersist()
-    flat_outcomes.unpersist()
-    flat_txs.unpersist()
-    blocks.unpersist()
-    return int(agg["n"])
 
 
 def run_streaming(
@@ -202,7 +132,7 @@ def run_streaming(
     checkpoint_dir: str,
     state_dir: str | None = None,
     accounts: tuple = schemas.ACCOUNTS_OF_INTEREST,
-    ttl_blocks: int = state.DEFAULT_TTL_BLOCKS,
+    ttl_blocks: int = DEFAULT_TTL_BLOCKS,
     max_files_per_trigger: int = 1,
     events_only: bool = False,
     with_silver: bool = False,

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import urllib.request
 
+import pytest
+
 from rust_near_indexer_spark import metrics
 
 
@@ -89,21 +91,30 @@ def test_with_retries_feeds_counters():
     assert metrics.STORE_ERRORS_TOTAL.value == e0 + 1
 
 
-def test_process_batch_updates_pipeline_metrics(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["process_batch", "ingest_bronze"])
+def test_process_batch_updates_pipeline_metrics(spark, tmp_path, entry):
     """One micro-batch through process_batch must advance the
     blocks-processed counter, set the latest height, and record per-table
-    captured row counts — all from jobs the batch already runs."""
-    from rust_near_indexer_spark import fixtures
+    captured row counts — all from jobs the batch already runs.  A batch
+    ingest shares the append loop, so it records the same captured
+    counts."""
+    from rust_near_indexer_spark import fixtures, sinks
     from rust_near_indexer_spark.streaming.pipeline import process_batch
 
     blocks, _ = fixtures.generate(n_blocks=40)
     df = fixtures.blocks_df(spark, blocks)
+    tables = ("events", "transactions", "receipts", "execution_outcomes")
+    for k in tables:
+        metrics.ASSETS_IN_BLOCK_CAPTURED_TOTAL.labels(asset_type=k).set(0)
     b0 = metrics.BLOCK_PROCESSED_TOTAL.value
-    process_batch(df, 0, str(tmp_path / "out"), str(tmp_path / "state"))
-    assert metrics.BLOCK_PROCESSED_TOTAL.value == b0 + 40
-    assert metrics.LATEST_BLOCK_HEIGHT.value == max(b["block_height"] for b in blocks)
+    if entry == "process_batch":
+        process_batch(df, 0, str(tmp_path / "out"), str(tmp_path / "state"))
+        assert metrics.BLOCK_PROCESSED_TOTAL.value == b0 + 40
+        assert metrics.LATEST_BLOCK_HEIGHT.value == max(b["block_height"] for b in blocks)
+    else:
+        sinks.ingest_bronze(spark, df, str(tmp_path / "out"), 1)
     captured = {
         k: metrics.ASSETS_IN_BLOCK_CAPTURED_TOTAL.labels(asset_type=k).value
-        for k in ("events", "transactions", "receipts", "execution_outcomes")
+        for k in tables
     }
     assert all(v > 0 for v in captured.values()), captured

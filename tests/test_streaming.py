@@ -100,3 +100,35 @@ def test_streaming_restart_is_noop(spark, chunked_blocks_dir, tmp_path):
     run_streaming(spark, blocks_dir, out, checkpoint_dir=ckpt, ttl_blocks=TTL_BLOCKS)
     after = _fp(sinks.read_final(spark, os.path.join(out, "events"), sinks.TABLE_PKS["events"]))
     assert before == after
+
+
+@pytest.mark.parametrize("entry", ["ingest_bronze", "process_batch"])
+def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, entry):
+    """Every frame the bronze DAG, the silver fan-out or a micro-batch
+    persists is released when the call returns: Spark's cache manager is
+    as empty after a batch ingest, or after several micro-batches, as it
+    was before."""
+    from rust_near_indexer_spark import caching
+    from rust_near_indexer_spark.streaming.pipeline import process_batch
+
+    caching.clear_caches()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    blocks, _ = fixtures.generate(n_blocks=60, ttl_blocks=TTL_BLOCKS)
+    out = str(tmp_path / "out")
+    if entry == "ingest_bronze":
+        sinks.ingest_bronze(
+            spark, fixtures.blocks_df(spark, blocks), out, 1, with_silver=True
+        )
+    else:
+        for i in range(3):
+            process_batch(
+                fixtures.blocks_df(spark, blocks[i * 20 : (i + 1) * 20]),
+                i,
+                out,
+                str(tmp_path / "state"),
+                ttl_blocks=TTL_BLOCKS,
+                with_silver=True,
+            )
+    assert cache.isEmpty()

@@ -162,3 +162,40 @@ def test_crash_between_sinks_and_state_save(
 
     got = _run_to_crash_then_recover(spark, blocks_dir, tmp_path, monkeypatch, arm)
     assert got == baseline
+
+
+def test_crash_inside_state_write(spark, blocks_dir, baseline, tmp_path, monkeypatch):
+    """Kill batch 1's state save inside its write job: the parquet write
+    of the mappings fails mid-job (a raise_error column), after anything
+    the writer does to its target before the job runs.  The restart must
+    find batch 0's state and replay batch 1 against it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    orig = DataFrameWriter.parquet
+    state_dir = os.path.join(str(tmp_path / "out"), "_state")
+    calls = {"n": 0}
+
+    def faulty(self, path, *a, **kw):
+        if not path.startswith(state_dir):
+            return orig(self, path, *a, **kw)
+        calls["n"] += 1
+        if calls["n"] < 2:  # batch 0's save
+            return orig(self, path, *a, **kw)
+        poisoned = self._df.withColumn(
+            "tx_hash",
+            F.when(F.col("write_block") >= 0, F.raise_error(F.lit("injected kill-point")))
+            .otherwise(F.col("tx_hash")),
+        )
+        try:
+            return orig(poisoned.write, path, mode="overwrite")
+        except Exception:
+            _KP.fired = True
+            raise
+
+    def arm(kp, mp):
+        global _KP
+        _KP = kp
+        mp.setattr(DataFrameWriter, "parquet", faulty)
+
+    got = _run_to_crash_then_recover(spark, blocks_dir, tmp_path, monkeypatch, arm)
+    assert got == baseline

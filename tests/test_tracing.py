@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import re
 
+import pytest
+
 from rust_near_indexer_spark import tracing
 
 
@@ -88,37 +90,46 @@ def test_jsonl_exporter_and_env_init(tmp_path, monkeypatch):
     assert tracing.TRACER.exporter is None
 
 
-def test_streaming_batch_emits_reference_span_names(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["process_batch", "ingest_bronze"])
+def test_streaming_batch_emits_reference_span_names(spark, tmp_path, entry):
     """One micro-batch through process_batch produces the
     handle_block_batch root with sink_append/save_state children —
-    the reference's handle_streamer_message + insert span shape."""
-    from rust_near_indexer_spark import fixtures
+    the reference's handle_streamer_message + insert span shape.  A
+    batch ingest shares the append loop, so it emits the same
+    sink_append spans."""
+    from rust_near_indexer_spark import fixtures, sinks
     from rust_near_indexer_spark.streaming.pipeline import process_batch
 
     col = CollectExporter()
     tracing.TRACER.exporter = col
     try:
         blocks, _ = fixtures.generate(n_blocks=3, ttl_blocks=5)
-        process_batch(
-            fixtures.blocks_df(spark, blocks),
-            batch_id=0,
-            out_dir=str(tmp_path / "out"),
-            state_dir=str(tmp_path / "state"),
-            ttl_blocks=5,
-        )
+        df = fixtures.blocks_df(spark, blocks)
+        if entry == "process_batch":
+            process_batch(
+                df,
+                batch_id=0,
+                out_dir=str(tmp_path / "out"),
+                state_dir=str(tmp_path / "state"),
+                ttl_blocks=5,
+            )
+        else:
+            sinks.ingest_bronze(spark, df, str(tmp_path / "out"), 1)
     finally:
         tracing.TRACER.exporter = None
-    (_, spans), = col.batches
-    names = [s.name for s in spans]
-    root = [s for s in spans if s.name == "handle_block_batch"]
-    assert len(root) == 1 and root[0].attributes["n_blocks"] == 3
-    assert names.count("sink_append") == 4  # four bronze tables
-    assert "save_state" in names
+    spans = [s for _, batch in col.batches for s in batch]
     sink_spans = [s for s in spans if s.name == "sink_append"]
+    assert len(sink_spans) == 4  # four bronze tables
     assert {s.attributes["table"] for s in sink_spans} == {
         "events", "transactions", "execution_outcomes", "receipts"
     }
-    assert all(s.parent_span_id == root[0].span_id for s in sink_spans)
+    assert all("rows" in s.attributes for s in sink_spans)
+    if entry == "process_batch":
+        (_, spans), = col.batches
+        root = [s for s in spans if s.name == "handle_block_batch"]
+        assert len(root) == 1 and root[0].attributes["n_blocks"] == 3
+        assert "save_state" in [s.name for s in spans]
+        assert all(s.parent_span_id == root[0].span_id for s in sink_spans)
 
 
 def test_clickhouse_insert_span_carries_table():
