@@ -21,19 +21,19 @@ node-id minima, not hashes: output is engine-independent.
 
 Convergence is detected by comparing a deterministic edge-set checksum
 (count + xor of xxhash64) between rounds.  The checksum rides the
-round's own materialization job via ``observe`` (CollectMetrics
-accumulates during the eager checkpoint — VERDICT r03 item 7), so each
-round is exactly ONE Spark job: no separate probe pass, and lineage is
-truncated per round (checkpoint / localCheckpoint, same rule as
-plans/state.py) so the fixpoint never replays the chain.
+round's own materialization job (``caching.materialize_observed`` —
+VERDICT r03 item 7), so each round is exactly ONE Spark job: no
+separate probe pass, and lineage is truncated per round
+(``caching.materialize``) so the fixpoint never replays the chain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.state import _materialize
+from ..caching import materialize, materialize_observed
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """(v, min(N(u) ∪ {u})) for every neighbor v > u, per node u."""
@@ -60,26 +60,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _materialize_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple]:
-    """Eagerly materialize an edge set and return it with its checksum,
-    computed in the SAME job: ``observe`` plants a CollectMetrics node
-    whose accumulators fill while the checkpoint writes partitions —
-    the separate per-round probe job this replaces doubled the job
-    count of the fixpoint loop.  bit_xor (not sum) — overflow-free
-    under ANSI mode, order-independent, and e is distinct so xor is a
-    faithful set digest."""
-    obs = Observation()
-    out = _materialize(
-        e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        )
-    )
-    row = obs.get  # blocks until the materialization action reports
-    return out, (row["n"], row["h"])
-
-
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 30
 ) -> DataFrame:
@@ -92,20 +72,25 @@ def connected_components(
     edges to appear in).  Raises if ``max_rounds`` alternating rounds
     don't converge (O(log n) expected — 30 covers any real graph).
     """
-    e, sig = _materialize_with_checksum(
+    # the round digest: count + xor of xxhash64 — bit_xor (not sum) is
+    # overflow-free under ANSI mode and order-independent, and the edge
+    # set is distinct, so xor is a faithful set digest
+    digest = (F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h"))
+    e, sig = materialize_observed(
         edges.select(
             F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
         )
         .where(F.col("src") != F.col("dst"))
-        .distinct()
+        .distinct(),
+        *digest,
     )
-    nodes = _materialize(
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
     for _ in range(max_rounds):
-        e, new_sig = _materialize_with_checksum(_small_star(_large_star(e)))
+        e, new_sig = materialize_observed(_small_star(_large_star(e)), *digest)
         if new_sig == sig:
             break
         sig = new_sig

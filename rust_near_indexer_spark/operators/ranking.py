@@ -28,16 +28,21 @@ ONE physical exchange — true today via Spark's exchange reuse, but a
 config flip (``spark.sql.exchange.reuse=false``) or a canonicalization
 change would silently de-sync them and corrupt every downstream
 rank/NTILE.  ``_pin`` therefore materializes the ranged frame once
-(checkpoint when a checkpoint dir is set, else eager localCheckpoint —
-the same rule as ``plans/state._materialize``) so pid assignment is a
-fact, not an optimizer coincidence.
+(``caching.materialize``) so pid assignment is a fact, not an optimizer
+coincidence.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..caching import materialize
+
+log = logging.getLogger(__name__)
 
 DEFAULT_PARTS = 32  # #executors-sized at 100 TB; the carry stays tiny
 
@@ -60,11 +65,8 @@ def _pin(df: DataFrame) -> DataFrame:
             df._jdf.queryExecution().explainString(mode.fromString("formatted"))
         )
     except Exception:  # pragma: no cover - inspection must never fail a query
-        pass
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+        log.warning("_pin: could not capture the pinned plan", exc_info=True)
+    return materialize(df)
 
 
 def two_phase_rank(

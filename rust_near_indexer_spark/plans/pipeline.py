@@ -74,7 +74,13 @@ def run_bronze(
     if carried is not None:
         seeds = carried.unionByName(seeds)
     edges = state.child_edges(flat_outcomes, accounts)
-    mappings = state.resolve_mappings(seeds, edges, ttl_blocks)
+    try:
+        mappings = state.resolve_mappings(seeds, edges, ttl_blocks)
+    except BaseException:
+        # the fixpoint runs eagerly: a failure there ends the call before
+        # the caller holds a release() handle
+        flat_outcomes.unpersist()
+        raise
 
     # readers feeds BOTH resolve passes and resolved_rows feeds BOTH the
     # outcome and receipt projections; without a persist every consumer

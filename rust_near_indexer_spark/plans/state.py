@@ -39,15 +39,23 @@ frontier size, which shrinks geometrically with DAG depth ≤ ~6) and the
 TTL bound keeps resolved-state size O(receipts in window) under
 streaming, where the state is a carried mapping table, not keyed
 operator state: streaming/pipeline.py explains why keyed state cannot
-express the cross-key fixpoint.
+express the cross-key fixpoint.  A round keeps no record of earlier
+rounds: each receipt is spawned exactly once, so a round can only
+rediscover an earlier mapping when blocks are replayed, and ``resolve``
+collapses such duplicates (the streaming state save drops them too).
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import materialize_observed
 from .bronze import of_interest
+
+log = logging.getLogger(__name__)
 
 DEFAULT_TTL_BLOCKS = 50  # ≈ 900 s at ~1.1 s/block (README.md:10)
 
@@ -85,19 +93,6 @@ def child_edges(flat_outcomes: DataFrame, accounts: tuple) -> DataFrame:
     )
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Cut lineage + pin the frontier of the fixpoint loop.
-
-    Uses a reliable checkpoint when the deployment set a checkpoint dir
-    (cluster posture: a lost executor must not recompute the whole
-    iteration chain); falls back to an eager localCheckpoint otherwise.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def resolve_mappings(
     seeds: DataFrame,
     edges: DataFrame,
@@ -111,47 +106,53 @@ def resolve_mappings(
     separate rows (Redis overwrite = a later SETEX; readers check any
     window).
 
-    Scale posture: each frontier is eagerly checkpointed (lineage
+    Scale posture: each frontier is eagerly materialized (lineage
     truncation — no replanning-cost compounding, no recompute-chain on
     executor loss), the final mapping table is a union of materialized
     frontiers (nothing stays pinned in cache), and iteration count is
     bounded by the receipt-DAG depth (≤ ~6 in practice per SURVEY §7.2;
-    default 8).  Per round: one equi-join shuffle on a geometrically
-    shrinking frontier + distinct/anti-join dedup.
+    default 8; stopping there with a non-empty frontier is logged).  Per
+    round: one equi-join shuffle on a geometrically shrinking frontier +
+    a distinct, whose row count rides the materialization job and ends
+    the loop when it reaches zero.
     """
+    n = F.count(F.lit(1)).alias("n")
     edges = edges.persist()
-    frontier = _materialize(seeds)
-    mappings = frontier
-    for _ in range(max_depth):
-        new = (
-            edges.join(
-                frontier, edges["parent_receipt_id"] == frontier["receipt_id"], "inner"
+    try:
+        frontier, seen = materialize_observed(seeds, n)
+        mappings = frontier
+        for _ in range(max_depth):
+            frontier, seen = materialize_observed(
+                edges.join(
+                    frontier, edges["parent_receipt_id"] == frontier["receipt_id"], "inner"
+                )
+                .where(
+                    (F.col("edge_block") >= F.col("write_block"))
+                    & (F.col("edge_block") <= F.col("write_block") + ttl_blocks)
+                )
+                .select(
+                    F.col("child_receipt_id").alias("receipt_id"),
+                    "tx_hash",
+                    F.col("child_tier").alias("tier"),
+                    F.col("edge_block").alias("write_block"),
+                )
+                .distinct(),
+                n,
             )
-            .where(
-                (F.col("edge_block") >= F.col("write_block"))
-                & (F.col("edge_block") <= F.col("write_block") + ttl_blocks)
+            if not seen["n"]:
+                break
+            # union of already-materialized frontiers: cheap to recompute, so
+            # no persist needed — nothing accumulates in the cache.
+            mappings = mappings.unionByName(frontier)
+        if seen["n"]:
+            log.warning(
+                "resolve_mappings: stopped at max_depth=%d with %d mappings on "
+                "the frontier; deeper receipts stay unresolved",
+                max_depth,
+                seen["n"],
             )
-            .select(
-                F.col("child_receipt_id").alias("receipt_id"),
-                "tx_hash",
-                F.col("child_tier").alias("tier"),
-                F.col("edge_block").alias("write_block"),
-            )
-            .distinct()
-        )
-        # only genuinely new mappings continue the frontier
-        new = _materialize(
-            new.join(
-                mappings, ["receipt_id", "tx_hash", "tier", "write_block"], "left_anti"
-            )
-        )
-        if new.isEmpty():
-            break
-        # union of already-materialized frontiers: cheap to recompute, so
-        # no persist needed — nothing accumulates in the cache.
-        mappings = mappings.unionByName(new)
-        frontier = new
-    edges.unpersist()
+    finally:
+        edges.unpersist()
     return mappings
 
 

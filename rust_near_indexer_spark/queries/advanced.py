@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..caching import materialize
 from ..canonical import cents
 from ..operators.ranking import _pin as _pin_ranged
 from ..tables import load, spread
@@ -152,13 +153,11 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate broadcast back, and a top-N sort over keys — never rows.
     This is the cheapest possible skew probe: strictly less work than
     the join it de-risks.  The per-key count table is materialized once
-    (localCheckpoint) because both the global stats and the top-N
+    (caching.materialize) because both the global stats and the top-N
     consume it — without the cut Catalyst re-derives it per branch and
     scans the fact table twice."""
-    from ..plans.state import _materialize
-
     li = load(spark, sf_dir, "lineitem")
-    c = _materialize(
+    c = materialize(
         li.groupBy(F.col("l_partkey").alias("key")).agg(
             F.count(F.lit(1)).alias("n_rows")
         )
@@ -322,19 +321,16 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     edge list keyed by node + a map-combined min — the textbook Pregel
     step as DataFrames; LP_ROUNDS is a constant, so the whole operator
     is O(rounds) shuffles of (node, long) pairs.  The label table is
-    localCheckpointed per round to keep lineage flat (same rule as the
-    CC fixpoint)."""
-    from ..plans.state import _materialize
-
+    materialized per round (caching.materialize) to keep lineage flat."""
     pairs = _verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
     # und is consumed every round (and for the label init): materialize
     # once (r12) instead of re-running the union+distinct per round
-    und = _materialize(
+    und = materialize(
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("s", "d")
         .distinct()
     )
-    labels = _materialize(
+    labels = materialize(
         und.select(F.col("s").alias("node")).distinct().withColumn("lbl", F.col("node"))
     )
     for _ in range(LP_ROUNDS):
@@ -347,7 +343,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         nb = und.join(labels.withColumnRenamed("node", "d"), "d").select(
             F.col("s").alias("node"), "lbl"
         )
-        labels = _materialize(
+        labels = materialize(
             nb.unionByName(labels).groupBy("node").agg(F.min("lbl").alias("lbl"))
         )
     return (
@@ -542,7 +538,6 @@ def dedup_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 300000).alias("doc_id"),
         F.slice("w", 1, F.greatest(F.expr("size(w) div 2"), F.lit(5))).alias("w"),
     )
-    from ..plans.state import _materialize
 
     corpus = base.unionByName(exc)
     sh = corpus.select("doc_id", _shingles5(F.col("w")).alias("sh"))
@@ -556,7 +551,7 @@ def dedup_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sz rides the array pre-explode: _shingles5 is array_distinct, so
     # the oracle's COUNT(*) OVER (PARTITION BY doc_id) == size(sh)
     # exactly; explode drops empty arrays, matching `WHERE size(sh)>0`.
-    docs = _materialize(sh.select("doc_id", F.size("sh").alias("sz"), "sh"))
+    docs = materialize(sh.select("doc_id", F.size("sh").alias("sz"), "sh"))
     tok = docs.select("doc_id", "sz", F.explode("sh").alias("s"))
     t1 = tok.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("s")))
     ranked = t1.withColumn(
@@ -649,8 +644,6 @@ def item_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     its SortMergeJoin.  The pair count is map-combined; the 1-row
     basket total broadcasts; the top-N sorts pair-domain rows, never
     baskets."""
-    from ..plans.state import _materialize
-
     li = load(spark, sf_dir, "lineitem")
     # One basket row per order (collect_set is map-side combinable and
     # bounded by basket size), materialized once: the old
@@ -660,7 +653,7 @@ def item_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same ordered pairs from each basket's sorted item array
     # (fanout bounded by basket size squared, exactly like the join on
     # ok), on ONE scan and ONE exchange keyed by order.
-    baskets = _materialize(
+    baskets = materialize(
         li.groupBy(F.col("l_orderkey").alias("ok")).agg(
             F.sort_array(F.collect_set("l_partkey")).alias("pks")
         )

@@ -26,7 +26,7 @@ is embarrassingly parallel over the corpus scan, and the centroid
 update is a single groupBy(cluster) whose 64 component sums combine
 map-side — the only shuffle moves K×65 longs per upstream partition,
 never the vectors.  Each new centroid table is eagerly materialized
-(plans/state.py lineage rule) so iteration k never replays 0..k-1.
+(caching.materialize) so iteration k never replays 0..k-1.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import SessionCache
+from ..caching import SessionCache, materialize
 from ..canonical import duck_fingerprint, duck_hash60, fingerprint
 from ..tables import load, spread
 from . import register
@@ -138,14 +138,12 @@ _CEN_CACHE = SessionCache("clustering.centroids")
 
 def _final_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the KM_ITERS Lloyd rounds once per (session, sf_dir); the
-    resulting K-row centroid table is localCheckpointed, so reuse by
+    resulting K-row centroid table is materialized, so reuse by
     ``semantic_dedup`` costs nothing (same sharing rule as the LSH
     pair cache in dedup.py)."""
-    from ..plans.state import _materialize
-
     def build() -> DataFrame:
         vec = _quantized(spark, sf_dir)
-        cen = _materialize(
+        cen = materialize(
             vec.where(
                 (F.col("vec_id") % SEED_STRIDE == 0)
                 & (F.col("vec_id") < K * SEED_STRIDE)
@@ -160,7 +158,7 @@ def _final_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("n"),
                 *[F.sum(F.get("qe", i)).alias(f"s{i}") for i in range(DIM)],
             )
-            cen = _materialize(
+            cen = materialize(
                 agg.select(
                     "cluster",
                     F.array(*[F.expr(f"s{i} div n") for i in range(DIM)]).alias("ce"),
@@ -305,13 +303,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bucket(F.col("embedding")).alias("bucket"),
         _qvec(F.col("embedding")).alias("qe"),
     )
-    from ..plans.state import _materialize
 
     # materialized once: reused by the pair join (twice), the per-cluster
     # totals, and the kept-side anti-join — without this the broadcast
     # crossJoin + argmin chain re-executes four times.  The quantized qe
     # rides through the assignment and feeds the near-dup dot directly.
-    assigned = _materialize(
+    assigned = materialize(
         _assign(augq, _final_centroids(spark, sf_dir), carry=("bucket",)).select(
             "vec_id", "qe", "bucket", "cluster"
         )

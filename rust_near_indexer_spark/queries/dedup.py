@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import SessionCache
+from ..caching import SessionCache, materialize
 from ..canonical import duck_fingerprint, duck_hash60, fingerprint, hash60
 from ..tables import load, spread
 from . import register
@@ -396,12 +396,12 @@ def _pair_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the artifact stores the CC labels — a parquet read replaces
             # the whole iterative star-forest fixpoint for warm sessions
             return ensure_dedup_artifact(spark, sf_dir)["labels"].persist()
-        # localCheckpoint: the label table is consumed from 3+ branches
-        # per query (members/edges/triangles joins) — without the cut,
-        # the whole star-forest mapping plan is replicated per consumer
-        return connected_components(
-            _verified_pairs(spark, sf_dir), "doc_a", "doc_b"
-        ).localCheckpoint(eager=False)
+        # materialize: the label table is consumed from 3+ branches per
+        # query (members/edges/triangles joins) — without the cut, the
+        # whole star-forest mapping plan is replicated per consumer
+        return materialize(
+            connected_components(_verified_pairs(spark, sf_dir), "doc_a", "doc_b")
+        )
 
     return _COMP_CACHE.get_or_build(spark, (sf_dir,), build)
 
@@ -648,10 +648,12 @@ def dedup_cluster_cliqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 consumers (two wedge sides + the closing-edge probe): cut the
     # lineage so the degree join runs once, not per consumer — the
     # oriented edge list is pairs-sized, tiny
-    f = keyed.select(
-        F.when(fwd, F.col("doc_a")).otherwise(F.col("doc_b")).alias("u"),
-        F.when(fwd, F.col("doc_b")).otherwise(F.col("doc_a")).alias("v"),
-    ).localCheckpoint(eager=False)
+    f = materialize(
+        keyed.select(
+            F.when(fwd, F.col("doc_a")).otherwise(F.col("doc_b")).alias("u"),
+            F.when(fwd, F.col("doc_b")).otherwise(F.col("doc_a")).alias("v"),
+        )
+    )
     f1 = f.select(F.col("u"), F.col("v").alias("v1"))
     f2 = f.select(F.col("u"), F.col("v").alias("v2"))
     wedges = f1.join(f2, "u").where(F.col("v1") != F.col("v2"))
@@ -1035,8 +1037,6 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged.
 
     (No reference analog — SURVEY §2B north-star dedup suite.)"""
-    from ..plans.state import _materialize
-
     aug = augmented_docs(spark, sf_dir)
     # Materialize the ARRAY frame, then explode the stored column: the
     # barrier serves tok's three consumers (rarity ranking + both
@@ -1045,7 +1045,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a pushed-down Filter on sessions where tune() hasn't excluded the
     # rule (see session.py).  _shingles5 is array_distinct, so
     # size(sh) == the oracle's per-doc COUNT(*).
-    docs = _materialize(
+    docs = materialize(
         aug.select(
             "doc_id", _shingles5(F.split(F.col("text"), " ")).alias("sh")
         ).select("doc_id", F.size("sh").alias("sz"), "sh")
@@ -1072,7 +1072,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive chain: 2 exchanges + 2 sorts on the full token table.
     # Candidate generation only needs a COMPLETE candidate set (exact
     # verification filters below), so the barrier cannot change results.
-    prefix = _materialize(
+    prefix = materialize(
         t2.where(
             F.col("rn")
             <= F.col("sz") - F.expr(f"({PFJ_TAU_MILLI} * sz + 999) div 1000") + 1
@@ -1261,15 +1261,13 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     +100000/+200000 variants; verdicts distinguish true dups from bloom
     false positives, and the gate pins the exact FP set (the sketch is
     bit-identical in both engines)."""
-    from ..plans.state import _materialize
-
     aug = augmented_docs(spark, sf_dir)
     key = F.md5("text")
     # r12: hist feeds BOTH the bloom build and the exact-membership
     # `seen` side; un-materialized, the scan + md5 + distinct exchange
     # ran twice (the self-referencing subtree is re-aliased, no reuse).
     # The checkpoint is tiny (one 32-char key per distinct history doc).
-    hist = _materialize(
+    hist = materialize(
         aug.where(F.col("doc_id") < 100000).select(key.alias("k")).distinct()
     )
     inc = aug.where(F.col("doc_id") >= 100000).select("doc_id", key.alias("k"))

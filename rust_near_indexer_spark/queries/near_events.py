@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import canonical, schemas
-from ..caching import SessionCache
+from ..caching import SessionCache, materialize, materialize_observed
 from ..plans.pipeline import run_bronze
 from ..session import tune
 from . import register
@@ -55,6 +55,7 @@ def load_assets(spark: SparkSession) -> DataFrame:
 
 # One bronze run feeds every query below; persisted per (session, mode) so
 # the driver's sequential query loop doesn't recompute the state fixpoint.
+# clear_caches() unpersists the tables and release()s the DAG's own persists.
 _CACHE = SessionCache("near_events.bronze")
 
 
@@ -68,7 +69,8 @@ def bronze_tables(
             block_end=block_end,
             events_only=events_only,
         )
-        return {k: v.persist() for k, v in tables.items()}
+        tables.update({k: v.persist() for k, v in tables.items()})
+        return tables
 
     return _CACHE.get_or_build(spark, (block_end, events_only), build)
 
@@ -311,8 +313,6 @@ def receipt_dag_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the frontier.  The fixture's ``eo_`` outcome-id prefix is
     stripped because in the reference an outcome's id IS its receipt/tx
     id (receipts_and_outcomes.rs) — the prefix is fixture cosmetics."""
-    from ..plans.state import _materialize
-
     t = bronze_tables(spark)
     node = F.regexp_replace(F.col("execution_outcome_id"), "^eo_", "")
     oc = t["execution_outcomes"]
@@ -320,23 +320,24 @@ def receipt_dag_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
         node.alias("parent"), F.explode("receipt_ids").alias("child")
     ).persist()
     tx = t["transactions"].select(F.col("transaction_hash").alias("node"))
-    # each level is eagerly materialized (same lineage-truncation rule as
-    # the state fixpoint, plans/state.py) so the emptiness probe and the
-    # final union never recompute the iteration chain
-    frontier = _materialize(
+    # each level is eagerly materialized (caching.materialize) so the
+    # final union never recomputes the iteration chain; the level's row
+    # count rides the same job and ends the walk at the first empty level
+    frontier = materialize(
         oc.select(node.alias("node"))
         .join(tx, "node", "left_semi")
         .select("node", F.lit(0).cast("long").alias("depth"))
     )
     levels = [frontier]
     for depth in range(1, 21):
-        frontier = _materialize(
+        frontier, seen = materialize_observed(
             frontier.join(edges, frontier["node"] == edges["parent"]).select(
                 F.col("child").alias("node"),
                 F.lit(depth).cast("long").alias("depth"),
-            )
+            ),
+            F.count(F.lit(1)).alias("n"),
         )
-        if frontier.isEmpty():
+        if not seen["n"]:
             break
         levels.append(frontier)
     edges.unpersist()
@@ -398,17 +399,15 @@ def receipt_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per iteration one shuffle keyed by child for the
     contribution aggregate plus one spine join to keep rank rows for
     every node (dangling included); each iteration is eagerly
-    materialized (plans/state.py lineage rule) so iteration k never
-    replays 0..k-1.  At cluster scale edges would be hash-partitioned by
+    materialized (caching.materialize) so iteration k never replays
+    0..k-1.  At cluster scale edges would be hash-partitioned by
     parent once and reused across all 10 rounds."""
-    from ..plans.state import _materialize
-
     oc = bronze_tables(spark)["execution_outcomes"]
     node = F.regexp_replace(F.col("execution_outcome_id"), "^eo_", "")
     edges = oc.select(node.alias("parent"), F.explode("receipt_ids").alias("child"))
     deg = edges.groupBy("parent").agg(F.count("*").alias("outdeg"))
-    edges_deg = _materialize(edges.join(deg, "parent"))
-    nodes = _materialize(
+    edges_deg = materialize(edges.join(deg, "parent"))
+    nodes = materialize(
         edges.select(F.col("parent").alias("node"))
         .unionByName(edges.select(F.col("child").alias("node")))
         .distinct()
@@ -444,7 +443,7 @@ def receipt_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # final round (k = PR_ITERS-1, PR_ITERS even) materialized so
         # the caller's action never replays the loop.
         if k % 2 == 1:
-            pr = _materialize(pr)
+            pr = materialize(pr)
     return pr.select("node", F.col("r").alias("rank_milli")).orderBy(
         F.desc("rank_milli"), "node"
     )

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..caching import materialize
 from ..tables import load, spread
 from . import register
 from .text import _bigram_terms
@@ -125,8 +126,6 @@ _FRACTION_PROBE_CTE = f"SELECT doc_id FROM documents WHERE doc_id % {QUERY_MOD} 
 def _bm25_plan(
     spark: SparkSession, sf_dir: str, fixed_probes: int | None
 ) -> DataFrame:
-    from ..plans.state import _materialize
-
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
     w = F.split(F.col("text"), " ")
     toks = d.select(
@@ -135,7 +134,7 @@ def _bm25_plan(
     # tf feeds three consumers (postings, df, probe terms): materialize
     # the explode+aggregate once instead of re-running it per branch
     # (the un-materialized plan benched 3x slower at sf0.1)
-    tf = _materialize(toks.groupBy("doc_id", "dl", "term").agg(F.count("*").alias("tf")))
+    tf = materialize(toks.groupBy("doc_id", "dl", "term").agg(F.count("*").alias("tf")))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     # stats and probe ids read the RAW scan, not the spread() frame: the
     # r12 before-plan showed spread's repartition exchange shuffling the
@@ -341,13 +340,11 @@ def phrase_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard positional-intersection plan every search engine runs, and
     the join inputs stay tiny precisely because the filter is pushed to
     the scan (plan-pinned)."""
-    from ..plans.state import _materialize
-
     d = load(spark, sf_dir, "documents")
     # materialized once: the three positional branches would otherwise
     # each re-scan + re-explode the corpus (the t0/t1/t2 consumers make
     # Catalyst re-derive the filtered postings per branch)
-    tok = _materialize(
+    tok = materialize(
         d.select(
             "doc_id",
             F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "term"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..caching import materialize
 from ..canonical import cents
 from ..operators.temporal import asof_join, interval_point_join
 from ..tables import load
@@ -199,8 +200,6 @@ def event_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-cent sums are decomposable, so re-aggregation is exact.
     The oracle computes all three tiers directly from raw — the gate
     therefore proves the rollup identity, not just the arithmetic."""
-    from ..plans.state import _materialize
-
     ev = load(spark, sf_dir, "events").select(
         F.expr("ts_ns div 1000").alias("ts_us"),
         "event_type",
@@ -213,7 +212,7 @@ def event_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # THREE times (once per tier).  The checkpoint makes the physical
     # plan match the docstring: one raw scan, hour and day re-aggregate
     # minute-tier rows (bucket-count sized, not event-count sized).
-    minute = _materialize(minute_tier(ev)).withColumn("resolution", F.lit("1m"))
+    minute = materialize(minute_tier(ev)).withColumn("resolution", F.lit("1m"))
     hour = coarsen(minute, US_PER_HOUR).withColumn("resolution", F.lit("1h"))
     day = coarsen(hour, US_PER_DAY).withColumn("resolution", F.lit("1d"))
     cols = ["resolution", "bucket_start_us", "event_type", "n_events", "value_cents"]

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..caching import materialize
 from ..canonical import duck_fingerprint, duck_hash60, fingerprint
 from ..tables import load, spread
 from . import register
@@ -1076,15 +1077,13 @@ def term_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     for terms the df band admits (left-semi prune before any
     collect_list), so no hot term ever materializes an unbounded list —
     the classic inverted-index skew killer."""
-    from ..plans.state import _materialize
-
     d = spread(load(spark, sf_dir, "documents"), "doc_id")
     w = F.split(F.col("text"), " ")
     # materialized once (r12): both passes below consume t, and without
     # the barrier Catalyst re-ran the corpus scan + bigram explode +
     # distinct exchange per branch (two full tokenizations in the
     # before-plan; guide §5 caching rule — reused AND expensive)
-    t = _materialize(
+    t = materialize(
         d.select("doc_id", F.explode(_bigram_terms(w)).alias("term")).distinct()
     )
     # pass 1: df per term — map-side combinable, so a corpus-wide stop

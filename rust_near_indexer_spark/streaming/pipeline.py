@@ -39,6 +39,7 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +51,8 @@ from ..plans.pipeline import run_bronze
 from ..plans.state import DEFAULT_TTL_BLOCKS
 from ..tracing import TRACER
 
+log = logging.getLogger(__name__)
+
 _STATE_COLS = ("receipt_id", "tx_hash", "tier", "write_block")
 
 
@@ -60,11 +63,13 @@ def _load_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
 
 def _save_state(df: DataFrame, state_dir: str) -> None:
     # a new generation swapped in atomically: a write that fails leaves
-    # the previous generation, the one this batch read, as the state
+    # the previous generation, the one this batch read, as the state.
+    # distinct: a replayed block (ingest --force, an overlapping range)
+    # re-derives mappings the carried state already holds
     publish_artifact(
         os.path.join(state_dir, "mappings"),
         None,
-        lambda tmp: df.select(*_STATE_COLS).write.parquet(tmp),
+        lambda tmp: df.select(*_STATE_COLS).distinct().write.parquet(tmp),
     )
 
 
@@ -93,14 +98,15 @@ def process_batch(
         # One JSON parse per batch: blocks feeds both flattens (each read
         # by several consumers) and the max-height agg.
         blocks = blocks.persist()
-        tables = run_bronze(
-            blocks,
-            accounts,
-            ttl_blocks,
-            events_only=events_only,
-            carried=_load_state(blocks.sparkSession, state_dir),
-        )
+        tables = None
         try:
+            tables = run_bronze(
+                blocks,
+                accounts,
+                ttl_blocks,
+                events_only=events_only,
+                carried=_load_state(blocks.sparkSession, state_dir),
+            )
             sinks.append_tables(tables, out_dir, batch_id, with_silver)
             # TTL prune: a mapping written at W is unreadable once every
             # future reader height exceeds W + ttl; batches arrive in
@@ -119,7 +125,8 @@ def process_batch(
                     state_dir,
                 )
         finally:
-            tables.release()
+            if tables is not None:
+                tables.release()
             blocks.unpersist()
         sp.attributes["n_blocks"] = n
         return n
@@ -195,7 +202,8 @@ def run_streaming(
                     # str(dict) — repr, not JSON — hence literal_eval
                     eo = ast.literal_eval(eo)
                 return int(eo.get("next", -1)) >= tip
-            except Exception:
+            except Exception as e:
+                log.warning("run_streaming: no end offset in stream progress: %r", e)
                 return False
 
         while query.isActive and not _tip_reached():

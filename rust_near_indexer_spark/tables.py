@@ -90,7 +90,9 @@ def _estimated_splits(df: DataFrame) -> int:
     try:
         files = df.inputFiles()
     except Exception:
-        return 0  # non-file source (in-memory fixture): treat as narrow
+        # expected, not a fault: a non-file source (in-memory fixture)
+        # has no input files, so treat it as narrow
+        return 0
     if not files:
         return 0
     raw = df.sparkSession.conf.get(

@@ -32,6 +32,7 @@ unconfigured.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import secrets
 import threading
@@ -39,6 +40,8 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable, Optional
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SERVICE = "rust-near-indexer-spark"
 
@@ -212,8 +215,8 @@ class Tracer:
                     batch, self._local.finished = self._local.finished, []
                     try:
                         self.exporter.export(batch, self.service)
-                    except Exception:
-                        pass  # tracing must never fail the pipeline
+                    except Exception:  # tracing must never fail the pipeline
+                        log.warning("tracing: %d spans not exported", len(batch), exc_info=True)
             elif not stack:
                 self._local.finished.clear()
 

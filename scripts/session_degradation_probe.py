@@ -4,7 +4,7 @@
 Observation: in the full 156-query bench session, late-running queries
 measure 2-7x their fresh-session cost (embedding_pca_top_component:
 10.9s in-bench vs 1.6s fresh).  Hypothesis: eager localCheckpoint
-blocks (plans/state._materialize and friends) accumulate in the block
+blocks (caching.materialize) accumulate in the block
 manager because ContextCleaner only releases them on a driver JVM GC,
 which an 8g heap rarely triggers; storage fills, unified memory
 contention + eviction slow every subsequent stage.

@@ -129,3 +129,40 @@ def test_random_fixture_differential(spark, seed):
             cols, [tuple(d.get(c) for c in cols) for d in sim[name]]
         )
         assert s_rows == o_rows, f"{name} mismatch at seed {seed}"
+
+
+def test_clear_caches_releases_bronze_intermediates(spark):
+    """The bronze query cache also owns what run_bronze persisted for it
+    (flat outcomes, readers, resolved rows): after clear_caches() Spark's
+    cache manager holds nothing."""
+    from rust_near_indexer_spark import caching
+
+    caching.clear_caches()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert bronze_tables(spark)["transactions"].count() > 0
+    assert not cache.isEmpty()
+    caching.clear_caches()
+    assert cache.isEmpty()
+
+
+def test_fixpoint_stopped_at_max_depth_is_logged(spark, caplog):
+    """A receipt chain deeper than max_depth keeps its first max_depth
+    levels and the cut is logged, not silent."""
+    from rust_near_indexer_spark.plans.state import resolve_mappings
+
+    seeds = spark.createDataFrame(
+        [("r0", "tx", "main", 0)], "receipt_id string, tx_hash string, tier string, write_block long"
+    )
+    edges = spark.createDataFrame(
+        [(f"r{i}", f"r{i + 1}", i, "main") for i in range(4)],
+        "parent_receipt_id string, child_receipt_id string, edge_block long, child_tier string",
+    )
+    with caplog.at_level("WARNING", logger="rust_near_indexer_spark.plans.state"):
+        got = resolve_mappings(seeds, edges, ttl_blocks=10, max_depth=2)
+        assert sorted(r["receipt_id"] for r in got.collect()) == ["r0", "r1", "r2"]
+    assert "max_depth=2" in caplog.text
+    caplog.clear()
+    with caplog.at_level("WARNING", logger="rust_near_indexer_spark.plans.state"):
+        assert resolve_mappings(seeds, edges, ttl_blocks=10).count() == 5
+    assert "max_depth" not in caplog.text

@@ -103,12 +103,14 @@ def test_streaming_restart_is_noop(spark, chunked_blocks_dir, tmp_path):
 
 
 @pytest.mark.parametrize("entry", ["ingest_bronze", "process_batch"])
-def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, entry):
+def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, monkeypatch, entry):
     """Every frame the bronze DAG, the silver fan-out or a micro-batch
-    persists is released when the call returns: Spark's cache manager is
-    as empty after a batch ingest, or after several micro-batches, as it
-    was before."""
+    persists is released when the call returns, or raises: Spark's cache
+    manager is as empty after a batch ingest, or after several
+    micro-batches, as it was before — and again after one that fails
+    inside the state fixpoint."""
     from rust_near_indexer_spark import caching
+    from rust_near_indexer_spark.plans import state
     from rust_near_indexer_spark.streaming.pipeline import process_batch
 
     caching.clear_caches()
@@ -132,3 +134,41 @@ def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, entry):
                 with_silver=True,
             )
     assert cache.isEmpty()
+
+    child_edges = state.child_edges
+    monkeypatch.setattr(
+        state,
+        "child_edges",
+        lambda *a: child_edges(*a).withColumn(
+            "child_receipt_id", F.raise_error(F.lit("injected edge failure"))
+        ),
+    )
+    with pytest.raises(Exception, match="injected edge failure"):
+        if entry == "ingest_bronze":
+            sinks.ingest_bronze(spark, fixtures.blocks_df(spark, blocks), out, 2)
+        else:
+            process_batch(
+                fixtures.blocks_df(spark, blocks[40:]), 3, out, str(tmp_path / "state")
+            )
+    assert cache.isEmpty()
+
+
+def test_replayed_blocks_leave_no_duplicate_state(spark, tmp_path):
+    """Re-delivering blocks still inside the TTL window (ingest --force,
+    an overlapping range) re-derives mappings the carried state holds;
+    the saved state keeps each mapping once."""
+    from rust_near_indexer_spark.streaming.pipeline import process_batch
+
+    blocks, _ = fixtures.generate(n_blocks=100, ttl_blocks=TTL_BLOCKS)
+    state_dir = str(tmp_path / "state")
+    for i, chunk in enumerate([blocks, blocks[90:], blocks[90:]]):
+        process_batch(
+            fixtures.blocks_df(spark, chunk),
+            i,
+            str(tmp_path / "out"),
+            state_dir,
+            ttl_blocks=TTL_BLOCKS,
+            events_only=True,
+        )
+    saved = spark.read.parquet(os.path.join(state_dir, "mappings"))
+    assert saved.count() == saved.distinct().count() > 0
