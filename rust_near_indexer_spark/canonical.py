@@ -65,8 +65,3 @@ def duck_hash60(expr: str) -> str:
 def duck_fingerprint(*exprs: str) -> str:
     joined = ", ".join(exprs)
     return f"bit_xor({duck_hash60(f'concat_ws(chr(124), {joined})')})"
-
-
-def spark_sql_hash60(expr: str) -> str:
-    """Same as hash60 but as a Spark SQL text fragment."""
-    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"

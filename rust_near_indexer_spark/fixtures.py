@@ -449,7 +449,3 @@ def generate(
 
 def blocks_df(spark: SparkSession, blocks: list[dict]) -> DataFrame:
     return spark.createDataFrame(blocks, schemas.BLOCK)
-
-
-def assets_df(spark: SparkSession, assets: list[dict]) -> DataFrame:
-    return spark.createDataFrame(assets, schemas.DEFUSE_ASSETS)

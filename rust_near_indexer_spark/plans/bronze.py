@@ -178,7 +178,8 @@ def tx_outcome_rows(flat_txs: DataFrame, accounts: tuple) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Receipt + outcome rows (R14/R15), given resolved parent mappings.
-# `resolved` carries (receipt_id, read_block, tx_hash) from state.resolve.
+# `resolved` carries (receipt_id, read_block, tx_hash, event_readable)
+# from state.resolve.
 # ---------------------------------------------------------------------------
 
 
@@ -257,9 +258,10 @@ def event_rows(
     6. parent-tx resolution join (events path: dropped when unresolved,
        events.rs:206-213).
 
-    ``resolved_events`` must come from state.resolve(..., events_path=True)
-    (main tier always readable; potential tier only for receipts whose
-    receiver/predecessor is of interest — events.rs:143-213).
+    ``resolved_events`` must be state.resolve's rows where
+    ``event_readable`` (main tier always readable; potential tier only for
+    receipts whose receiver/predecessor is of interest —
+    events.rs:143-213).
 
     execution_status goes through canonical_status (R21,
     events.rs:235-246): raw ExecutionStatusView variant names are mapped

@@ -82,26 +82,24 @@ def run_bronze(
         flat_outcomes.unpersist()
         raise
 
-    # readers feeds BOTH resolve passes and resolved_rows feeds BOTH the
-    # outcome and receipt projections; without a persist every consumer
-    # action replays the distinct/join/agg chain (r12 — measured via the
-    # bronze blocks/s bench, which counts all four tables; same pattern
-    # as the flat_outcomes persist above)
-    readers = state.readers_from_outcomes(flat_outcomes).persist()
-    resolved_rows = state.resolve(
-        readers, mappings, accounts, ttl_blocks, events_path=False
+    # resolved answers both read rules and feeds the outcome, receipt and
+    # event projections; without a persist every consumer action replays
+    # the join/agg chain (r12 — measured via the bronze blocks/s bench,
+    # which counts all four tables; same pattern as the flat_outcomes
+    # persist above)
+    resolved = state.resolve(
+        state.readers_from_outcomes(flat_outcomes), mappings, accounts, ttl_blocks
     ).persist()
-    resolved_events = state.resolve(readers, mappings, accounts, ttl_blocks, events_path=True)
 
-    events = bronze.event_rows(flat_outcomes, resolved_events, accounts)
+    events = bronze.event_rows(flat_outcomes, resolved.where("event_readable"), accounts)
     out: dict[str, DataFrame] = {"events": events}
     if not events_only:
         outcomes_rows, receipt_rows = bronze.outcome_and_receipt_rows(
-            flat_outcomes, resolved_rows, accounts
+            flat_outcomes, resolved, accounts
         )
         out["transactions"] = bronze.transaction_rows(flat_txs, accounts)
         out["execution_outcomes"] = outcomes_rows.unionByName(
             bronze.tx_outcome_rows(flat_txs, accounts)
         )
         out["receipts"] = receipt_rows
-    return BronzeTables(out, mappings, [flat_outcomes, readers, resolved_rows])
+    return BronzeTables(out, mappings, [flat_outcomes, resolved])

@@ -23,7 +23,8 @@ Writes modeled (all mirror exact reference call sites):
   accounts of interest (set_many_receipts, :165-171), potential otherwise
   (set_many_potentials, :186-191, :238-251).
 
-Read rules:
+Read rules, both answered by one join and one aggregation in
+``resolve`` (the reference's two branches on one cache lookup):
 - outcomes/receipts path: main, then potential unconditionally
   (find_parent_tx_hash, :258-328);
 - events path: main, then potential ONLY if receiver/predecessor of
@@ -163,33 +164,34 @@ def resolve(
     ttl_blocks: int = DEFAULT_TTL_BLOCKS,
     events_path: bool = False,
 ) -> DataFrame:
-    """Resolve parent tx hashes for reader rows.
+    """Resolve parent tx hashes for reader rows under both read rules.
 
     ``readers`` needs (receipt_id, read_block, receiver_id,
-    predecessor_id).  Returns (receipt_id, read_block, tx_hash) — one row
-    per reader that resolves; unresolved readers are absent (the caller's
-    inner join reproduces drop-on-miss).
+    predecessor_id); duplicate readers collapse.  Returns (receipt_id,
+    read_block, tx_hash, event_readable) — one row per reader that
+    resolves under the outcome/receipt rule; unresolved readers are
+    absent (the caller's inner join reproduces drop-on-miss).
+    ``event_readable`` says whether the reader also resolves under the
+    stricter event rule (potential tier only when receiver/predecessor
+    is of interest), and then to the same tx_hash: the pick below ranks
+    the main tier first, so when any main mapping exists the overall
+    winner is the main winner, and every reader variant of a
+    (receipt_id, read_block) joins the same mapping rows, so the event
+    rule changes only whether a reader resolves, never which tx.
 
-    events_path=True applies the stricter event read rule: the potential
-    tier is consulted only when receiver/predecessor is of interest.
+    events_path=True keeps only the event-readable rows.
     """
-    m = mappings
-    joined = readers.join(m, "receipt_id", "inner").where(
+    joined = readers.join(mappings, "receipt_id", "inner").where(
         (F.col("read_block") >= F.col("write_block"))
         & (F.col("read_block") <= F.col("write_block") + ttl_blocks)
     )
-    if events_path:
-        joined = joined.where(
-            (F.col("tier") == MAIN)
-            | of_interest(accounts, "receiver_id", "predecessor_id")
-        )
     # One mapping per reader.  Tie-break mirrors the reference's read
     # order + Redis overwrite semantics: main tier consulted first
     # (find_parent_tx_hash, receipts_and_outcomes.rs:258-328), and within
     # a tier a later SETEX wins (last-write-wins) → greatest write_block;
     # tx_hash as the final total order makes the pick deterministic even
     # for same-tier same-block duplicates.
-    return joined.groupBy("receipt_id", "read_block").agg(
+    resolved = joined.groupBy("receipt_id", "read_block").agg(
         F.max_by(
             "tx_hash",
             F.struct(
@@ -197,8 +199,12 @@ def resolve(
                 F.col("write_block").alias("write_block"),
                 F.col("tx_hash").alias("tx_hash"),
             ),
-        ).alias("tx_hash")
+        ).alias("tx_hash"),
+        F.max(
+            (F.col("tier") == MAIN) | of_interest(accounts, "receiver_id", "predecessor_id")
+        ).alias("event_readable"),
     )
+    return resolved.where("event_readable") if events_path else resolved
 
 
 def readers_from_outcomes(flat_outcomes: DataFrame) -> DataFrame:
@@ -207,4 +213,4 @@ def readers_from_outcomes(flat_outcomes: DataFrame) -> DataFrame:
         F.col("block_height").alias("read_block"),
         F.col("receipt.receiver_id").alias("receiver_id"),
         F.col("receipt.predecessor_id").alias("predecessor_id"),
-    ).distinct()
+    )

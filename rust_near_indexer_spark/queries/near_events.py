@@ -323,24 +323,26 @@ def receipt_dag_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each level is eagerly materialized (caching.materialize) so the
     # final union never recomputes the iteration chain; the level's row
     # count rides the same job and ends the walk at the first empty level
-    frontier = materialize(
-        oc.select(node.alias("node"))
-        .join(tx, "node", "left_semi")
-        .select("node", F.lit(0).cast("long").alias("depth"))
-    )
-    levels = [frontier]
-    for depth in range(1, 21):
-        frontier, seen = materialize_observed(
-            frontier.join(edges, frontier["node"] == edges["parent"]).select(
-                F.col("child").alias("node"),
-                F.lit(depth).cast("long").alias("depth"),
-            ),
-            F.count(F.lit(1)).alias("n"),
+    try:
+        frontier = materialize(
+            oc.select(node.alias("node"))
+            .join(tx, "node", "left_semi")
+            .select("node", F.lit(0).cast("long").alias("depth"))
         )
-        if not seen["n"]:
-            break
-        levels.append(frontier)
-    edges.unpersist()
+        levels = [frontier]
+        for depth in range(1, 21):
+            frontier, seen = materialize_observed(
+                frontier.join(edges, frontier["node"] == edges["parent"]).select(
+                    F.col("child").alias("node"),
+                    F.lit(depth).cast("long").alias("depth"),
+                ),
+                F.count(F.lit(1)).alias("n"),
+            )
+            if not seen["n"]:
+                break
+            levels.append(frontier)
+    finally:
+        edges.unpersist()
     walk = levels[0]
     for lvl in levels[1:]:
         walk = walk.unionByName(lvl)

@@ -63,14 +63,6 @@ RUNTIME_CONFS: dict[str, str] = {
     ),
     # Arrow-batched pandas exchange: the only sanctioned Python boundary.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Runtime-settable: the driver's vanilla session defaults to 200
-    # shuffle partitions, far too many for the local core count (AQE
-    # coalesces post-shuffle, but the initial task count still costs).
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    # Also applied at tune() time for driver-held sessions: the codegen
-    # class cache is sized lazily at first use, so setting it before the
-    # first query still takes effect (see BUILD_CONFS note).
-    "spark.sql.codegen.cache.maxEntries": "2000",
     # InferFiltersFromGenerate rewrites explode(f(x)) into
     # Filter(size(f(x)) > 0 AND isnotnull(f(x))) + Generate — the whole
     # generator input expression is DUPLICATED into the filter, which
@@ -97,7 +89,6 @@ BUILD_CONFS: dict[str, str] = {
     # Nested-schema pruning for the deeply nested block messages.
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
 }
 
 
@@ -234,6 +225,10 @@ def tune(spark: SparkSession) -> SparkSession:
     thresh = _broadcast_threshold_bytes(spark)
     confs = {
         **RUNTIME_CONFS,
+        # a vanilla session defaults to 200 shuffle partitions, far too
+        # many for the core count (AQE coalesces post-shuffle, but the
+        # initial task count still costs): one per core instead
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": str(thresh),
     }
@@ -264,7 +259,6 @@ def get_spark(app_name: str = "rust-near-indexer-spark", cpus: int | None = None
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
     )
     for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():

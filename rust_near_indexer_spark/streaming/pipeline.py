@@ -93,13 +93,19 @@ def process_batch(
     tracing.init_tracing configured an exporter."""
     with TRACER.span("handle_block_batch", batch_id=batch_id) as sp:
         sp.attributes["n_blocks"] = 0
-        if blocks.isEmpty():
-            return 0
         # One JSON parse per batch: blocks feeds both flattens (each read
-        # by several consumers) and the max-height agg.
+        # by several consumers).  The max-height/count job fills the cache,
+        # answers the empty-trigger check and feeds the TTL prune and the
+        # R22 throughput/height metrics.
         blocks = blocks.persist()
         tables = None
         try:
+            agg = blocks.agg(
+                F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
+            ).collect()[0]
+            max_h, n = agg["h"], int(agg["n"])
+            if not n:
+                return 0
             tables = run_bronze(
                 blocks,
                 accounts,
@@ -108,17 +114,12 @@ def process_batch(
                 carried=_load_state(blocks.sparkSession, state_dir),
             )
             sinks.append_tables(tables, out_dir, batch_id, with_silver)
+            metrics.BLOCK_PROCESSED_TOTAL.inc(n)
+            metrics.LATEST_BLOCK_HEIGHT.set(max_h)
             # TTL prune: a mapping written at W is unreadable once every
             # future reader height exceeds W + ttl; batches arrive in
             # height order, so pruning against the batch's max height is
-            # safe.  The same (only) collect also feeds the R22
-            # throughput/height metrics.
-            agg = blocks.agg(
-                F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
-            ).collect()[0]
-            max_h, n = agg["h"], int(agg["n"])
-            metrics.BLOCK_PROCESSED_TOTAL.inc(n)
-            metrics.LATEST_BLOCK_HEIGHT.set(max_h)
+            # safe.
             with TRACER.span("save_state", max_block_height=int(max_h)):
                 _save_state(
                     tables.mappings.where(F.col("write_block") >= max_h - ttl_blocks),

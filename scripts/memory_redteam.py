@@ -77,9 +77,8 @@ DEFAULT_QUERIES = [
 MODES = {
     # (driver_mem, local[n], shuffle_partitions): 4 fat partitions on a
     # 2g heap is ~64x the per-partition bytes the tuned session sees.
-    # SPARK_GRAFT_CPUS is set to the PARTITION count before any package
-    # import: tune() re-applies shuffle.partitions from that env on
-    # every load(), so setting the conf after the fact would be undone.
+    # shuffle.partitions is set after get_spark: tune() applies its
+    # confs once per application, so later load() calls keep it.
     "constrained": ("2g", 8, "4"),
     "baseline": ("8g", 16, "32"),
 }
@@ -88,13 +87,13 @@ MODES = {
 def run_child(mode: str, out_path: str, sf_dir: str, queries: list[str]) -> int:
     mem, cpus, parts = MODES[mode]
     os.environ["SPARK_DRIVER_MEMORY"] = mem
-    os.environ["SPARK_GRAFT_CPUS"] = parts  # pins shuffle.partitions
 
     from rust_near_indexer_spark.queries import load_registry
     from rust_near_indexer_spark.session import get_spark
     from tests.oracle_harness import value_hash
 
     spark = get_spark(f"memredteam-{mode}", cpus=cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
     registry = load_registry()
     results: dict[str, dict] = {}
     for name in queries:

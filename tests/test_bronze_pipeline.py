@@ -9,6 +9,7 @@ multi-shard blocks, and pre-cutoff timestamps.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from rust_near_indexer_spark import fixtures, oracle_sim, schemas
 from rust_near_indexer_spark.queries import load_registry
@@ -133,7 +134,7 @@ def test_random_fixture_differential(spark, seed):
 
 def test_clear_caches_releases_bronze_intermediates(spark):
     """The bronze query cache also owns what run_bronze persisted for it
-    (flat outcomes, readers, resolved rows): after clear_caches() Spark's
+    (flat outcomes and the resolved rows): after clear_caches() Spark's
     cache manager holds nothing."""
     from rust_near_indexer_spark import caching
 
@@ -143,6 +144,65 @@ def test_clear_caches_releases_bronze_intermediates(spark):
     assert bronze_tables(spark)["transactions"].count() > 0
     assert not cache.isEmpty()
     caching.clear_caches()
+    assert cache.isEmpty()
+
+
+def test_one_resolve_answers_both_read_rules(spark):
+    """The event rule applied before the pick (potential mappings only for
+    readers of interest) gives exactly resolve's event-readable rows, and
+    on the fixture it still excludes readers the outcome rule resolves."""
+    from rust_near_indexer_spark.plans import bronze, state
+    from rust_near_indexer_spark.queries.near_events import load_blocks
+
+    acc = schemas.ACCOUNTS_OF_INTEREST
+    blocks = load_blocks(spark)
+    flat = bronze.flatten_outcomes(blocks)
+    mappings = state.resolve_mappings(
+        state.seed_mappings(bronze.flatten_transactions(blocks), acc),
+        state.child_edges(flat, acc),
+        TTL_BLOCKS,
+    )
+    readers = state.readers_from_outcomes(flat)
+    resolved = state.resolve(readers, mappings, acc, TTL_BLOCKS)
+    keep = bronze.of_interest(acc, "receiver_id", "predecessor_id")
+    cols = ["receipt_id", "read_block", "tx_hash"]
+    rule_first = state.resolve(readers.where(keep), mappings, acc, TTL_BLOCKS).unionByName(
+        state.resolve(
+            readers.where(~keep), mappings.where(F.col("tier") == state.MAIN), acc, TTL_BLOCKS
+        )
+    ).select(cols)
+    events = state.resolve(readers, mappings, acc, TTL_BLOCKS, events_path=True).select(cols)
+    assert sorted(events.collect()) == sorted(rule_first.collect())
+    assert sorted(resolved.where("event_readable").select(cols).collect()) == sorted(
+        events.collect()
+    )
+    assert resolved.where(~F.col("event_readable")).count() > 0
+
+
+def test_receipt_dag_depths_releases_edges_on_failure(spark, monkeypatch):
+    """A failure inside the depth walk still unpersists its edge list:
+    Spark's cache manager is as empty afterwards as before."""
+    from rust_near_indexer_spark import caching
+    from rust_near_indexer_spark.queries import near_events
+
+    caching.clear_caches()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    tables = {
+        "execution_outcomes": spark.createDataFrame(
+            [("eo_tx0", ["r1"]), ("eo_r1", [])],
+            "execution_outcome_id string, receipt_ids array<string>",
+        ),
+        "transactions": spark.createDataFrame([("tx0",)], "transaction_hash string"),
+    }
+    monkeypatch.setattr(near_events, "bronze_tables", lambda spark: tables)
+
+    def fail(*a, **k):
+        raise RuntimeError("injected level failure")
+
+    monkeypatch.setattr(near_events, "materialize_observed", fail)
+    with pytest.raises(RuntimeError, match="injected level failure"):
+        near_events.receipt_dag_depths(spark, "")
     assert cache.isEmpty()
 
 

@@ -1,0 +1,50 @@
+"""Every top-level def of the package is named somewhere else.
+
+A function or class that no package module, entry point (``bench.py``,
+``__spark_entry__.py``, ``scripts/``, ``perfbench/``) or test mentions is
+dead code: nothing can call it, and no test pins what it does.  The scan
+is textual (an identifier anywhere, comments and strings included), so
+it only catches names that appear nowhere at all; it needs no Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import re
+from collections import Counter
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "rust_near_indexer_spark")
+
+
+def _py_files(*paths: str):
+    for path in paths:
+        if path.endswith(".py"):
+            yield path
+            continue
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def test_no_top_level_def_is_unreferenced():
+    corpus = [
+        PKG,
+        *(os.path.join(ROOT, p) for p in ("bench.py", "__spark_entry__.py")),
+        *(os.path.join(ROOT, d) for d in ("scripts", "perfbench", "tests")),
+    ]
+    names: Counter[str] = Counter()
+    for path in _py_files(*corpus):
+        with open(path, encoding="utf-8") as f:
+            names.update(re.findall(r"[A-Za-z_]\w*", f.read()))
+    unreferenced = []
+    for path in _py_files(PKG):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            defines = isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            # the def's own name is its one occurrence
+            if defines and not node.name.startswith("__") and names[node.name] <= 1:
+                unreferenced.append(f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.name}")
+    assert unreferenced == []

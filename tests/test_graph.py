@@ -82,7 +82,7 @@ def test_nonconvergence_raises(spark):
 
 def test_connected_components_under_reliable_checkpoint(spark, tmp_path):
     """The observe-based convergence probe must also report under the
-    reliable-checkpoint branch of _materialize (cluster posture) — a
+    reliable-checkpoint branch of caching.materialize (cluster posture) — a
     non-firing Observation would hang the fixpoint loop."""
     from rust_near_indexer_spark.operators.graph import connected_components
 

@@ -172,3 +172,19 @@ def test_replayed_blocks_leave_no_duplicate_state(spark, tmp_path):
         )
     saved = spark.read.parquet(os.path.join(state_dir, "mappings"))
     assert saved.count() == saved.distinct().count() > 0
+
+
+def test_empty_trigger_writes_nothing(spark, tmp_path):
+    """A trigger with no blocks returns 0, writes neither tables nor
+    state, and leaves nothing in Spark's cache."""
+    from rust_near_indexer_spark import caching, schemas
+    from rust_near_indexer_spark.streaming.pipeline import process_batch
+
+    caching.clear_caches()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    empty = spark.createDataFrame([], schemas.BLOCK)
+    out, state_dir = tmp_path / "out", tmp_path / "state"
+    assert process_batch(empty, 0, str(out), str(state_dir), with_silver=True) == 0
+    assert not out.exists() and not state_dir.exists()
+    assert cache.isEmpty()
