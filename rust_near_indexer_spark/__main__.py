@@ -35,11 +35,23 @@ def cmd_ingest(args) -> int:
     from pyspark.sql import functions as F
 
     from . import schemas, sinks
-    from .session import tune
     from .streaming.pipeline import run_streaming
 
+    # the stream resumes from its checkpoint and reads every block it is
+    # given: a batch-only bound must fail, not be silently ignored
+    batch_only = [
+        flag
+        for flag, given in (
+            ("--start", args.start != 0),
+            ("--end", args.end is not None),
+            ("--force", args.force),
+        )
+        if given
+    ]
+    if args.stream and batch_only:
+        print(f"ingest --stream does not take {', '.join(batch_only)}", file=sys.stderr)
+        return 2
     spark = _spark(args.cpus)
-    tune(spark)
     server = None
     if args.metrics_port is not None:
         from .metrics import start_metrics_server
@@ -197,6 +209,7 @@ def cmd_dedup(args) -> int:
     from pyspark.sql import functions as F
 
     from . import dedup_artifact as da
+    from .artifact_io import load
 
     if args.action in ("build", "append") and not args.docs:
         print("dedup build/append needs --docs <parquet>", file=sys.stderr)
@@ -226,7 +239,7 @@ def cmd_dedup(args) -> int:
         )
         return 0
     # lookup
-    art = da.load_dedup_artifact(spark, args.artifact)
+    art = load(da.KIND, spark, args.artifact)
     hit = art["labels"].where(F.col("node") == args.doc_id).collect()
     if not hit:
         print(f"doc {args.doc_id}: not in any near-dup cluster")
@@ -300,9 +313,9 @@ def cmd_ann(args) -> int:
     # the probe read opens only the files whose list_id range overlaps
     # the probe set — at 100 TB that is the difference between a point
     # query and a full table listing.
-    from .artifact_io import read_pruned
+    from .artifact_io import load, read_pruned
 
-    art = aa.load_ann_artifact(spark, args.artifact)
+    art = load(aa.KIND, spark, args.artifact)
     vec_pruned, v_read, v_total = read_pruned(
         spark,
         os.path.join(args.artifact, "vectors"),

@@ -42,43 +42,33 @@ pipeline), operated like the dedup index (SURVEY.md §1.3 analog).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .artifact_io import (
-    corpus_fingerprint,
-    load_meta,
-    publish_artifact,
-    read_tables,
-    write_clustered,
+from . import artifact_io
+from .queries.similarity import (
+    CENTROID_BASE,
+    N_LIST,
+    PQ_BASE,
+    PQ_KS,
+    PQ_M,
+    PQ_SUB,
+    _bucket,
+    _qvec,
+    ivf_assign,
+    ivf_centroids,
+    pq_codebook_frame,
+    pq_codes_frame,
+    pq_distances,
+    pq_subvectors,
+    quantized_embeddings,
 )
-
-ANN_ARTIFACT_VERSION = 1
-ANN_FILES = 8  # range buckets per big table at test scale; config at 100 TB
-
-TABLES = ("vectors", "centroids", "ivf", "pq_codebook", "pq_codes")
-
-_ENV_DISABLE = "SPARK_GRAFT_ANN_ARTIFACT"  # set to "0" to force cold compute
-_ENV_BASE_DIR = "SPARK_GRAFT_ANN_ARTIFACT_DIR"
+from .tables import load, spread
 
 
 def index_frames(emb: DataFrame) -> dict[str, DataFrame]:
     """Derive all five index tables from a loaded embeddings frame —
-    the cold chain shared by the artifact build and the
-    ``SPARK_GRAFT_ANN_ARTIFACT=0`` fallback (so artifact-read and cold
-    compute are the same values by construction)."""
-    from .queries.similarity import (
-        ivf_assign,
-        ivf_centroids,
-        pq_codebook_frame,
-        pq_codes_frame,
-        pq_distances,
-        pq_subvectors,
-        quantized_embeddings,
-    )
-
+    the cold chain the artifact build publishes."""
     qv = quantized_embeddings(emb)
     cent = ivf_centroids(qv)
     sub = pq_subvectors(qv)
@@ -92,33 +82,6 @@ def index_frames(emb: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def _publish(frames: dict[str, DataFrame], path: str) -> None:
-    def build_into(tmp: str) -> None:
-        write_clustered(
-            frames["vectors"], os.path.join(tmp, "vectors"), ["vec_id"], ANN_FILES
-        )
-        write_clustered(
-            frames["centroids"], os.path.join(tmp, "centroids"), ["list_id"], 1
-        )
-        write_clustered(
-            frames["ivf"],
-            os.path.join(tmp, "ivf"),
-            ["list_id", "vec_id"],
-            ANN_FILES,
-        )
-        write_clustered(
-            frames["pq_codebook"], os.path.join(tmp, "pq_codebook"), ["m", "j"], 1
-        )
-        write_clustered(
-            frames["pq_codes"],
-            os.path.join(tmp, "pq_codes"),
-            ["vec_id", "m"],
-            ANN_FILES,
-        )
-
-    publish_artifact(path, {"version": ANN_ARTIFACT_VERSION}, build_into)
-
-
 def write_ann_artifact(emb: DataFrame, path: str) -> dict:
     """Cold-build the index from a loaded embeddings frame: ONE
     quantization pass over the corpus, one broadcast IVF assignment,
@@ -128,23 +91,15 @@ def write_ann_artifact(emb: DataFrame, path: str) -> dict:
     qv = frames["vectors"].persist()
     frames["vectors"] = qv
     try:
-        _publish(frames, path)
+        artifact_io.publish(KIND, frames, path)
     finally:
         qv.unpersist()
-    art = load_ann_artifact(emb.sparkSession, path)
+    art = artifact_io.load(KIND, emb.sparkSession, path)
     return {
         "n_vectors": art["vectors"].count(),
         "n_lists": art["centroids"].count(),
         "n_codes": art["pq_codes"].count(),
     }
-
-
-def load_ann_artifact(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """Open the index's five tables as DataFrames (plus meta)."""
-    meta = load_meta(path, ANN_ARTIFACT_VERSION, "ANN")
-    out: dict = read_tables(spark, path, TABLES)
-    out["meta"] = meta
-    return out
 
 
 def append_ann_artifact(
@@ -158,19 +113,7 @@ def append_ann_artifact(
     proportional to the batch: new vectors are assigned and encoded
     against the broadcast quantizers; stored rows are unioned through
     untouched."""
-    from .queries.similarity import (
-        CENTROID_BASE,
-        N_LIST,
-        PQ_BASE,
-        PQ_KS,
-        ivf_assign,
-        pq_codes_frame,
-        pq_distances,
-        pq_subvectors,
-        quantized_embeddings,
-    )
-
-    art = load_ann_artifact(spark, path)
+    art = artifact_io.load(KIND, spark, path)
     qv_new = quantized_embeddings(new_emb).persist()
 
     in_donor_range = (
@@ -212,72 +155,45 @@ def append_ann_artifact(
     }
     try:
         stats = {"n_new_vectors": qv_new.count()}
-        _publish(frames, path)
+        artifact_io.publish(KIND, frames, path)
     finally:
         qv_new.unpersist()
     return stats
 
 
 # ---------------------------------------------------------------------------
-# Fingerprint-keyed artifact for the registry's gate corpus.
+# The kind description artifact_io publishes, loads, gates and folds by.
 # ---------------------------------------------------------------------------
 
+_FILES = 8  # range buckets per big table at test scale; a config at 100 TB
 
-def artifact_enabled() -> bool:
-    return os.environ.get(_ENV_DISABLE, "1") != "0"
-
-
-def _default_base_dir(spark: SparkSession) -> str:
-    base = os.environ.get(_ENV_BASE_DIR)
-    if base:
-        return base
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    return os.path.join(wh.removeprefix("file:"), "ann_artifact")
-
-
-def ensure_ann_artifact(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load (building on first use) the index for the gate corpus
-    (``embeddings`` under ``sf_dir``).  The path is keyed by a corpus
-    fingerprint, so a regenerated testdata dir can never serve a stale
-    index.  This is what re-points the ANN consumers at the artifact:
-    within a session the SessionCache still dedupes, but across sessions
-    (a new bench run, a new driver round) the index is read, not
-    recomputed."""
-    from .tables import load, spread
-
-    path = gate_artifact_path(spark, sf_dir)
-    if not gate_artifact_exists(spark, sf_dir):
-        write_ann_artifact(spread(load(spark, sf_dir, "embeddings"), "vec_id"), path)
-    return load_ann_artifact(spark, path)
-
-
-def gate_artifact_path(spark: SparkSession, sf_dir: str) -> str:
-    from .artifact_io import chain_digest
-    from .queries import similarity as _sim
-
-    # staleness key covers the DEFINING SOURCE of the derivation chain
-    # (quantizers, IVF, PQ) plus its constants — editing any of them
-    # invalidates the artifact automatically (ADVICE r08)
-    chain = chain_digest(
-        _sim._qvec,
-        _sim._bucket,
-        _sim.ivf_centroids,
-        _sim.ivf_assign,
-        _sim.pq_subvectors,
-        _sim.pq_codebook_frame,
-        _sim.pq_codes_frame,
-        _sim.pq_distances,
-        _sim.quantized_embeddings,
-        (_sim.N_LIST, _sim.CENTROID_BASE, _sim.PQ_M, _sim.PQ_SUB, _sim.PQ_KS, _sim.PQ_BASE),
-    )
-    return os.path.join(
-        _default_base_dir(spark),
-        f"gate-{corpus_fingerprint(sf_dir, 'embeddings.parquet', ANN_ARTIFACT_VERSION, chain)}",
-    )
-
-
-def gate_artifact_exists(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff the gate-corpus index is already built (a pure stat)."""
-    return os.path.exists(
-        os.path.join(gate_artifact_path(spark, sf_dir), "_meta.json")
-    )
+KIND = artifact_io.ArtifactKind(
+    name="ann",
+    version=1,  # bump when the chain's semantics change
+    tables={
+        "vectors": (("vec_id",), _FILES),
+        "centroids": (("list_id",), 1),
+        "ivf": (("list_id", "vec_id"), _FILES),
+        "pq_codebook": (("m", "j"), 1),
+        "pq_codes": (("vec_id", "m"), _FILES),
+    },
+    corpus_file="embeddings.parquet",
+    # the quantizers, IVF and PQ plus their constants: editing any of
+    # them invalidates the gate artifact
+    chain=(
+        _qvec,
+        _bucket,
+        ivf_centroids,
+        ivf_assign,
+        pq_subvectors,
+        pq_codebook_frame,
+        pq_codes_frame,
+        pq_distances,
+        quantized_embeddings,
+        (N_LIST, CENTROID_BASE, PQ_M, PQ_SUB, PQ_KS, PQ_BASE),
+    ),
+    columns=("vec_id", "embedding", "label"),
+    corpus=lambda spark, sf_dir: spread(load(spark, sf_dir, "embeddings"), "vec_id"),
+    build=write_ann_artifact,
+    append=append_ann_artifact,
+)

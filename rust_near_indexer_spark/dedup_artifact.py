@@ -17,8 +17,8 @@ Layout at ``<path>/``::
 Each table is written ``repartitionByRange`` on its leading id and
 sorted within partitions, so parquet min/max file stats serve point
 lookups ("which cluster is doc 123 in?") with pruned scans, and a
-cluster's rows are co-located.  Writes are build-into-tmp + directory
-rename, so readers never observe a half-written artifact.
+cluster's rows are co-located.  Publish, load and the gate corpus's
+artifact are the shared ``artifact_io`` ones, driven by ``KIND``.
 
 Incremental contract (``append_dedup_artifact``): results are
 bit-identical to a cold rebuild over the full corpus as long as the
@@ -44,12 +44,10 @@ incremental recompute instead of ReplacingMergeTree.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import artifact_io
 from .queries.dedup import (
     MAX_BUCKET_DOCS,
     augmented_docs,
@@ -59,14 +57,6 @@ from .queries.dedup import (
     verify_pair_ids,
     _shingles,
 )
-
-# Bump when the chain's semantics change: stale artifacts must not be
-# reused across incompatible code versions.
-ARTIFACT_VERSION = 1
-ARTIFACT_FILES = 8  # range buckets per table at test scale; config at 100 TB
-
-_ENV_DISABLE = "SPARK_GRAFT_DEDUP_ARTIFACT"  # set to "0" to force cold compute
-_ENV_BASE_DIR = "SPARK_GRAFT_DEDUP_ARTIFACT_DIR"
 
 
 # ---------------------------------------------------------------------------
@@ -97,38 +87,8 @@ def candidate_pair_ids(bands: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Write / load.
+# Cold build.
 # ---------------------------------------------------------------------------
-
-
-def _write_tables(
-    sigs: DataFrame, pairs: DataFrame, labels: DataFrame, path: str
-) -> None:
-    """Publish the three tables atomically under ``path`` via the shared
-    symlink-swap publisher (artifact_io.publish_artifact): readers never
-    observe a missing or half-written artifact, and appends are
-    single-writer by contract (ADVICE r07; see artifact_io docstring)."""
-    from .artifact_io import publish_artifact, write_clustered
-
-    def build_into(tmp: str) -> None:
-        write_clustered(
-            sigs, os.path.join(tmp, "signatures"), ["doc_id"], ARTIFACT_FILES
-        )
-        write_clustered(
-            pairs, os.path.join(tmp, "pairs"), ["doc_a", "doc_b"], ARTIFACT_FILES
-        )
-        write_clustered(
-            labels,
-            os.path.join(tmp, "labels"),
-            ["component", "node"],
-            ARTIFACT_FILES,
-        )
-
-    publish_artifact(
-        path,
-        {"version": ARTIFACT_VERSION, "max_bucket_docs": MAX_BUCKET_DOCS},
-        build_into,
-    )
 
 
 def write_dedup_artifact(docs: DataFrame, path: str) -> dict:
@@ -147,32 +107,17 @@ def write_dedup_artifact(docs: DataFrame, path: str) -> dict:
     ).persist()
     labels = connected_components(pairs, "doc_a", "doc_b")
     try:
-        _write_tables(sigs, pairs, labels, path)
+        artifact_io.publish(
+            KIND, {"signatures": sigs, "pairs": pairs, "labels": labels}, path
+        )
     finally:
         sigs.unpersist()
         pairs.unpersist()
-    art = load_dedup_artifact(docs.sparkSession, path)
+    art = artifact_io.load(KIND, docs.sparkSession, path)
     return {
         "n_sigs": art["signatures"].count(),
         "n_pairs": art["pairs"].count(),
         "n_labeled": art["labels"].count(),
-    }
-
-
-def load_dedup_artifact(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """Open the artifact's three tables as DataFrames (plus meta)."""
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
-    if meta["version"] != ARTIFACT_VERSION:
-        raise ValueError(
-            f"dedup artifact at {path} has version {meta['version']}, "
-            f"this code expects {ARTIFACT_VERSION} — rebuild it"
-        )
-    return {
-        "signatures": spark.read.parquet(os.path.join(path, "signatures")),
-        "pairs": spark.read.parquet(os.path.join(path, "pairs")),
-        "labels": spark.read.parquet(os.path.join(path, "labels")),
-        "meta": meta,
     }
 
 
@@ -192,7 +137,7 @@ def append_dedup_artifact(
     """
     from .operators.graph import connected_components
 
-    art = load_dedup_artifact(spark, path)
+    art = artifact_io.load(KIND, spark, path)
     sig_old, pairs_old, labels_old = (
         art["signatures"],
         art["pairs"],
@@ -270,7 +215,9 @@ def append_dedup_artifact(
             "n_new_pairs": pairs_new.count(),
             "n_touched_components": touched_comps.count(),
         }
-        _write_tables(sig_all, pairs_all, labels_all, path)
+        artifact_io.publish(
+            KIND, {"signatures": sig_all, "pairs": pairs_all, "labels": labels_all}, path
+        )
     finally:
         sig_new.unpersist()
         sig_all.unpersist()
@@ -279,31 +226,21 @@ def append_dedup_artifact(
 
 
 # ---------------------------------------------------------------------------
-# Fingerprint-keyed artifact for the registry's gate corpus.
+# The kind description artifact_io publishes, loads, gates and folds by.
 # ---------------------------------------------------------------------------
 
+_FILES = 8  # range buckets per table at test scale; a config at 100 TB
 
-def artifact_enabled() -> bool:
-    return os.environ.get(_ENV_DISABLE, "1") != "0"
-
-
-def _default_base_dir(spark: SparkSession) -> str:
-    base = os.environ.get(_ENV_BASE_DIR)
-    if base:
-        return base
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    return os.path.join(wh.removeprefix("file:"), "dedup_artifact")
-
-
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Staleness key: the artifact is valid only for the exact
-    documents.parquet bytes (size+mtime) and the derivation chain it
-    was built from — a regenerated corpus or an EDIT to any chain
-    function forces a rebuild (chain_digest hashes their source;
-    ADVICE r08)."""
-    from .artifact_io import chain_digest, corpus_fingerprint
-
-    chain = chain_digest(
+KIND = artifact_io.ArtifactKind(
+    name="dedup",
+    version=1,  # bump when the chain's semantics change
+    tables={
+        "signatures": (("doc_id",), _FILES),
+        "pairs": (("doc_a", "doc_b"), _FILES),
+        "labels": (("component", "node"), _FILES),
+    },
+    corpus_file="documents.parquet",
+    chain=(
         augmented_docs,
         _shingles,
         signatures_from_shingles,
@@ -311,34 +248,9 @@ def _corpus_fingerprint(sf_dir: str) -> str:
         cap_hot_buckets,
         verify_pair_ids,
         MAX_BUCKET_DOCS,
-    )
-    return corpus_fingerprint(
-        sf_dir, "documents.parquet", ARTIFACT_VERSION, chain
-    )
-
-
-def ensure_dedup_artifact(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load (building on first use) the artifact for the gate corpus
-    (``augmented_docs`` over ``sf_dir``).  The path is keyed by a corpus
-    fingerprint, so a regenerated testdata dir can never serve stale
-    pairs.  This is what re-points the dedup consumers at the artifact:
-    within a session the SessionCaches still dedupe, but across sessions
-    (a new bench run, a new driver round) the LSH chain is read, not
-    recomputed."""
-    path = gate_artifact_path(spark, sf_dir)
-    if not gate_artifact_exists(spark, sf_dir):
-        write_dedup_artifact(augmented_docs(spark, sf_dir), path)
-    return load_dedup_artifact(spark, path)
-
-
-def gate_artifact_path(spark: SparkSession, sf_dir: str) -> str:
-    return os.path.join(
-        _default_base_dir(spark), f"gate-{_corpus_fingerprint(sf_dir)}"
-    )
-
-
-def gate_artifact_exists(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff the gate-corpus artifact is already built (a pure stat)."""
-    return os.path.exists(
-        os.path.join(gate_artifact_path(spark, sf_dir), "_meta.json")
-    )
+    ),
+    columns=("doc_id", "text"),
+    corpus=augmented_docs,
+    build=write_dedup_artifact,
+    append=append_dedup_artifact,
+)

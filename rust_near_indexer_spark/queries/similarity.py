@@ -272,24 +272,16 @@ def _ann_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     Artifact-backed (the dedup `_verified_pairs` pattern): the first
     session to touch a corpus builds and WRITES the index artifact
-    (ann_artifact.ensure_ann_artifact); every later session — the next
-    bench run, the next driver round, every production consumer — READS
-    the range-clustered parquet instead of re-deriving quantization,
-    IVF assignment, and PQ encoding per query.  Set
-    ``SPARK_GRAFT_ANN_ARTIFACT=0`` to force cold computation."""
+    (``artifact_io.ensure``); every later session — the next bench run,
+    the next gate run, every production consumer — READS the
+    range-clustered parquet instead of re-deriving quantization, IVF
+    assignment, and PQ encoding per query."""
 
     def build() -> dict[str, DataFrame]:
-        from ..ann_artifact import (
-            artifact_enabled,
-            ensure_ann_artifact,
-            index_frames,
-        )
+        from ..ann_artifact import KIND
+        from ..artifact_io import ensure
 
-        if artifact_enabled():
-            art = ensure_ann_artifact(spark, sf_dir)
-        else:
-            art = index_frames(spread(load(spark, sf_dir, "embeddings"), "vec_id"))
-        return {k: v.persist() for k, v in art.items() if isinstance(v, DataFrame)}
+        return {k: v.persist() for k, v in ensure(KIND, spark, sf_dir).items()}
 
     return _ANN_CACHE.get_or_build(spark, (sf_dir,), build)
 

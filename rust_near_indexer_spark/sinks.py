@@ -151,7 +151,7 @@ def append(
     the partition dirs.  Because the staging dir is per-job, two
     racing appends never share a Hadoop ``_temporary`` dir — the
     committer clobber that made a raced job legally re-append its full
-    batch (PLANS_r11 flake adjudication) cannot happen, and raw counts
+    batch (the r11 flake adjudication, in git history) cannot happen, and raw counts
     are exactly one batch per job again (test_sinks pins ``== 2x``
     under the forced race).  Part filenames embed Spark's per-job
     write UUID, so destination names never collide across jobs.

@@ -15,96 +15,48 @@ is either FULLY present (its ids all collide with stored ones → the
 fold is a no-op skip) or fully absent (→ normal append); a PARTIAL
 overlap cannot be produced by a crash, so the append guards treat it
 as what it really is — corrupt input — and raise.  This makes the
-collision check double as the replay detector (``fold_*_batch``
-below; test_streaming_index_maintenance.py kills and replays).
+collision check double as the replay detector (``fold_batch`` below;
+test_streaming_index_maintenance.py kills and replays).  One fold and
+one writer serve both kinds, driven by their ``ArtifactKind``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..ann_artifact import (
-    append_ann_artifact,
-    load_ann_artifact,
-    write_ann_artifact,
-)
-from ..dedup_artifact import (
-    append_dedup_artifact,
-    load_dedup_artifact,
-    write_dedup_artifact,
-)
+from ..artifact_io import ArtifactKind, is_built, load
 
 
-def _has_artifact(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_meta.json"))
-
-
-def _n_new(batch: DataFrame, stored_ids: DataFrame, key: str) -> int:
-    return batch.select(key).distinct().join(
-        stored_ids, key, "left_anti"
-    ).count()
-
-
-def fold_dedup_batch(spark: SparkSession, path: str, docs: DataFrame) -> str:
-    """Fold one (doc_id, text) batch into the dedup artifact.
+def fold_batch(
+    kind: ArtifactKind, spark: SparkSession, path: str, batch: DataFrame
+) -> str:
+    """Fold one micro-batch into the ``kind`` artifact at ``path``.
 
     Returns the action taken: ``"build"`` (first batch), ``"append"``,
     or ``"skip"`` (replayed batch — every id already stored)."""
-    docs = docs.select("doc_id", "text")
-    if not _has_artifact(path):
-        write_dedup_artifact(docs, path)
+    batch = batch.select(*kind.columns)
+    if not is_built(path):
+        kind.build(batch, path)
         return "build"
-    stored = load_dedup_artifact(spark, path)["signatures"].select("doc_id")
-    if _n_new(docs, stored, "doc_id") == 0:
+    key = kind.columns[0]
+    stored = load(kind, spark, path)[next(iter(kind.tables))].select(key)
+    if batch.select(key).join(stored, key, "left_anti").isEmpty():
         return "skip"  # replay of a fully-folded batch
-    append_dedup_artifact(spark, path, docs)
+    kind.append(spark, path, batch)
     return "append"
 
 
-def fold_ann_batch(spark: SparkSession, path: str, vectors: DataFrame) -> str:
-    """Fold one (vec_id, embedding, label) batch into the ANN artifact.
-    Same build/append/skip contract as :func:`fold_dedup_batch`."""
-    vectors = vectors.select("vec_id", "embedding", "label")
-    if not _has_artifact(path):
-        write_ann_artifact(vectors, path)
-        return "build"
-    stored = load_ann_artifact(spark, path)["vectors"].select("vec_id")
-    if _n_new(vectors, stored, "vec_id") == 0:
-        return "skip"
-    append_ann_artifact(spark, path, vectors)
-    return "append"
-
-
-def maintain_dedup_artifact(
-    stream: DataFrame, path: str, checkpoint_dir: str
+def maintain_artifact(
+    kind: ArtifactKind, stream: DataFrame, path: str, checkpoint_dir: str
 ):
-    """Structured-Streaming writer: fold every document micro-batch into
-    the dedup artifact (Trigger.AvailableNow drains what's there; drop
-    the trigger for continuous maintenance).  Returns the query."""
+    """Structured-Streaming writer: fold every micro-batch of ``stream``
+    into the ``kind`` artifact (Trigger.AvailableNow drains what's
+    there; drop the trigger for continuous maintenance).  Returns the
+    query."""
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_dedup_batch(batch_df.sparkSession, path, batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def maintain_ann_artifact(stream: DataFrame, path: str, checkpoint_dir: str):
-    """Structured-Streaming writer for the ANN artifact — the streaming
-    face of ``ann append``."""
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold_ann_batch(batch_df.sparkSession, path, batch_df)
+        if not batch_df.isEmpty():
+            fold_batch(kind, batch_df.sparkSession, path, batch_df)
 
     return (
         stream.writeStream.foreachBatch(_sink)

@@ -55,9 +55,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def spread(df: DataFrame, *keys: str) -> DataFrame:
     """Widen a compact scan before CPU-heavy per-row derivation.
 
@@ -182,58 +179,3 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", ts
             )
     return df
-
-
-def read_evolved(
-    spark: SparkSession,
-    paths: list,
-    renames: dict | None = None,
-    casts: dict | None = None,
-) -> DataFrame:
-    """Read a parquet lake whose schema AGED across write generations
-    into one uniform DataFrame — the 100 TB reality where years of
-    partitions carry added columns, renamed columns, and widened types.
-
-    ``mergeSchema`` can NOT do this: Spark's parquet schema merge
-    rejects widened types outright (CANNOT_MERGE_SCHEMAS on
-    INT vs BIGINT), and a renamed column silently becomes drop+add.
-    So the reconciliation is explicit:
-
-    1. group the paths by their ACTUAL footer schema (a driver-side
-       footer read per path) — each distinct write generation becomes
-       ONE multi-path columnar scan, so the plan size is the number of
-       distinct schemas, not the number of directories;
-    2. per group, apply ``renames`` (old→new; if a generation carries
-       both, ``coalesce(new, old)``) and ``casts`` (column→Spark type
-       string, for int→bigint / float→double widening);
-    3. ``unionByName(allowMissingColumns=True)`` — columns a
-       generation lacks arrive as NULL, no rewrite of old files.
-
-    Scale posture: filters on stable columns push into every branch of
-    the union (Catalyst pushes through Union), each branch prunes to
-    the columns that generation actually has, and the footer probe
-    reads metadata only.
-    """
-    groups: dict = {}
-    for p in paths:
-        schema_key = spark.read.parquet(p).schema.json()
-        groups.setdefault(schema_key, []).append(p)
-
-    frames = []
-    for group_paths in groups.values():
-        df = spark.read.parquet(*group_paths)
-        for old, new in (renames or {}).items():
-            if old in df.columns and new in df.columns:
-                df = df.withColumn(
-                    new, F.coalesce(F.col(new), F.col(old))
-                ).drop(old)
-            elif old in df.columns:
-                df = df.withColumnRenamed(old, new)
-        for col, typ in (casts or {}).items():
-            if col in df.columns:
-                df = df.withColumn(col, F.col(col).cast(typ))
-        frames.append(df)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out

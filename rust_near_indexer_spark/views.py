@@ -22,6 +22,8 @@ CLI: ``python -m rust_near_indexer_spark sql "SELECT ..."``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 TESTDATA_TABLES = (
@@ -47,7 +49,8 @@ def register_views(
     embeddings table).  Default ``None`` registers an artifact's views
     only if that artifact is ALREADY BUILT on disk (a pure read —
     costs nothing); ``True`` forces the builds; ``False`` skips them.
-    The ANN block is skipped when ``sf_dir`` has no embeddings.parquet.
+    An artifact whose corpus file ``sf_dir`` lacks (say, no
+    embeddings.parquet) is skipped.
     """
     from .plans import silver
     from .plans.gold import intents_metrics
@@ -57,8 +60,6 @@ def register_views(
     names: list[str] = []
 
     if sf_dir is not None:
-        import os
-
         for t in TESTDATA_TABLES:
             # a corpus dir need not carry every table (e.g. documents
             # without embeddings — ADVICE r08): register what exists
@@ -87,43 +88,23 @@ def register_views(
     gold.createOrReplaceTempView("gold_intents_metrics")
     names.append("gold_intents_metrics")
 
-    # The maintained indexes as SQL tables too: an analyst asking
-    # "which near-dup cluster is doc 123 in" or "which IVF list holds
-    # vector 42" writes SQL against the artifact, exactly like the
-    # reference's users query ClickHouse state tables.  Views over the
-    # range-clustered parquet keep min/max pruning (a point predicate
-    # on the clustered id reads one file).
+    # The maintained indexes as SQL tables too (``<kind>_<table>``): an
+    # analyst asking "which near-dup cluster is doc 123 in" or "which
+    # IVF list holds vector 42" writes SQL against the artifact, exactly
+    # like the reference's users query ClickHouse state tables.  Views
+    # over the range-clustered parquet keep min/max pruning (a point
+    # predicate on the clustered id reads one file).  By default only an
+    # artifact already built is registered: a `sql` CLI query that
+    # touches no index view must not pay two index builds (ADVICE r08).
     if sf_dir is not None and include_artifacts is not False:
-        import os
-
         from . import ann_artifact, dedup_artifact
+        from .artifact_io import ensure, gate_path, is_built
 
-        # Default (include_artifacts=None): register only what is
-        # already built — a `sql` CLI query that touches no index view
-        # must not pay two index builds (ADVICE r08).
-        if include_artifacts or dedup_artifact.gate_artifact_exists(spark, sf_dir):
-            dd = dedup_artifact.ensure_dedup_artifact(spark, sf_dir)
-            for key, view in (
-                ("signatures", "dedup_signatures"),
-                ("pairs", "dedup_pairs"),
-                ("labels", "dedup_labels"),
-            ):
-                dd[key].createOrReplaceTempView(view)
-                names.append(view)
-        has_embeddings = os.path.exists(
-            os.path.join(sf_dir, "embeddings.parquet")
-        )
-        if has_embeddings and (
-            include_artifacts or ann_artifact.gate_artifact_exists(spark, sf_dir)
-        ):
-            ann = ann_artifact.ensure_ann_artifact(spark, sf_dir)
-            for key, view in (
-                ("vectors", "ann_vectors"),
-                ("centroids", "ann_centroids"),
-                ("ivf", "ann_ivf"),
-                ("pq_codebook", "ann_pq_codebook"),
-                ("pq_codes", "ann_pq_codes"),
-            ):
-                ann[key].createOrReplaceTempView(view)
-                names.append(view)
+        for kind in (dedup_artifact.KIND, ann_artifact.KIND):
+            if not os.path.exists(os.path.join(sf_dir, kind.corpus_file)):
+                continue
+            if include_artifacts or is_built(gate_path(kind, spark, sf_dir)):
+                for table, df in ensure(kind, spark, sf_dir).items():
+                    df.createOrReplaceTempView(f"{kind.name}_{table}")
+                    names.append(f"{kind.name}_{table}")
     return names

@@ -155,11 +155,11 @@ def main() -> int:
         # should measure — and the build cost stays visible, just
         # attributed to the artifact, not a random consumer.
         t0 = time.perf_counter()
-        from rust_near_indexer_spark.ann_artifact import ensure_ann_artifact
-        from rust_near_indexer_spark.dedup_artifact import ensure_dedup_artifact
+        from rust_near_indexer_spark import ann_artifact, dedup_artifact
+        from rust_near_indexer_spark.artifact_io import ensure
 
-        ensure_dedup_artifact(spark, sf_dir)
-        ensure_ann_artifact(spark, sf_dir)
+        ensure(dedup_artifact.KIND, spark, sf_dir)
+        ensure(ann_artifact.KIND, spark, sf_dir)
         build_s = round(time.perf_counter() - t0, 3)
         results.setdefault("_artifact_ensure", {})[sf] = {"t": build_s}
         print(f"[sf1-bench] sf{sf} artifact ensure: {build_s:.3f}s",

@@ -24,7 +24,7 @@ HEAD = """# SCALING — empirical scale-up behavior across a 100x data range
 One bench session per scale factor (`bench.py`, local[32], warmed JIT,
 AQE on), the FULL registry ({n} queries) at sf0.001 / sf0.01 / sf0.1 —
 a 100x spread in input size.  This is the measured counterpart to the
-per-plan scale arguments in PLANS_r03/r04/r05 and the operator
+per-plan scale arguments in the r03–r05 plans notes (git history) and the operator
 docstrings: if a plan had a hidden super-linear term (an all-pairs
 join, a driver collect, a skew-bound shuffle), it would surface here as
 a time ratio tracking the data ratio.

@@ -188,6 +188,7 @@ def test_append_rejects_doc_id_collision(spark, tmp_path):
 
 
 def test_publish_is_symlink_swap_with_no_gap(spark, tmp_path):
+    from rust_near_indexer_spark import artifact_io
     from rust_near_indexer_spark import dedup_artifact as da
 
     path = str(tmp_path / "art")
@@ -229,11 +230,12 @@ def test_publish_is_symlink_swap_with_no_gap(spark, tmp_path):
     assert os.path.isdir(second_target)  # the new previous is retained
     # relative symlink: artifact tree is relocatable as a unit
     assert not os.path.isabs(os.readlink(path))
-    art = da.load_dedup_artifact(spark, path)
+    art = artifact_io.load(da.KIND, spark, path)
     assert art["signatures"].count() == 6
 
 
 def test_publish_migrates_legacy_real_dir(spark, tmp_path):
+    from rust_near_indexer_spark import artifact_io
     from rust_near_indexer_spark import dedup_artifact as da
 
     path = str(tmp_path / "art")
@@ -249,7 +251,7 @@ def test_publish_migrates_legacy_real_dir(spark, tmp_path):
     assert os.path.isdir(path) and not os.path.islink(path)
     da.write_dedup_artifact(docs, path)  # must migrate, not crash
     assert os.path.islink(path)
-    assert da.load_dedup_artifact(spark, path)["signatures"].count() == 4
+    assert artifact_io.load(da.KIND, spark, path)["signatures"].count() == 4
 
 
 # ---------------------------------------------------------------------------

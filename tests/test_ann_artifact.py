@@ -11,12 +11,12 @@ Pins the same claims test_dedup_artifact pins for the text side:
 3. append work refuses contract violations loudly: vec_id collisions
    and new ids inside a quantizer donor range both raise;
 4. the gate-corpus ensure() path writes once and then reuses
-   (fingerprint-keyed), and the registered consumers return identical
-   results with the artifact on and off.
+   (fingerprint-keyed).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import os
 
@@ -24,6 +24,7 @@ import pytest
 from pyspark.sql import Row
 
 from rust_near_indexer_spark import ann_artifact as aa
+from rust_near_indexer_spark import artifact_io
 from rust_near_indexer_spark.caching import clear_caches
 
 DIM = 64
@@ -69,9 +70,9 @@ def test_cold_build_round_trip(spark, tmp_path):
     assert stats["n_vectors"] == len(CORPUS_IDS)
     assert stats["n_lists"] == 16
     assert stats["n_codes"] == len(CORPUS_IDS) * 8
-    art = aa.load_ann_artifact(spark, path)
+    art = artifact_io.load(aa.KIND, spark, path)
     cold = aa.index_frames(emb)
-    for name in aa.TABLES:
+    for name in aa.KIND.tables:
         assert _tset(art[name]) == _tset(cold[name]), name
 
 
@@ -83,9 +84,9 @@ def test_incremental_append_equals_cold_rebuild(spark, tmp_path):
     stats = aa.append_ann_artifact(spark, inc_path, _emb(spark, new_ids))
     assert stats["n_new_vectors"] == len(new_ids)
     aa.write_ann_artifact(_emb(spark, CORPUS_IDS), cold_path)
-    inc = aa.load_ann_artifact(spark, inc_path)
-    cold = aa.load_ann_artifact(spark, cold_path)
-    for name in aa.TABLES:
+    inc = artifact_io.load(aa.KIND, spark, inc_path)
+    cold = artifact_io.load(aa.KIND, spark, cold_path)
+    for name in aa.KIND.tables:
         assert _tset(inc[name]) == _tset(cold[name]), name
 
 
@@ -108,43 +109,31 @@ def test_append_rejects_collision_and_donor_range(spark, tmp_path):
 
 
 def test_gate_corpus_artifact_matches_cold_chain(spark, sf_dir, tmp_path, monkeypatch):
-    """ensure_ann_artifact over the real gate corpus == the cold chain,
-    and consumers are identical with the artifact on and off."""
-    from rust_near_indexer_spark.queries.similarity import (
-        ann_ivf_topk,
-        ann_pq_adc_topk,
-    )
+    """ensure() over the real gate corpus == the cold chain."""
     from rust_near_indexer_spark.tables import load, spread
 
-    monkeypatch.setenv("SPARK_GRAFT_ANN_ARTIFACT_DIR", str(tmp_path / "base"))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "base"))
     clear_caches()
-    art = aa.ensure_ann_artifact(spark, sf_dir)
+    art = artifact_io.ensure(aa.KIND, spark, sf_dir)
     cold = aa.index_frames(spread(load(spark, sf_dir, "embeddings"), "vec_id"))
-    for name in aa.TABLES:
+    for name in aa.KIND.tables:
         assert _tset(art[name]) == _tset(cold[name]), name
 
     # second ensure() must hit the written artifact, not rebuild — the
     # marker path comes from the SAME helper production uses (the r09
     # staleness key folds a chain digest in; recomputing the fingerprint
     # here without it would point at a nonexistent dir)
-    marker = os.path.join(aa.gate_artifact_path(spark, sf_dir), "_meta.json")
+    path = artifact_io.gate_path(aa.KIND, spark, sf_dir)
+    assert os.path.dirname(path) == str(tmp_path / "base" / "ann_artifact")
+    marker = os.path.join(path, "_meta.json")
     mtime = os.path.getmtime(marker)
-    aa.ensure_ann_artifact(spark, sf_dir)
+    artifact_io.ensure(aa.KIND, spark, sf_dir)
     assert os.path.getmtime(marker) == mtime
-
-    # consumer equality: artifact on vs forced-cold
-    warm_ivf = _tset(ann_ivf_topk(spark, sf_dir))
-    warm_pq = _tset(ann_pq_adc_topk(spark, sf_dir))
-    clear_caches()
-    monkeypatch.setenv("SPARK_GRAFT_ANN_ARTIFACT", "0")
-    assert _tset(ann_ivf_topk(spark, sf_dir)) == warm_ivf
-    assert _tset(ann_pq_adc_topk(spark, sf_dir)) == warm_pq
     clear_caches()
 
 
-def test_version_mismatch_refuses_stale_artifact(spark, tmp_path, monkeypatch):
+def test_version_mismatch_refuses_stale_artifact(spark, tmp_path):
     path = str(tmp_path / "ann")
     aa.write_ann_artifact(_emb(spark, CORPUS_IDS), path)
-    monkeypatch.setattr(aa, "ANN_ARTIFACT_VERSION", 99)
     with pytest.raises(ValueError, match="version"):
-        aa.load_ann_artifact(spark, path)
+        artifact_io.load(dataclasses.replace(aa.KIND, version=99), spark, path)

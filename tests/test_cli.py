@@ -42,6 +42,17 @@ def test_cli_resume_skips_ingested_heights(spark, tmp_path, capsys):
     assert n2 == n1
 
 
+def test_cli_stream_rejects_batch_only_flags(tmp_path, capsys):
+    """The stream resumes from its checkpoint: --start, --end and --force
+    would be silently ignored, so they exit 2 naming the flag, before
+    any Spark work."""
+    for flag in (["--start", "5"], ["--end", "9"], ["--force"]):
+        argv = ["ingest", "--blocks", BLOCKS_PATH, "--out", str(tmp_path / "sink")]
+        assert main([*argv, "--stream", *flag]) == 2
+        assert f"does not take {flag[0]}" in capsys.readouterr().err
+    assert not (tmp_path / "sink").exists()
+
+
 def test_register_views_sql_matches_dataframe(spark, sf_dir):
     """register_views makes the whole medallion stack addressable by
     name; a SQL formulation of the gold query over the silver views must

@@ -48,3 +48,19 @@ def test_no_top_level_def_is_unreferenced():
             if defines and not node.name.startswith("__") and names[node.name] <= 1:
                 unreferenced.append(f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.name}")
     assert unreferenced == []
+
+
+def test_every_env_var_is_in_the_readme_table():
+    """The README's Configuration table names exactly the ``SPARK_*`` /
+    ``OTEL_*`` variables the package reads, so a knob cannot land
+    undocumented (and a deleted one cannot linger in the docs)."""
+    read = set()
+    for path in _py_files(PKG):
+        with open(path, encoding="utf-8") as f:
+            read.update(re.findall(r"""["']((?:SPARK|OTEL)_[A-Z0-9_]+)["']""", f.read()))
+    with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as f:
+        readme = f.read()
+    assert "## Configuration" in readme
+    section = readme.split("## Configuration", 1)[1].split("\n## ", 1)[0]
+    documented = set(re.findall(r"^\| `([A-Z0-9_]+)` \|", section, re.M))
+    assert read == documented

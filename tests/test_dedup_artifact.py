@@ -17,10 +17,14 @@ import os
 
 import pytest
 
+from rust_near_indexer_spark import artifact_io
 from rust_near_indexer_spark import dedup_artifact as da
 from rust_near_indexer_spark.caching import clear_caches
 from rust_near_indexer_spark.operators.graph import connected_components
-from rust_near_indexer_spark.queries.dedup import _verified_pairs_plan
+from rust_near_indexer_spark.queries.dedup import (
+    _doc_shingles,
+    _verified_pairs_for_shingles,
+)
 
 
 def _docs(spark, rows):
@@ -58,7 +62,7 @@ def test_cold_build_round_trip(spark, tmp_path):
     rows = _corpus(spark)
     path = str(tmp_path / "art")
     stats = da.write_dedup_artifact(_docs(spark, rows), path)
-    art = da.load_dedup_artifact(spark, path)
+    art = artifact_io.load(da.KIND, spark, path)
     assert stats["n_sigs"] == len(rows)
     # every family of 3 variants pairs up fully: 3 pairs per family
     assert stats["n_pairs"] >= 9
@@ -87,8 +91,8 @@ def test_incremental_append_equals_cold_rebuild(spark, tmp_path):
     stats = da.append_dedup_artifact(spark, inc_path, _docs(spark, new))
     da.write_dedup_artifact(_docs(spark, rows), cold_path)
     inc, cold = (
-        da.load_dedup_artifact(spark, inc_path),
-        da.load_dedup_artifact(spark, cold_path),
+        artifact_io.load(da.KIND, spark, inc_path),
+        artifact_io.load(da.KIND, spark, cold_path),
     )
     assert _pairs_set(inc["pairs"]) == _pairs_set(cold["pairs"])
     assert _labels_set(inc["labels"]) == _labels_set(cold["labels"])
@@ -107,14 +111,14 @@ def test_append_bridge_merges_to_global_min(spark, tmp_path):
     ]
     path = str(tmp_path / "art")
     da.write_dedup_artifact(_docs(spark, rows), path)
-    art0 = da.load_dedup_artifact(spark, path)
+    art0 = artifact_io.load(da.KIND, spark, path)
     comps0 = {c for _, c in _labels_set(art0["labels"])}
     assert comps0 == {10, 20}, "two separate clusters before the bridge"
     # the bridge: half of family 1 + half of family 2 → near-dups both ways
     bridge = " ".join(w1[: len(w1) // 1][:8] + w2[:8])
     # make it overlap each family enough: 8 shared leading words each side
     stats = da.append_dedup_artifact(spark, path, _docs(spark, [(30, bridge)]))
-    art1 = da.load_dedup_artifact(spark, path)
+    art1 = artifact_io.load(da.KIND, spark, path)
     labels = dict(_labels_set(art1["labels"]))
     if stats["n_new_pairs"] >= 2 and len({labels[10], labels[20]}) == 1:
         # fully merged: global-min label wins for every member
@@ -126,7 +130,7 @@ def test_append_bridge_merges_to_global_min(spark, tmp_path):
         assert labels[10] == 10 and labels[20] == 20
     cold_path = str(tmp_path / "cold")
     da.write_dedup_artifact(_docs(spark, rows + [(30, bridge)]), cold_path)
-    cold = da.load_dedup_artifact(spark, cold_path)
+    cold = artifact_io.load(da.KIND, spark, cold_path)
     assert _labels_set(art1["labels"]) == _labels_set(cold["labels"])
     assert _pairs_set(art1["pairs"]) == _pairs_set(cold["pairs"])
 
@@ -135,13 +139,13 @@ def test_append_carries_untouched_clusters(spark, tmp_path):
     rows = _corpus(spark)
     path = str(tmp_path / "art")
     da.write_dedup_artifact(_docs(spark, rows), path)
-    before = _labels_set(da.load_dedup_artifact(spark, path)["labels"])
+    before = _labels_set(artifact_io.load(da.KIND, spark, path)["labels"])
     # a batch that near-dups ONLY family 2 (doc ids 200..202)
     b2 = "large language models learn statistical structure from vast text corpora"
     stats = da.append_dedup_artifact(
         spark, path, _docs(spark, [(250, " ".join(b2.split()[:-2]))])
     )
-    after = _labels_set(da.load_dedup_artifact(spark, path)["labels"])
+    after = _labels_set(artifact_io.load(da.KIND, spark, path)["labels"])
     assert stats["n_touched_components"] == 1, "only family 2's cluster touched"
     untouched_before = {(n, c) for n, c in before if c != 200}
     assert untouched_before <= after, "untouched labels carried over unchanged"
@@ -149,19 +153,21 @@ def test_append_carries_untouched_clusters(spark, tmp_path):
 
 
 def test_gate_corpus_artifact_matches_cold_chain(spark, sf_dir, tmp_path, monkeypatch):
-    """ensure_dedup_artifact over the real gate corpus == the cold plan
-    (this is the bit-equality the driver gate then re-checks vs DuckDB)."""
-    monkeypatch.setenv("SPARK_GRAFT_DEDUP_ARTIFACT_DIR", str(tmp_path / "base"))
+    """ensure() over the real gate corpus == the cold plan (this is the
+    bit-equality the oracle gate then re-checks vs DuckDB)."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "base"))
     clear_caches()
-    art = da.ensure_dedup_artifact(spark, sf_dir)
-    cold = _verified_pairs_plan(spark, sf_dir)
+    art = artifact_io.ensure(da.KIND, spark, sf_dir)
+    cold = _verified_pairs_for_shingles(_doc_shingles(spark, sf_dir))
     assert _pairs_set(art["pairs"]) == _pairs_set(cold)
+    # the gate path sits under the one base dir, per kind, keyed by the
+    # corpus fingerprint
+    path = artifact_io.gate_path(da.KIND, spark, sf_dir)
+    assert os.path.dirname(path) == str(tmp_path / "base" / "dedup_artifact")
     # second ensure() must hit the written artifact, not rebuild
-    marker = os.path.join(
-        str(tmp_path / "base"), f"gate-{da._corpus_fingerprint(sf_dir)}", "_meta.json"
-    )
+    marker = os.path.join(path, "_meta.json")
     mtime = os.path.getmtime(marker)
-    da.ensure_dedup_artifact(spark, sf_dir)
+    artifact_io.ensure(da.KIND, spark, sf_dir)
     assert os.path.getmtime(marker) == mtime
     clear_caches()
 
@@ -177,4 +183,4 @@ def test_version_mismatch_refuses_stale_artifact(spark, tmp_path, monkeypatch):
     meta["version"] = -1
     json.dump(meta, open(meta_p, "w"))
     with pytest.raises(ValueError, match="rebuild"):
-        da.load_dedup_artifact(spark, path)
+        artifact_io.load(da.KIND, spark, path)

@@ -185,7 +185,7 @@ def test_token_cms_partial_aggregation_and_broadcast_probe(spark, sf_dir):
     each task, one small shuffle) and probe the cells via broadcast —
     the shape VERDICT r09 #4 asked to pin while adjudicating the
     0.8→1.1s drift (measured: plan unchanged since r08; the residual
-    delta is session warmth, reps in PLANS_r10)."""
+    delta is session warmth, reps in the r10 plans notes in git history)."""
     plan = _plan(spark, "token_cms_heavy_hitters", sf_dir)
     assert "partial_count" in plan  # map-side combine engaged
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan

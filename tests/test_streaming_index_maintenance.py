@@ -10,12 +10,11 @@ import math
 import os
 
 from rust_near_indexer_spark import ann_artifact as aa
+from rust_near_indexer_spark import artifact_io
 from rust_near_indexer_spark import dedup_artifact as da
 from rust_near_indexer_spark.streaming.index_maintenance import (
-    fold_ann_batch,
-    fold_dedup_batch,
-    maintain_ann_artifact,
-    maintain_dedup_artifact,
+    fold_batch,
+    maintain_artifact,
 )
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -68,14 +67,14 @@ def test_streamed_dedup_folds_equal_cold_build(spark, tmp_path):
     _write_chunks(src, rows, 3, lambda r: {"doc_id": r[0], "text": r[1]})
     art = str(tmp_path / "art")
     stream = spark.readStream.schema(DOC_SCHEMA).json(src)
-    q = maintain_dedup_artifact(stream, art, str(tmp_path / "ckpt"))
+    q = maintain_artifact(da.KIND, stream, art, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     cold = str(tmp_path / "cold")
     da.write_dedup_artifact(
         spark.createDataFrame(rows, DOC_SCHEMA), cold
     )
-    inc, ref = da.load_dedup_artifact(spark, art), da.load_dedup_artifact(spark, cold)
+    inc, ref = artifact_io.load(da.KIND, spark, art), artifact_io.load(da.KIND, spark, cold)
     assert _pairs_set(inc["pairs"]) == _pairs_set(ref["pairs"])
     assert _labels_set(inc["labels"]) == _labels_set(ref["labels"])
 
@@ -86,8 +85,8 @@ def test_streamed_dedup_resume_processes_only_new_files(spark, tmp_path):
     _write_chunks(src, rows[:6], 2, lambda r: {"doc_id": r[0], "text": r[1]})
     art, ckpt = str(tmp_path / "art"), str(tmp_path / "ckpt")
     stream = spark.readStream.schema(DOC_SCHEMA).json(src)
-    maintain_dedup_artifact(stream, art, ckpt).awaitTermination(120)
-    n_after_first = da.load_dedup_artifact(spark, art)["signatures"].count()
+    maintain_artifact(da.KIND, stream, art, ckpt).awaitTermination(120)
+    n_after_first = artifact_io.load(da.KIND, spark, art)["signatures"].count()
     assert n_after_first == 6
 
     # new files arrive; resume on the SAME checkpoint — the already-
@@ -97,11 +96,11 @@ def test_streamed_dedup_resume_processes_only_new_files(spark, tmp_path):
         for r in rows[6:]:
             f.write(json.dumps({"doc_id": r[0], "text": r[1]}) + "\n")
     stream2 = spark.readStream.schema(DOC_SCHEMA).json(src)
-    maintain_dedup_artifact(stream2, art, ckpt).awaitTermination(120)
+    maintain_artifact(da.KIND, stream2, art, ckpt).awaitTermination(120)
 
     cold = str(tmp_path / "cold")
     da.write_dedup_artifact(spark.createDataFrame(rows, DOC_SCHEMA), cold)
-    inc, ref = da.load_dedup_artifact(spark, art), da.load_dedup_artifact(spark, cold)
+    inc, ref = artifact_io.load(da.KIND, spark, art), artifact_io.load(da.KIND, spark, cold)
     assert _pairs_set(inc["pairs"]) == _pairs_set(ref["pairs"])
     assert _labels_set(inc["labels"]) == _labels_set(ref["labels"])
 
@@ -112,14 +111,14 @@ def test_fold_replay_is_noop(spark, tmp_path):
     rows = _doc_rows()
     art = str(tmp_path / "art")
     first = spark.createDataFrame(rows[:6], DOC_SCHEMA)
-    assert fold_dedup_batch(spark, art, first) == "build"
+    assert fold_batch(da.KIND, spark, art, first) == "build"
     second = spark.createDataFrame(rows[6:], DOC_SCHEMA)
-    assert fold_dedup_batch(spark, art, second) == "append"
-    before = _labels_set(da.load_dedup_artifact(spark, art)["labels"])
+    assert fold_batch(da.KIND, spark, art, second) == "append"
+    before = _labels_set(artifact_io.load(da.KIND, spark, art)["labels"])
     mtime = os.path.getmtime(os.path.join(art, "_meta.json"))
-    assert fold_dedup_batch(spark, art, second) == "skip"  # replay
+    assert fold_batch(da.KIND, spark, art, second) == "skip"  # replay
     assert os.path.getmtime(os.path.join(art, "_meta.json")) == mtime
-    assert _labels_set(da.load_dedup_artifact(spark, art)["labels"]) == before
+    assert _labels_set(artifact_io.load(da.KIND, spark, art)["labels"]) == before
 
 
 def test_streamed_ann_folds_equal_cold_build(spark, tmp_path):
@@ -136,12 +135,12 @@ def test_streamed_ann_folds_equal_cold_build(spark, tmp_path):
     )
     art = str(tmp_path / "ann")
     stream = spark.readStream.schema(VEC_SCHEMA).json(src)
-    maintain_ann_artifact(stream, art, str(tmp_path / "ckpt")).awaitTermination(120)
+    maintain_artifact(aa.KIND, stream, art, str(tmp_path / "ckpt")).awaitTermination(120)
 
     cold = str(tmp_path / "cold")
     aa.write_ann_artifact(spark.createDataFrame(rows, VEC_SCHEMA), cold)
-    inc, ref = aa.load_ann_artifact(spark, art), aa.load_ann_artifact(spark, cold)
-    for name in aa.TABLES:
+    inc, ref = artifact_io.load(aa.KIND, spark, art), artifact_io.load(aa.KIND, spark, cold)
+    for name in aa.KIND.tables:
         a = {tuple(tuple(v) if isinstance(v, list) else v for v in r)
              for r in inc[name].collect()}
         b = {tuple(tuple(v) if isinstance(v, list) else v for v in r)
@@ -153,9 +152,9 @@ def test_fold_ann_replay_is_noop(spark, tmp_path):
     rows = [(i, _unit_vec(i), i % 7) for i in range(230)]
     art = str(tmp_path / "ann")
     first = spark.createDataFrame(rows[:220], VEC_SCHEMA)
-    assert fold_ann_batch(spark, art, first) == "build"
+    assert fold_batch(aa.KIND, spark, art, first) == "build"
     batch = spark.createDataFrame(rows[220:], VEC_SCHEMA)
-    assert fold_ann_batch(spark, art, batch) == "append"
+    assert fold_batch(aa.KIND, spark, art, batch) == "append"
     mtime = os.path.getmtime(os.path.join(art, "_meta.json"))
-    assert fold_ann_batch(spark, art, batch) == "skip"
+    assert fold_batch(aa.KIND, spark, art, batch) == "skip"
     assert os.path.getmtime(os.path.join(art, "_meta.json")) == mtime
