@@ -132,9 +132,9 @@ def bench_bronze_blocks(spark, n_blocks: int = 2000) -> float:
         df = spark.read.parquet(tmp)
         t0 = time.perf_counter()
         tables = run_bronze(df)
-        total_rows = sum(t.count() for t in tables.values())
-        elapsed = time.perf_counter() - t0
-        tables.release()
+        with tables.pins:
+            total_rows = sum(t.count() for t in tables.values())
+            elapsed = time.perf_counter() - t0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print(

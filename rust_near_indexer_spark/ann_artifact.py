@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import artifact_io
+from .caching import Pins
 from .queries.similarity import (
     CENTROID_BASE,
     N_LIST,
@@ -88,12 +89,9 @@ def write_ann_artifact(emb: DataFrame, path: str) -> dict:
     one broadcast PQ encoding — then five clustered parquet writes.
     Returns row-count stats."""
     frames = index_frames(emb)
-    qv = frames["vectors"].persist()
-    frames["vectors"] = qv
-    try:
+    with Pins() as pins:
+        frames["vectors"] = pins.pin(frames["vectors"])
         artifact_io.publish(KIND, frames, path)
-    finally:
-        qv.unpersist()
     art = artifact_io.load(KIND, emb.sparkSession, path)
     return {
         "n_vectors": art["vectors"].count(),
@@ -114,50 +112,46 @@ def append_ann_artifact(
     against the broadcast quantizers; stored rows are unioned through
     untouched."""
     art = artifact_io.load(KIND, spark, path)
-    qv_new = quantized_embeddings(new_emb).persist()
+    with Pins() as pins:
+        qv_new = pins.pin(quantized_embeddings(new_emb))
 
-    in_donor_range = (
-        (F.col("vec_id") >= CENTROID_BASE)
-        & (F.col("vec_id") < CENTROID_BASE + N_LIST)
-    ) | ((F.col("vec_id") >= PQ_BASE) & (F.col("vec_id") < PQ_BASE + PQ_KS))
-    bad = qv_new.where(in_donor_range).select("vec_id").limit(5).collect()
-    if bad:
-        qv_new.unpersist()
-        raise ValueError(
-            "append_ann_artifact: new vec_ids fall inside a quantizer donor "
-            f"range (a cold rebuild would derive a different index): "
-            f"{sorted(r.vec_id for r in bad)}"
+        in_donor_range = (
+            (F.col("vec_id") >= CENTROID_BASE)
+            & (F.col("vec_id") < CENTROID_BASE + N_LIST)
+        ) | ((F.col("vec_id") >= PQ_BASE) & (F.col("vec_id") < PQ_BASE + PQ_KS))
+        bad = qv_new.where(in_donor_range).select("vec_id").limit(5).collect()
+        if bad:
+            raise ValueError(
+                "append_ann_artifact: new vec_ids fall inside a quantizer donor "
+                f"range (a cold rebuild would derive a different index): "
+                f"{sorted(r.vec_id for r in bad)}"
+            )
+        collisions = (
+            qv_new.select("vec_id")
+            .join(art["vectors"].select("vec_id"), "vec_id", "left_semi")
+            .limit(5)
+            .collect()
         )
-    collisions = (
-        qv_new.select("vec_id")
-        .join(art["vectors"].select("vec_id"), "vec_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if collisions:
-        qv_new.unpersist()
-        ids = sorted(r.vec_id for r in collisions)
-        raise ValueError(
-            f"append_ann_artifact: vec_ids already in the index "
-            f"(append, not upsert): {ids}{'…' if len(ids) == 5 else ''}"
-        )
+        if collisions:
+            ids = sorted(r.vec_id for r in collisions)
+            raise ValueError(
+                f"append_ann_artifact: vec_ids already in the index "
+                f"(append, not upsert): {ids}{'…' if len(ids) == 5 else ''}"
+            )
 
-    ivf_new = ivf_assign(qv_new, art["centroids"])
-    codes_new = pq_codes_frame(
-        pq_distances(pq_subvectors(qv_new), art["pq_codebook"])
-    )
-    frames = {
-        "vectors": art["vectors"].unionByName(qv_new),
-        "centroids": art["centroids"],
-        "ivf": art["ivf"].unionByName(ivf_new),
-        "pq_codebook": art["pq_codebook"],
-        "pq_codes": art["pq_codes"].unionByName(codes_new),
-    }
-    try:
+        ivf_new = ivf_assign(qv_new, art["centroids"])
+        codes_new = pq_codes_frame(
+            pq_distances(pq_subvectors(qv_new), art["pq_codebook"])
+        )
+        frames = {
+            "vectors": art["vectors"].unionByName(qv_new),
+            "centroids": art["centroids"],
+            "ivf": art["ivf"].unionByName(ivf_new),
+            "pq_codebook": art["pq_codebook"],
+            "pq_codes": art["pq_codes"].unionByName(codes_new),
+        }
         stats = {"n_new_vectors": qv_new.count()}
         artifact_io.publish(KIND, frames, path)
-    finally:
-        qv_new.unpersist()
     return stats
 
 
@@ -194,6 +188,7 @@ KIND = artifact_io.ArtifactKind(
     ),
     columns=("vec_id", "embedding", "label"),
     corpus=lambda spark, sf_dir: spread(load(spark, sf_dir, "embeddings"), "vec_id"),
+    stored_ids=lambda batch: batch.select("vec_id"),
     build=write_ann_artifact,
     append=append_ann_artifact,
 )

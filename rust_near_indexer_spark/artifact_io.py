@@ -306,8 +306,10 @@ class ArtifactKind:
     ``columns[0]``.  ``corpus_file`` is the gate corpus under an sf dir
     and ``corpus(spark, sf_dir)`` loads it.  ``chain`` holds the
     objects whose source keys staleness (``chain_digest``).
-    ``build(corpus, path)`` and ``append(spark, path, batch)`` are the
-    kind's own derivations; both return row-count stats."""
+    ``stored_ids(batch)`` is the one-column frame of the batch's ids the
+    artifact stores.  ``build(corpus, path)`` and ``append(spark, path,
+    batch)`` are the kind's own derivations; both return row-count
+    stats."""
 
     name: str
     version: int
@@ -316,6 +318,7 @@ class ArtifactKind:
     chain: tuple
     columns: tuple[str, ...]
     corpus: Callable[[SparkSession, str], DataFrame]
+    stored_ids: Callable[[DataFrame], DataFrame]
     build: Callable[[DataFrame, str], dict]
     append: Callable[[SparkSession, str, DataFrame], dict]
 

@@ -92,12 +92,4 @@ def sinks_append_assets(df: DataFrame, path: str, ingest_seq: int) -> None:
 
 def read_assets(spark: SparkSession, path: str) -> DataFrame:
     """Dedup-on-read by the dimension PK (latest ingest wins)."""
-    from pyspark.sql.window import Window
-
-    df = spark.read.parquet(path)
-    w = Window.partitionBy(*ASSETS_PK).orderBy(F.desc("ingest_seq"))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "ingest_seq")
-    )
+    return sinks.last_write_wins(spark.read.parquet(path), ASSETS_PK, "ingest_seq")

@@ -19,7 +19,7 @@ real 100 TB curation run chains them:
 Scale shape: the composition inherits each stage's audited plan (one
 content-hash shuffle; banded LSH, never all-pairs; O(log n) CC rounds;
 broadcast split of the cluster-label table; one window per source for
-shard cuts; partitionBy write).  Stages communicate through persisted
+shard cuts; partitionBy write).  Stages communicate through pinned
 DataFrames (SessionCache rules), so the corpus is scanned once per
 stage, not once per downstream consumer.
 
@@ -36,21 +36,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .caching import SessionCache
+from .caching import Pins, SessionCache
 from .canonical import hash60
 from .queries.dedup import JACCARD_MILLI_THRESHOLD  # noqa: F401 (re-export)
-from .queries.dedup import _verified_pairs_for
+from .queries.dedup import verified_pairs_for
 from .tables import spread
 
 QUALITY_MIN_MILLI = 350  # keep docs scoring >= this (0..1000 scale)
 SPLIT_PPM = (900_000, 50_000, 50_000)  # train / val / test
 SHARD_TOKENS = 2000
 
-# Stage hand-offs are persisted; routing them through a SessionCache
-# (keyed on applicationId + the input plan's semantic hash) means a
-# repeated curate() over the same corpus reuses the pinned stages
-# instead of stacking fresh copies in executor storage, and
-# caching.clear_caches() can release everything.
+# Stage hand-offs are pinned in a SessionCache entry (keyed on
+# applicationId + the input plan's semantic hash), so a repeated
+# curate() over the same corpus reuses the pinned stages instead of
+# stacking fresh copies in executor storage, and
+# caching.clear_caches() releases everything.
 _CURATE_CACHE = SessionCache("curation")
 
 
@@ -80,7 +80,7 @@ def curate(
     Nothing is collected; every output is a DataFrame the caller can
     write, join, or audit.
 
-    Results (including the persisted stage hand-offs) are memoized per
+    Results (including the pinned stage hand-offs) are memoized per
     (applicationId, input plan, threshold) in a :class:`SessionCache`;
     call :func:`rust_near_indexer_spark.caching.clear_caches` to
     release the executor storage.
@@ -88,36 +88,39 @@ def curate(
     spark = docs.sparkSession
     key = ("curate", quality_min_milli, docs.semanticHash())
     return _CURATE_CACHE.get_or_build(
-        spark, key, lambda: _curate_build(docs, quality_min_milli)
+        spark, key, lambda pins: _curate_build(docs, quality_min_milli, pins)
     )
 
 
-def _curate_build(docs: DataFrame, quality_min_milli: int) -> dict[str, DataFrame]:
+def _curate_build(
+    docs: DataFrame, quality_min_milli: int, pins: Pins
+) -> dict[str, DataFrame]:
     # Null text would vanish from every stage (md5(NULL) is NULL and the
     # hash equi-joins drop NULL keys; NULL quality fails BOTH >= and <
     # predicates) — violating document conservation.  Coalesce to ''
     # up front so such docs flow through as empty documents (exact-dup
     # or low_quality, deterministically).
-    base = spread(
-        docs.select(
+    base = pins.pin(
+        spread(
+            docs.select(
+                "doc_id",
+                F.coalesce(F.col("text"), F.lit("")).alias("text"),
+                "source",
+            ),
             "doc_id",
-            F.coalesce(F.col("text"), F.lit("")).alias("text"),
-            "source",
-        ),
-        "doc_id",
-    ).persist()
+        )
+    )
 
     # 1. exact dedup: keep-min per content hash
     keyed = base.withColumn("k", F.md5("text"))
     keepers = keyed.groupBy("k").agg(F.min("doc_id").alias("keeper"))
-    exact_kept = (
+    exact_kept = pins.pin(
         keyed.join(keepers, "k")
         .where(F.col("doc_id") == F.col("keeper"))
         .drop("k", "keeper")
-        .persist()
     )
     # exact-dropped = base minus the keepers, as an anti-join of the two
-    # PERSISTED frames (r12): the old keyed-join re-derivation re-ran
+    # PINNED frames (r12): the old keyed-join re-derivation re-ran
     # the md5 keying, the keeper aggregate and the hash join a second
     # time for the decisions branch (set identity: doc_id != keeper
     # over the join  ⇔  doc_id ∉ exact_kept)
@@ -126,7 +129,7 @@ def _curate_build(docs: DataFrame, quality_min_milli: int) -> dict[str, DataFram
     )
 
     # 2-3. near-dup clusters over the exact-kept survivors + election
-    pairs = _verified_pairs_for(exact_kept.select("doc_id", "text"))
+    _, pairs = verified_pairs_for(exact_kept.select("doc_id", "text"), pins)
     from .operators.graph import connected_components
 
     comp = connected_components(pairs, "doc_a", "doc_b")  # (node, component)
@@ -139,9 +142,9 @@ def _curate_build(docs: DataFrame, quality_min_milli: int) -> dict[str, DataFram
         )
     )
     elected = labels.groupBy("cluster").agg(F.min("doc_id").alias("doc_id"))
-    near_kept = exact_kept.join(elected.select("doc_id"), "doc_id").persist()
+    near_kept = pins.pin(exact_kept.join(elected.select("doc_id"), "doc_id"))
     # near-dropped = exact-kept minus the elected survivors, again as an
-    # anti-join of PERSISTED frames (r12; labels' doc_id set IS
+    # anti-join of PINNED frames (r12; labels' doc_id set IS
     # exact_kept's, and elected ⊆ labels, so labels ∖ elected ==
     # exact_kept ∖ near_kept) — the old form re-derived labels+elected
     # (CC-output join + election aggregate) a second time
@@ -151,7 +154,7 @@ def _curate_build(docs: DataFrame, quality_min_milli: int) -> dict[str, DataFram
 
     # 4. quality filter
     scored = near_kept.withColumn("q_milli", _quality_milli())
-    q_kept = scored.where(F.col("q_milli") >= quality_min_milli).persist()
+    q_kept = pins.pin(scored.where(F.col("q_milli") >= quality_min_milli))
     q_dropped = scored.where(F.col("q_milli") < quality_min_milli).select("doc_id")
 
     # 5. leakage-safe split: hash the CLUSTER label, not the doc — every
@@ -204,10 +207,4 @@ def _curate_build(docs: DataFrame, quality_min_milli: int) -> dict[str, DataFram
         "decisions": decisions,
         "splits": splits.select("doc_id", "split"),
         "manifest": manifest,
-        # persisted stage hand-offs, stored so SessionCache.clear()
-        # (→ caching.clear_caches) unpersists them with the entry
-        "_persisted_base": base,
-        "_persisted_exact_kept": exact_kept,
-        "_persisted_near_kept": near_kept,
-        "_persisted_q_kept": q_kept,
     }

@@ -48,42 +48,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import artifact_io
+from .caching import Pins
 from .queries.dedup import (
     MAX_BUCKET_DOCS,
     augmented_docs,
     bands_from_signatures,
     cap_hot_buckets,
+    signatures_for,
     signatures_from_shingles,
+    verified_pairs_for,
     verify_pair_ids,
     _shingles,
 )
-
-
-# ---------------------------------------------------------------------------
-# Chain pieces shared by cold build and append.
-# ---------------------------------------------------------------------------
-
-
-def signatures_for(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) corpus → LSH signature rows (docs of <3 words,
-    which shingle to empty, are excluded — they can never near-dup)."""
-    return signatures_from_shingles(
-        docs.select(
-            "doc_id", _shingles(F.split(F.col("text"), " ")).alias("sh")
-        ).where(F.size("sh") > 0)
-    )
-
-
-def candidate_pair_ids(bands: DataFrame) -> DataFrame:
-    """Band stream → distinct candidate (doc_a < doc_b) id pairs."""
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -101,18 +77,13 @@ def write_dedup_artifact(docs: DataFrame, path: str) -> dict:
     """
     from .operators.graph import connected_components
 
-    sigs = signatures_for(docs).persist()
-    pairs = verify_pair_ids(
-        candidate_pair_ids(cap_hot_buckets(bands_from_signatures(sigs))), sigs
-    ).persist()
-    labels = connected_components(pairs, "doc_a", "doc_b")
-    try:
+    with Pins() as pins:
+        sigs, pairs = verified_pairs_for(docs, pins)
+        pairs = pins.pin(pairs)
+        labels = connected_components(pairs, "doc_a", "doc_b")
         artifact_io.publish(
             KIND, {"signatures": sigs, "pairs": pairs, "labels": labels}, path
         )
-    finally:
-        sigs.unpersist()
-        pairs.unpersist()
     art = artifact_io.load(KIND, docs.sparkSession, path)
     return {
         "n_sigs": art["signatures"].count(),
@@ -143,73 +114,72 @@ def append_dedup_artifact(
         art["pairs"],
         art["labels"],
     )
-    sig_new = signatures_for(new_docs).persist()
-    # Enforce the append-not-upsert contract: a re-appended doc_id would
-    # silently duplicate signature rows, candidate itself, and corrupt
-    # labels.  Cost is bounded by the batch (semi-join on the range-
-    # clustered signature table, min/max-pruned).
-    collisions = (
-        sig_new.select("doc_id")
-        .join(sig_old.select("doc_id"), "doc_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if collisions:
-        sig_new.unpersist()
-        ids = sorted(r.doc_id for r in collisions)
-        raise ValueError(
-            f"append_dedup_artifact: doc_ids already in the artifact "
-            f"(append, not upsert): {ids}{'…' if len(ids) == 5 else ''}"
+    with Pins() as pins:
+        sig_new = pins.pin(signatures_for(new_docs))
+        # Enforce the append-not-upsert contract: a re-appended doc_id would
+        # silently duplicate signature rows, candidate itself, and corrupt
+        # labels.  Cost is bounded by the batch (semi-join on the range-
+        # clustered signature table, min/max-pruned).
+        collisions = (
+            sig_new.select("doc_id")
+            .join(sig_old.select("doc_id"), "doc_id", "left_semi")
+            .limit(5)
+            .collect()
         )
-    sig_all = sig_old.unionByName(sig_new).persist()
+        if collisions:
+            ids = sorted(r.doc_id for r in collisions)
+            raise ValueError(
+                f"append_dedup_artifact: doc_ids already in the artifact "
+                f"(append, not upsert): {ids}{'…' if len(ids) == 5 else ''}"
+            )
+        sig_all = pins.pin(sig_old.unionByName(sig_new))
 
-    # Candidate generation: ONLY new-doc bands probe the (capped) band
-    # stream.  The cap is evaluated over the full stream so bucket
-    # membership matches a cold build's view of the same corpus.
-    bands_all = cap_hot_buckets(bands_from_signatures(sig_all))
-    new_ids = sig_new.select("doc_id")
-    bands_new = bands_all.join(new_ids, "doc_id")
-    n = bands_new.select(F.col("doc_id").alias("na"), "band", "bucket")
-    o = bands_all.select(F.col("doc_id").alias("ob"), "band", "bucket")
-    pair_ids = (
-        n.join(o, ["band", "bucket"])
-        .where(F.col("na") != F.col("ob"))
-        .select(
-            F.least("na", "ob").alias("doc_a"),
-            F.greatest("na", "ob").alias("doc_b"),
+        # Candidate generation: ONLY new-doc bands probe the (capped) band
+        # stream.  The cap is evaluated over the full stream so bucket
+        # membership matches a cold build's view of the same corpus.
+        bands_all = cap_hot_buckets(bands_from_signatures(sig_all))
+        new_ids = sig_new.select("doc_id")
+        bands_new = bands_all.join(new_ids, "doc_id")
+        n = bands_new.select(F.col("doc_id").alias("na"), "band", "bucket")
+        o = bands_all.select(F.col("doc_id").alias("ob"), "band", "bucket")
+        pair_ids = (
+            n.join(o, ["band", "bucket"])
+            .where(F.col("na") != F.col("ob"))
+            .select(
+                F.least("na", "ob").alias("doc_a"),
+                F.greatest("na", "ob").alias("doc_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    # Every candidate has >=1 new side, so pairs_new is disjoint from
-    # pairs_old by construction — the union below needs no dedup.
-    pairs_new = verify_pair_ids(pair_ids, sig_all).persist()
-    pairs_all = pairs_old.unionByName(pairs_new)
+        # Every candidate has >=1 new side, so pairs_new is disjoint from
+        # pairs_old by construction — the union below needs no dedup.
+        pairs_new = pins.pin(verify_pair_ids(pair_ids, sig_all))
+        pairs_all = pairs_old.unionByName(pairs_new)
 
-    # Incremental CC: components touched by a new pair re-enter as star
-    # edges (node—component) together with the new pairs; everything
-    # else carries over.  The min-label property composes: the re-run's
-    # component id is the min over the merged member set.
-    touched_nodes = (
-        pairs_new.select(F.col("doc_a").alias("node"))
-        .unionByName(pairs_new.select(F.col("doc_b").alias("node")))
-        .distinct()
-    )
-    touched_comps = (
-        labels_old.join(touched_nodes, "node").select("component").distinct()
-    )
-    star_edges = labels_old.join(touched_comps, "component").select(
-        F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
-    )
-    relabeled = connected_components(
-        pairs_new.select("doc_a", "doc_b").unionByName(star_edges),
-        "doc_a",
-        "doc_b",
-    )
-    labels_all = labels_old.join(
-        touched_comps, "component", "left_anti"
-    ).unionByName(relabeled.select("node", "component"))
+        # Incremental CC: components touched by a new pair re-enter as star
+        # edges (node—component) together with the new pairs; everything
+        # else carries over.  The min-label property composes: the re-run's
+        # component id is the min over the merged member set.
+        touched_nodes = (
+            pairs_new.select(F.col("doc_a").alias("node"))
+            .unionByName(pairs_new.select(F.col("doc_b").alias("node")))
+            .distinct()
+        )
+        touched_comps = (
+            labels_old.join(touched_nodes, "node").select("component").distinct()
+        )
+        star_edges = labels_old.join(touched_comps, "component").select(
+            F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
+        )
+        relabeled = connected_components(
+            pairs_new.select("doc_a", "doc_b").unionByName(star_edges),
+            "doc_a",
+            "doc_b",
+        )
+        labels_all = labels_old.join(
+            touched_comps, "component", "left_anti"
+        ).unionByName(relabeled.select("node", "component"))
 
-    try:
         stats = {
             "n_new_sigs": sig_new.count(),
             "n_new_pairs": pairs_new.count(),
@@ -218,10 +188,6 @@ def append_dedup_artifact(
         artifact_io.publish(
             KIND, {"signatures": sig_all, "pairs": pairs_all, "labels": labels_all}, path
         )
-    finally:
-        sig_new.unpersist()
-        sig_all.unpersist()
-        pairs_new.unpersist()
     return stats
 
 
@@ -251,6 +217,8 @@ KIND = artifact_io.ArtifactKind(
     ),
     columns=("doc_id", "text"),
     corpus=augmented_docs,
+    # a doc of <3 words gets no signature row, so it is never stored
+    stored_ids=lambda batch: signatures_for(batch).select("doc_id"),
     build=write_dedup_artifact,
     append=append_dedup_artifact,
 )

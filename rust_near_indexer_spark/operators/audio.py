@@ -1,18 +1,15 @@
-"""Audio DSP features over the multimodal media table (north-star §LLM).
+"""Audio features over the multimodal media table (north-star §LLM).
 
 A training-data pipeline that carries audio needs more than "the WAV
-decodes": language/music/noise filtering and dedup run on SPECTRAL
-features.  This module computes the standard front-end — framing, Hann
-window, rFFT magnitude spectrum, spectral centroid / 85% rolloff, RMS
-energy, zero-crossing rate, and an MFCC-style mel cepstrum (triangular
-mel filterbank → log → orthonormal DCT-II) — entirely in vectorized
-numpy inside the Arrow ``mapInPandas`` boundary.
+decodes": it filters and dedups on features of the decoded signal.
+This module is the gate-able path: synthesized WAV payloads go through
+the REAL ``decode_audio`` inside the Arrow ``mapInPandas`` boundary and
+come out as integer-exact summary features (energy, zero crossings,
+peak) an external SQL engine can recompute bit-for-bit.
 
 Scale posture mirrors ``operators/multimodal.py``: PCM bytes never
-cross a shuffle — decode + DSP happen on the scan partition and only
-small integer feature rows continue downstream.  All emitted features
-are floor-milli integers so results stay engine-comparable and
-bit-reproducible across platforms (float spectra are internal only).
+cross a shuffle — decode happens on the scan partition and only small
+integer feature rows continue downstream.
 
 Reference parity note: the reference pipeline (defuse-protocol/
 rust-near-indexer) has no audio path; this is part of the
@@ -24,163 +21,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-
-from .multimodal import decode_audio
-
-
-def hann_window(n: int):
-    """Periodic Hann window (the STFT convention: denominator n, not
-    n-1, so hops tile to a constant overlap-add sum)."""
-    import numpy as np
-
-    return 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(n) / n)
-
-
-def frame_signal(x, frame_len: int, hop: int):
-    """(n,) mono signal → (n_frames, frame_len) strided view copy;
-    trailing partial frame dropped (standard STFT convention)."""
-    import numpy as np
-
-    n_frames = 1 + (len(x) - frame_len) // hop if len(x) >= frame_len else 0
-    if n_frames <= 0:
-        return np.zeros((0, frame_len), x.dtype)
-    idx = np.arange(frame_len)[None, :] + hop * np.arange(n_frames)[:, None]
-    return x[idx]
-
-
-def mel_filterbank(n_mels: int, n_fft: int, sample_rate: int):
-    """(n_mels, n_fft//2+1) triangular filters, HTK mel scale
-    m = 2595·log10(1 + f/700), spanning 0..sr/2."""
-    import numpy as np
-
-    def to_mel(f):
-        return 2595.0 * np.log10(1.0 + f / 700.0)
-
-    def from_mel(m):
-        return 700.0 * (10.0 ** (m / 2595.0) - 1.0)
-
-    edges = from_mel(np.linspace(0.0, to_mel(sample_rate / 2.0), n_mels + 2))
-    bins = np.floor((n_fft + 1) * edges / sample_rate).astype(int)
-    fb = np.zeros((n_mels, n_fft // 2 + 1))
-    for m in range(n_mels):
-        lo, mid, hi = bins[m], bins[m + 1], bins[m + 2]
-        for k in range(lo, mid):
-            if mid > lo:
-                fb[m, k] = (k - lo) / (mid - lo)
-        for k in range(mid, hi):
-            if hi > mid:
-                fb[m, k] = (hi - k) / (hi - mid)
-    return fb
-
-
-def _dct2_orthonormal(n: int):
-    """Orthonormal DCT-II basis (same construction as the JPEG IDCT
-    matrix but n×n): C[k,i] = s(k)·cos(π(2i+1)k/2n)."""
-    import numpy as np
-
-    i = np.arange(n)
-    c = np.cos(np.pi * (2 * i[None, :] + 1) * i[:, None] / (2 * n))
-    c[0] *= np.sqrt(1.0 / n)
-    c[1:] *= np.sqrt(2.0 / n)
-    return c
-
-
-def spectral_features_frame(frames, sample_rate: int, n_mels: int = 16,
-                            n_mfcc: int = 4):
-    """(n_frames, frame_len) windowed-signal matrix → dict of per-frame
-    feature vectors (all float; integerization happens at the operator
-    boundary).  Pure numpy; the test pins the rFFT magnitudes against a
-    naive O(n²) DFT."""
-    import numpy as np
-
-    frame_len = frames.shape[1]
-    win = hann_window(frame_len)
-    spec = np.abs(np.fft.rfft(frames * win[None, :], axis=1))
-    freqs = np.fft.rfftfreq(frame_len, d=1.0 / sample_rate)
-    power = spec.sum(axis=1)
-    safe = np.where(power > 0, power, 1.0)
-    centroid = (spec * freqs[None, :]).sum(axis=1) / safe
-    # 85% spectral rolloff: smallest freq with cum-magnitude >= 0.85 total
-    cum = np.cumsum(spec, axis=1)
-    roll_idx = (cum >= 0.85 * power[:, None]).argmax(axis=1)
-    rolloff = freqs[roll_idx]
-    rms = np.sqrt((frames**2).mean(axis=1))
-    zcr = (np.diff(np.signbit(frames), axis=1) != 0).mean(axis=1)
-    fb = mel_filterbank(n_mels, frame_len, sample_rate)
-    mel = fb @ spec.T  # (n_mels, n_frames)
-    logmel = np.log(mel + 1e-10)
-    mfcc = (_dct2_orthonormal(n_mels) @ logmel)[:n_mfcc].T  # (n_frames, n_mfcc)
-    return {
-        "centroid_hz": centroid,
-        "rolloff_hz": rolloff,
-        "rms": rms,
-        "zcr": zcr,
-        "mfcc": mfcc,
-        "dominant_mel": mel.argmax(axis=0),
-    }
-
-
-AUDIO_FRAME_SCHEMA = (
-    "media_id long, frame_idx long, rms_milli long, zcr_milli long, "
-    "centroid_milli_hz long, rolloff_milli_hz long, dominant_mel long, "
-    "mfcc0_milli long, mfcc1_milli long, mfcc2_milli long, mfcc3_milli long"
-)
-
-
-def audio_spectral_frames(
-    media: DataFrame,
-    frame_len: int = 256,
-    hop: int = 128,
-    n_mels: int = 16,
-) -> DataFrame:
-    """Per-analysis-frame spectral features over ``mapInPandas``:
-    decode each RIFF/WAVE payload (``decode_audio``, first channel),
-    frame at ``frame_len``/``hop``, and emit one integer feature row
-    per STFT frame.  Non-audio / undecodable payloads are dropped.
-
-    The 100 TB shape: one Arrow batch in, a bounded multiple of rows
-    out (≈ seconds·sr/hop per clip); no shuffle until the caller
-    aggregates the small feature rows.
-    """
-
-    def _feat(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        cols = AUDIO_FRAME_SCHEMA.replace(" long", "").split(", ")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    samples, rate = decode_audio(payload, {})
-                except Exception:  # non-audio or codec-less format: drop
-                    continue
-                if samples.ndim > 1:
-                    samples = samples[:, 0]
-                frames = frame_signal(samples.astype(np.float64), frame_len, hop)
-                if not len(frames):
-                    continue
-                f = spectral_features_frame(frames, rate, n_mels=n_mels)
-                n = len(frames)
-                out["media_id"] += [mid] * n
-                out["frame_idx"] += list(range(n))
-                out["rms_milli"] += [int(v) for v in
-                                     np.floor(f["rms"] * 1000)]
-                out["zcr_milli"] += [int(v) for v in
-                                     np.floor(f["zcr"] * 1000)]
-                out["centroid_milli_hz"] += [int(v) for v in
-                                             np.floor(f["centroid_hz"] * 1000)]
-                out["rolloff_milli_hz"] += [int(v) for v in
-                                            np.floor(f["rolloff_hz"] * 1000)]
-                out["dominant_mel"] += [int(v) for v in f["dominant_mel"]]
-                for j in range(4):
-                    out[f"mfcc{j}_milli"] += [int(v) for v in
-                                              np.floor(f["mfcc"][:, j] * 1000)]
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_feat, schema=AUDIO_FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,11 @@ DAG here: state resolution is a fixpoint over the whole bounded input,
 which is equivalent for ordered replay because mapping validity windows
 are checked against the reader's block height.  A streaming micro-batch
 runs the same DAG with the carried state table added to the seeds.
+
+What the DAG persists (the flattened outcomes and the resolved reader
+rows) is pinned in a ``caching.Pins`` that the returned tables carry: a
+failure inside the call releases it, and after a return the caller
+closes ``tables.pins`` once every table has been consumed.
 """
 
 from __future__ import annotations
@@ -14,21 +19,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .. import schemas
+from ..caching import Pins
 from . import bronze, state
 
 
 class BronzeTables(dict):
     """The bronze output tables by name.  ``mappings`` is the resolved
-    correlation state; ``release()`` unpersists what the DAG persisted."""
+    correlation state; ``pins`` owns what the DAG persisted."""
 
-    def __init__(self, tables: dict, mappings: DataFrame, persisted: list) -> None:
+    def __init__(self, tables: dict, mappings: DataFrame, pins: Pins) -> None:
         super().__init__(tables)
         self.mappings = mappings
-        self._persisted = persisted
-
-    def release(self) -> None:
-        for df in self._persisted:
-            df.unpersist()
+        self.pins = pins
 
 
 def run_bronze(
@@ -61,45 +63,44 @@ def run_bronze(
     there are no forward cross-batch dependencies because a parent
     executes before its children are spawned.
 
-    The caller owns the persisted intermediates and frees them with
-    ``release()`` once every table has been consumed.
+    The caller owns the persisted intermediates and closes
+    ``tables.pins`` once every table has been consumed.
     """
     if block_end is not None:
         blocks = blocks.where(blocks["block_height"] <= block_end)
 
-    flat_txs = bronze.flatten_transactions(blocks)
-    flat_outcomes = bronze.flatten_outcomes(blocks).persist()
+    # the fixpoint runs eagerly, so a failure inside this block releases
+    # the pins before the caller ever holds them
+    with Pins() as pins:
+        flat_txs = bronze.flatten_transactions(blocks)
+        flat_outcomes = pins.pin(bronze.flatten_outcomes(blocks))
 
-    seeds = state.seed_mappings(flat_txs, accounts)
-    if carried is not None:
-        seeds = carried.unionByName(seeds)
-    edges = state.child_edges(flat_outcomes, accounts)
-    try:
+        seeds = state.seed_mappings(flat_txs, accounts)
+        if carried is not None:
+            seeds = carried.unionByName(seeds)
+        edges = state.child_edges(flat_outcomes, accounts)
         mappings = state.resolve_mappings(seeds, edges, ttl_blocks)
-    except BaseException:
-        # the fixpoint runs eagerly: a failure there ends the call before
-        # the caller holds a release() handle
-        flat_outcomes.unpersist()
-        raise
 
-    # resolved answers both read rules and feeds the outcome, receipt and
-    # event projections; without a persist every consumer action replays
-    # the join/agg chain (r12 — measured via the bronze blocks/s bench,
-    # which counts all four tables; same pattern as the flat_outcomes
-    # persist above)
-    resolved = state.resolve(
-        state.readers_from_outcomes(flat_outcomes), mappings, accounts, ttl_blocks
-    ).persist()
+        # resolved answers both read rules and feeds the outcome, receipt
+        # and event projections; unpinned, every consumer action replays
+        # the join/agg chain (r12 — measured via the bronze blocks/s
+        # bench, which counts all four tables; same pattern as the
+        # flat_outcomes pin above)
+        resolved = pins.pin(
+            state.resolve(
+                state.readers_from_outcomes(flat_outcomes), mappings, accounts, ttl_blocks
+            )
+        )
 
-    events = bronze.event_rows(flat_outcomes, resolved.where("event_readable"), accounts)
-    out: dict[str, DataFrame] = {"events": events}
-    if not events_only:
-        outcomes_rows, receipt_rows = bronze.outcome_and_receipt_rows(
-            flat_outcomes, resolved, accounts
-        )
-        out["transactions"] = bronze.transaction_rows(flat_txs, accounts)
-        out["execution_outcomes"] = outcomes_rows.unionByName(
-            bronze.tx_outcome_rows(flat_txs, accounts)
-        )
-        out["receipts"] = receipt_rows
-    return BronzeTables(out, mappings, [flat_outcomes, resolved])
+        events = bronze.event_rows(flat_outcomes, resolved.where("event_readable"), accounts)
+        out: dict[str, DataFrame] = {"events": events}
+        if not events_only:
+            outcomes_rows, receipt_rows = bronze.outcome_and_receipt_rows(
+                flat_outcomes, resolved, accounts
+            )
+            out["transactions"] = bronze.transaction_rows(flat_txs, accounts)
+            out["execution_outcomes"] = outcomes_rows.unionByName(
+                bronze.tx_outcome_rows(flat_txs, accounts)
+            )
+            out["receipts"] = receipt_rows
+        return BronzeTables(out, mappings, pins.pop_all())

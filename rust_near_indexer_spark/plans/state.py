@@ -53,7 +53,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import materialize_observed
+from ..caching import Pins, materialize_observed
 from .bronze import of_interest
 
 log = logging.getLogger(__name__)
@@ -118,8 +118,8 @@ def resolve_mappings(
     the loop when it reaches zero.
     """
     n = F.count(F.lit(1)).alias("n")
-    edges = edges.persist()
-    try:
+    with Pins() as pins:
+        edges = pins.pin(edges)
         frontier, seen = materialize_observed(seeds, n)
         mappings = frontier
         for _ in range(max_depth):
@@ -152,8 +152,6 @@ def resolve_mappings(
                 max_depth,
                 seen["n"],
             )
-    finally:
-        edges.unpersist()
     return mappings
 
 

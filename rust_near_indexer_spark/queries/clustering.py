@@ -141,7 +141,7 @@ def _final_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     resulting K-row centroid table is materialized, so reuse by
     ``semantic_dedup`` costs nothing (same sharing rule as the LSH
     pair cache in dedup.py)."""
-    def build() -> DataFrame:
+    def build(_pins) -> DataFrame:
         vec = _quantized(spark, sf_dir)
         cen = materialize(
             vec.where(

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import SessionCache, materialize
+from ..caching import Pins, SessionCache, materialize
 from ..canonical import duck_fingerprint, duck_hash60, fingerprint, hash60
 from ..tables import load, spread
 from . import register
@@ -242,24 +242,6 @@ _SIMHASH_TERMS_SQL = " + ".join(
 )
 
 
-# Shingle sets are consumed from multiple branches of the minhash chain
-# AND (4×) by the prefix-filter join's tokenize/size/verify branches —
-# persist once per (session, sf_dir), same pattern as _DEDUP_CACHE.
-_SHINGLE_CACHE = SessionCache("dedup.shingles")
-
-
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        aug = augmented_docs(spark, sf_dir)
-        return (
-            aug.select("doc_id", _shingles(F.split(F.col("text"), " ")).alias("sh"))
-            .where(F.size("sh") > 0)
-            .persist()
-        )
-
-    return _SHINGLE_CACHE.get_or_build(spark, (sf_dir,), build)
-
-
 def cap_hot_buckets(bands: DataFrame, cap: int = MAX_BUCKET_DOCS) -> DataFrame:
     """Drop every (band, bucket) group larger than ``cap``.
 
@@ -370,11 +352,11 @@ def _dedup_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     production consumer — READS the range-clustered parquet instead of
     re-deriving the LSH chain and the iterative CC fixpoint."""
 
-    def build() -> dict[str, DataFrame]:
+    def build(pins: Pins) -> dict[str, DataFrame]:
         from ..artifact_io import ensure
         from ..dedup_artifact import KIND
 
-        return {k: v.persist() for k, v in ensure(KIND, spark, sf_dir).items()}
+        return {k: pins.pin(v) for k, v in ensure(KIND, spark, sf_dir).items()}
 
     return _DEDUP_CACHE.get_or_build(spark, (sf_dir,), build)
 
@@ -385,17 +367,6 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pair_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup_index(spark, sf_dir)["labels"]
-
-
-def _verified_pairs_for(docs: DataFrame) -> DataFrame:
-    """Verified near-dup pairs for an ARBITRARY (doc_id, text) corpus —
-    the corpus-parameterized face of the LSH chain (curation.py composes
-    it over its own exact-dedup survivors, while the registry query
-    binds it to the augmented gate corpus via _doc_shingles)."""
-    sh = docs.select(
-        "doc_id", _shingles(F.split(F.col("text"), " ")).alias("sh")
-    ).where(F.size("sh") > 0)
-    return _verified_pairs_for_shingles(sh)
 
 
 def signatures_from_shingles(shingled: DataFrame) -> DataFrame:
@@ -454,18 +425,37 @@ def verify_pair_ids(pair_ids: DataFrame, sigs: DataFrame) -> DataFrame:
     )
 
 
-def _verified_pairs_for_shingles(shingled: DataFrame) -> DataFrame:
-    docs = signatures_from_shingles(shingled).persist()
-    bands = cap_hot_buckets(bands_from_signatures(docs))
+def signatures_for(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) corpus → LSH signature rows (docs of <3 words,
+    which shingle to empty, are excluded — they can never near-dup)."""
+    return signatures_from_shingles(
+        docs.select(
+            "doc_id", _shingles(F.split(F.col("text"), " ")).alias("sh")
+        ).where(F.size("sh") > 0)
+    )
+
+
+def candidate_pair_ids(bands: DataFrame) -> DataFrame:
+    """Band stream → distinct candidate (doc_a < doc_b) id pairs."""
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-    pair_ids = (
+    return (
         a.join(b, ["band", "bucket"])
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return verify_pair_ids(pair_ids, docs)
+
+
+def verified_pairs_for(docs: DataFrame, pins: Pins) -> tuple[DataFrame, DataFrame]:
+    """The LSH chain over an ARBITRARY (doc_id, text) corpus: its
+    signatures, pinned in ``pins`` (the band stream and verification
+    both read them), and its verified near-dup pairs.  The dedup
+    artifact build (hence the registry) and curation share it."""
+    sigs = pins.pin(signatures_for(docs))
+    return sigs, verify_pair_ids(
+        candidate_pair_ids(cap_hot_buckets(bands_from_signatures(sigs))), sigs
+    )
 
 
 # ---------------------------------------------------------------------------

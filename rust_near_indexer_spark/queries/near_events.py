@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import canonical, schemas
-from ..caching import SessionCache, materialize, materialize_observed
+from ..caching import Pins, SessionCache, materialize, materialize_observed
 from ..plans.pipeline import run_bronze
 from ..session import tune
 from . import register
@@ -53,23 +53,24 @@ def load_assets(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(ASSETS_PATH)
 
 
-# One bronze run feeds every query below; persisted per (session, mode) so
+# One bronze run feeds every query below; pinned per (session, mode) so
 # the driver's sequential query loop doesn't recompute the state fixpoint.
-# clear_caches() unpersists the tables and release()s the DAG's own persists.
+# The cache entry owns the tables' pins and the DAG's own.
 _CACHE = SessionCache("near_events.bronze")
 
 
 def bronze_tables(
     spark: SparkSession, block_end: int | None = None, events_only: bool = False
 ) -> dict[str, DataFrame]:
-    def build() -> dict[str, DataFrame]:
+    def build(pins: Pins) -> dict[str, DataFrame]:
         tables = run_bronze(
             load_blocks(spark),
             ttl_blocks=TTL_BLOCKS,
             block_end=block_end,
             events_only=events_only,
         )
-        tables.update({k: v.persist() for k, v in tables.items()})
+        pins.enter_context(tables.pins)
+        tables.update({k: pins.pin(v) for k, v in tables.items()})
         return tables
 
     return _CACHE.get_or_build(spark, (block_end, events_only), build)
@@ -316,14 +317,14 @@ def receipt_dag_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = bronze_tables(spark)
     node = F.regexp_replace(F.col("execution_outcome_id"), "^eo_", "")
     oc = t["execution_outcomes"]
-    edges = oc.select(
-        node.alias("parent"), F.explode("receipt_ids").alias("child")
-    ).persist()
     tx = t["transactions"].select(F.col("transaction_hash").alias("node"))
     # each level is eagerly materialized (caching.materialize) so the
     # final union never recomputes the iteration chain; the level's row
     # count rides the same job and ends the walk at the first empty level
-    try:
+    with Pins() as pins:
+        edges = pins.pin(
+            oc.select(node.alias("parent"), F.explode("receipt_ids").alias("child"))
+        )
         frontier = materialize(
             oc.select(node.alias("node"))
             .join(tx, "node", "left_semi")
@@ -341,8 +342,6 @@ def receipt_dag_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not seen["n"]:
                 break
             levels.append(frontier)
-    finally:
-        edges.unpersist()
     walk = levels[0]
     for lvl in levels[1:]:
         walk = walk.unionByName(lvl)

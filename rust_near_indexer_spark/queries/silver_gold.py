@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..caching import SessionCache
+from ..caching import Pins, SessionCache
 from ..plans import gold, silver
 from . import register
 from .near_events import ASSETS_PATH, bronze_tables, expected_path, load_assets
@@ -262,7 +262,7 @@ _SILVER_CACHE = SessionCache("silver_gold.frames")
 
 
 def _silver(spark: SparkSession, which: str) -> DataFrame:
-    def build() -> DataFrame:
+    def build(pins: Pins) -> DataFrame:
         ev = _events(spark)
         if which == "nep245":
             df = silver.nep_245_events(ev)
@@ -274,7 +274,7 @@ def _silver(spark: SparkSession, which: str) -> DataFrame:
             df = silver.dip4_transfer(ev, (schemas.STAGING_CONTRACT,))
         else:  # pragma: no cover - internal key set
             raise KeyError(which)
-        return df.persist()
+        return pins.pin(df)
 
     return _SILVER_CACHE.get_or_build(spark, (which,), build)
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import SessionCache
+from ..caching import Pins, SessionCache
 from ..tables import load, spread
 from . import register
 
@@ -277,11 +277,11 @@ def _ann_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     range-clustered parquet instead of re-deriving quantization, IVF
     assignment, and PQ encoding per query."""
 
-    def build() -> dict[str, DataFrame]:
+    def build(pins: Pins) -> dict[str, DataFrame]:
         from ..ann_artifact import KIND
         from ..artifact_io import ensure
 
-        return {k: v.persist() for k, v in ensure(KIND, spark, sf_dir).items()}
+        return {k: pins.pin(v) for k, v in ensure(KIND, spark, sf_dir).items()}
 
     return _ANN_CACHE.get_or_build(spark, (sf_dir,), build)
 

@@ -9,7 +9,7 @@ The reference's sink layer re-expressed Spark-first:
   parquet writes are atomic-per-task and rely on Spark task retry.
 - **S20/§1.3** ReplacingMergeTree dedup: every append carries a
   monotonically increasing ``ingest_seq``; ``read_final`` is the FINAL
-  read (last-write-wins per declared PK via row_number), and ``compact``
+  read (``last_write_wins`` per declared PK), and ``compact``
   is the explicit merge that physically drops superseded rows — the same
   eventual-dedup model as ClickHouse (duplicates coexist on disk until a
   merge; reads through FINAL are always exact).
@@ -81,6 +81,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import metrics, schemas
+from .caching import Pins
 from .tracing import TRACER
 
 HEIGHT_BUCKET_SIZE = 10_000
@@ -257,16 +258,21 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
-def read_final(spark: SparkSession, path: str, pk: tuple) -> DataFrame:
-    """FINAL read (S20): last-write-wins per PK — greatest ingest_seq wins,
-    matching ReplacingMergeTree's keep-latest-version merge rule."""
-    df = spark.read.parquet(path)
+def last_write_wins(df: DataFrame, pk: tuple, *drop: str) -> DataFrame:
+    """Keep one row per PK, the one with the greatest ingest_seq
+    (ReplacingMergeTree's keep-latest-version merge rule), and drop
+    ``drop``."""
     w = Window.partitionBy(*pk).orderBy(F.desc("ingest_seq"))
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .drop("__rn", "ingest_seq", "height_bucket")
+        .drop("__rn", *drop)
     )
+
+
+def read_final(spark: SparkSession, path: str, pk: tuple) -> DataFrame:
+    """FINAL read (S20): last-write-wins per PK."""
+    return last_write_wins(spark.read.parquet(path), pk, "ingest_seq", "height_bucket")
 
 
 def _part_inventory(root: str) -> frozenset:
@@ -332,13 +338,7 @@ def compact(spark: SparkSession, path: str, pk: tuple) -> None:
         # (not reset to 0): a rescued straggler then compares against
         # the base exactly as it would have uncompacted — read_final
         # drops the column, so downstream fingerprints are unchanged
-        df = spark.read.parquet(path)
-        w = Window.partitionBy(*pk).orderBy(F.desc("ingest_seq"))
-        final = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "height_bucket")
-        )
+        final = last_write_wins(spark.read.parquet(path), pk, "height_bucket")
 
         def build_into(tmp: str) -> None:
             _with_bucket(final).write.mode("overwrite").partitionBy(
@@ -421,13 +421,6 @@ def append_tables(
     and sets the R22 per-asset-type captured gauge from a row count that
     rides the write job via ``observe`` — zero extra Spark jobs."""
     tables = dict(tables)
-    events = None
-    if with_silver:
-        from .plans.silver import all_silver_tables
-
-        events = tables["events"].persist()
-        for sname, sdf in all_silver_tables(events).items():
-            tables[f"silver/{sname}"] = sdf
 
     def append_observed(df: DataFrame, path: str) -> int:
         # a fresh Observation per attempt: one attaches only once
@@ -436,7 +429,16 @@ def append_tables(
         return obs.get["n"]
 
     paths = {}
-    try:
+    # the events pin only exists to share the scan across the 9 silver
+    # writes — released once they're flushed instead of pinning the batch
+    # in executor memory for the rest of the session (ADVICE r04 #4)
+    with Pins() as pins:
+        if with_silver:
+            from .plans.silver import all_silver_tables
+
+            events = pins.pin(tables["events"])
+            for sname, sdf in all_silver_tables(events).items():
+                tables[f"silver/{sname}"] = sdf
         for name, df in tables.items():
             path = os.path.join(base_dir, name)
             with TRACER.span("sink_append", table=name) as sp:
@@ -444,13 +446,6 @@ def append_tables(
                 sp.attributes["rows"] = n
             metrics.ASSETS_IN_BLOCK_CAPTURED_TOTAL.labels(asset_type=name).set(n)
             paths[name] = path
-    finally:
-        # the events cache only exists to share the scan across the 9
-        # silver writes — drop it once they're flushed instead of pinning
-        # the batch in executor memory for the rest of the session
-        # (ADVICE r04 #4)
-        if events is not None:
-            events.unpersist()
     return paths
 
 
@@ -471,10 +466,8 @@ def ingest_bronze(
     tables = run_bronze(
         blocks, accounts=accounts, block_end=block_end, events_only=events_only
     )
-    try:
+    with tables.pins:
         return append_tables(tables, base_dir, ingest_seq, with_silver)
-    finally:
-        tables.release()
 
 
 # ---------------------------------------------------------------------------
@@ -570,11 +563,11 @@ def write_training_shards(
     parallel per-shard write.  Returns {"n_shards": ..., "n_docs": ...}.
     """
     assign = manifest.select("doc_id", "source", "shard_id")
-    # Persist the joined rows so the write plus the two stat actions
-    # cost ONE corpus-join scan (the write populates the cache; the
-    # counts read it), honoring the one-pass claim above.
-    rows = docs.select("doc_id", text_col).join(assign, "doc_id").persist()
-    try:
+    # Pin the joined rows so the write plus the two stat actions cost ONE
+    # corpus-join scan (the write populates the cache; the counts read
+    # it), honoring the one-pass claim above.
+    with Pins() as pins:
+        rows = pins.pin(docs.select("doc_id", text_col).join(assign, "doc_id"))
         (
             rows.repartition("source", "shard_id")
             .write.mode("overwrite")
@@ -583,6 +576,4 @@ def write_training_shards(
         )
         n_docs = rows.count()
         n_shards = rows.select("source", "shard_id").distinct().count()
-    finally:
-        rows.unpersist()
     return {"n_shards": n_shards, "n_docs": n_docs}

@@ -11,8 +11,8 @@ rebuilt nightly.
 
 Exactly-once: ``foreachBatch`` may replay a batch after a failure.
 Both artifacts publish atomically (symlink swap), so a replayed batch
-is either FULLY present (its ids all collide with stored ones → the
-fold is a no-op skip) or fully absent (→ normal append); a PARTIAL
+is either FULLY present (every id it stores collides with a stored one
+→ the fold is a no-op skip) or fully absent (→ normal append); a PARTIAL
 overlap cannot be produced by a crash, so the append guards treat it
 as what it really is — corrupt input — and raise.  This makes the
 collision check double as the replay detector (``fold_batch`` below;
@@ -33,14 +33,15 @@ def fold_batch(
     """Fold one micro-batch into the ``kind`` artifact at ``path``.
 
     Returns the action taken: ``"build"`` (first batch), ``"append"``,
-    or ``"skip"`` (replayed batch — every id already stored)."""
+    or ``"skip"`` (replayed batch — every id the kind stores is already
+    stored)."""
     batch = batch.select(*kind.columns)
     if not is_built(path):
         kind.build(batch, path)
         return "build"
     key = kind.columns[0]
     stored = load(kind, spark, path)[next(iter(kind.tables))].select(key)
-    if batch.select(key).join(stored, key, "left_anti").isEmpty():
+    if kind.stored_ids(batch).join(stored, key, "left_anti").isEmpty():
         return "skip"  # replay of a fully-folded batch
     kind.append(spark, path, batch)
     return "append"

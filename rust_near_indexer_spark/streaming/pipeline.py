@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .. import metrics, schemas, sinks
 from ..artifact_io import publish_artifact
+from ..caching import Pins
 from ..plans.pipeline import run_bronze
 from ..plans.state import DEFAULT_TTL_BLOCKS
 from ..tracing import TRACER
@@ -91,44 +92,39 @@ def process_batch(
     span per batch (the handle_streamer_message span,
     handlers/mod.rs:58-65) with per-sink child spans; a no-op unless
     tracing.init_tracing configured an exporter."""
-    with TRACER.span("handle_block_batch", batch_id=batch_id) as sp:
+    with TRACER.span("handle_block_batch", batch_id=batch_id) as sp, Pins() as pins:
         sp.attributes["n_blocks"] = 0
         # One JSON parse per batch: blocks feeds both flattens (each read
         # by several consumers).  The max-height/count job fills the cache,
         # answers the empty-trigger check and feeds the TTL prune and the
         # R22 throughput/height metrics.
-        blocks = blocks.persist()
-        tables = None
-        try:
-            agg = blocks.agg(
-                F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
-            ).collect()[0]
-            max_h, n = agg["h"], int(agg["n"])
-            if not n:
-                return 0
-            tables = run_bronze(
-                blocks,
-                accounts,
-                ttl_blocks,
-                events_only=events_only,
-                carried=_load_state(blocks.sparkSession, state_dir),
+        blocks = pins.pin(blocks)
+        agg = blocks.agg(
+            F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        max_h, n = agg["h"], int(agg["n"])
+        if not n:
+            return 0
+        tables = run_bronze(
+            blocks,
+            accounts,
+            ttl_blocks,
+            events_only=events_only,
+            carried=_load_state(blocks.sparkSession, state_dir),
+        )
+        pins.enter_context(tables.pins)
+        sinks.append_tables(tables, out_dir, batch_id, with_silver)
+        metrics.BLOCK_PROCESSED_TOTAL.inc(n)
+        metrics.LATEST_BLOCK_HEIGHT.set(max_h)
+        # TTL prune: a mapping written at W is unreadable once every
+        # future reader height exceeds W + ttl; batches arrive in
+        # height order, so pruning against the batch's max height is
+        # safe.
+        with TRACER.span("save_state", max_block_height=int(max_h)):
+            _save_state(
+                tables.mappings.where(F.col("write_block") >= max_h - ttl_blocks),
+                state_dir,
             )
-            sinks.append_tables(tables, out_dir, batch_id, with_silver)
-            metrics.BLOCK_PROCESSED_TOTAL.inc(n)
-            metrics.LATEST_BLOCK_HEIGHT.set(max_h)
-            # TTL prune: a mapping written at W is unreadable once every
-            # future reader height exceeds W + ttl; batches arrive in
-            # height order, so pruning against the batch's max height is
-            # safe.
-            with TRACER.span("save_state", max_block_height=int(max_h)):
-                _save_state(
-                    tables.mappings.where(F.col("write_block") >= max_h - ttl_blocks),
-                    state_dir,
-                )
-        finally:
-            if tables is not None:
-                tables.release()
-            blocks.unpersist()
         sp.attributes["n_blocks"] = n
         return n
 

@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from .caching import SessionCache
 from .session import tune
 
-# logical-plan memo for load(); holds DataFrames (no persisted data),
-# so clear_caches()'s unpersist pass is a no-op on it by design
+# logical-plan memo for load(); holds DataFrames and pins nothing, so
+# clear_caches() only drops its entries
 _DF_CACHE = SessionCache("tables.load")
 
 _log = logging.getLogger(__name__)
@@ -130,7 +130,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     tune(spark)
     return _DF_CACHE.get_or_build(
-        spark, (sf_dir, name), lambda: _load_uncached(spark, sf_dir, name)
+        spark, (sf_dir, name), lambda _pins: _load_uncached(spark, sf_dir, name)
     )
 
 

@@ -9,16 +9,18 @@
    crash (``sequence(1, n-4)`` descends through 0 unclamped).
 3. ``SessionCache``: keys are applicationId-based (id() reuse of a
    GC'd session can NOT alias a new session into stale plans) and
-   ``clear_caches()`` actually unpersists.
+   ``clear_caches()`` actually releases each entry's pins.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from rust_near_indexer_spark.caching import SessionCache, clear_caches
 from rust_near_indexer_spark.queries import load_registry
+from rust_near_indexer_spark.tables import load
 
 from .oracle_harness import compare, duck_connect
 
@@ -98,7 +100,7 @@ def test_session_cache_keys_by_application_id():
     builds = []
 
     def builder(tag):
-        def build():
+        def build(pins):
             builds.append(tag)
             return tag
 
@@ -119,15 +121,38 @@ def test_session_cache_keys_by_application_id():
 
 
 def test_clear_caches_unpersists(spark, sf_dir):
-    """VERDICT r05 #5: after clear_caches() the shared shingle table is
-    no longer pinned (storage level NONE) and a fresh call rebuilds."""
-    from rust_near_indexer_spark.queries.dedup import _SHINGLE_CACHE, _doc_shingles
+    """VERDICT r05 #5: after clear_caches() a cache entry's pinned frame
+    is no longer pinned (storage level NONE) and a fresh call rebuilds."""
+    cache = SessionCache("test.pinned")
 
-    df = _doc_shingles(spark, sf_dir)
+    def docs():
+        return cache.get_or_build(
+            spark,
+            (sf_dir,),
+            lambda pins: pins.pin(load(spark, sf_dir, "documents").select("doc_id")),
+        )
+
+    df = docs()
     assert df.storageLevel.useMemory or df.storageLevel.useDisk
-    assert len(_SHINGLE_CACHE) >= 1
+    assert len(cache) == 1
     clear_caches()
-    assert len(_SHINGLE_CACHE) == 0
+    assert len(cache) == 0
     assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    df2 = _doc_shingles(spark, sf_dir)  # rebuilds cleanly
+    df2 = docs()  # rebuilds cleanly
     assert df2.storageLevel.useMemory or df2.storageLevel.useDisk
+    clear_caches()
+
+
+def test_session_cache_releases_a_failed_build(spark):
+    """A builder that raises leaves no entry and nothing pinned."""
+    cache = SessionCache("test.failed")
+    df = spark.range(5)
+
+    def build(pins):
+        pins.pin(df)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        cache.get_or_build(spark, ("k",), build)
+    assert len(cache) == 0
+    assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)

@@ -5,6 +5,8 @@ A function or class that no package module, entry point (``bench.py``,
 dead code: nothing can call it, and no test pins what it does.  The scan
 is textual (an identifier anywhere, comments and strings included), so
 it only catches names that appear nowhere at all; it needs no Spark.
+The same no-Spark scans keep the env-var table and the one persist owner
+honest.
 """
 
 from __future__ import annotations
@@ -64,3 +66,18 @@ def test_every_env_var_is_in_the_readme_table():
     section = readme.split("## Configuration", 1)[1].split("\n## ", 1)[0]
     documented = set(re.findall(r"^\| `([A-Z0-9_]+)` \|", section, re.M))
     assert read == documented
+
+
+def test_only_caching_persists():
+    """``caching.Pins`` is the one owner of persisted frames: no other
+    package module persists, caches or unpersists a DataFrame itself, so
+    no frame can be pinned without an owner that releases it."""
+    spelled = []
+    for path in _py_files(PKG):
+        if os.path.basename(path) == "caching.py":
+            continue
+        with open(path, encoding="utf-8") as f:
+            for n, line in enumerate(f, 1):
+                if re.search(r"\.persist\(|\.cache\(\)|\.unpersist\(", line):
+                    spelled.append(f"{os.path.relpath(path, ROOT)}:{n}")
+    assert spelled == []

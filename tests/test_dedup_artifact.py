@@ -19,12 +19,9 @@ import pytest
 
 from rust_near_indexer_spark import artifact_io
 from rust_near_indexer_spark import dedup_artifact as da
-from rust_near_indexer_spark.caching import clear_caches
+from rust_near_indexer_spark.caching import Pins, clear_caches
 from rust_near_indexer_spark.operators.graph import connected_components
-from rust_near_indexer_spark.queries.dedup import (
-    _doc_shingles,
-    _verified_pairs_for_shingles,
-)
+from rust_near_indexer_spark.queries.dedup import augmented_docs, verified_pairs_for
 
 
 def _docs(spark, rows):
@@ -67,15 +64,17 @@ def test_cold_build_round_trip(spark, tmp_path):
     # every family of 3 variants pairs up fully: 3 pairs per family
     assert stats["n_pairs"] >= 9
     # reference recomputation: same pairs, same labels
-    sigs = da.signatures_for(_docs(spark, rows))
     from rust_near_indexer_spark.queries.dedup import (
         bands_from_signatures,
+        candidate_pair_ids,
         cap_hot_buckets,
+        signatures_for,
         verify_pair_ids,
     )
 
+    sigs = signatures_for(_docs(spark, rows))
     cold_pairs = verify_pair_ids(
-        da.candidate_pair_ids(cap_hot_buckets(bands_from_signatures(sigs))),
+        candidate_pair_ids(cap_hot_buckets(bands_from_signatures(sigs))),
         sigs,
     )
     assert _pairs_set(art["pairs"]) == _pairs_set(cold_pairs)
@@ -158,8 +157,9 @@ def test_gate_corpus_artifact_matches_cold_chain(spark, sf_dir, tmp_path, monkey
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "base"))
     clear_caches()
     art = artifact_io.ensure(da.KIND, spark, sf_dir)
-    cold = _verified_pairs_for_shingles(_doc_shingles(spark, sf_dir))
-    assert _pairs_set(art["pairs"]) == _pairs_set(cold)
+    with Pins() as pins:
+        _, cold = verified_pairs_for(augmented_docs(spark, sf_dir), pins)
+        assert _pairs_set(art["pairs"]) == _pairs_set(cold)
     # the gate path sits under the one base dir, per kind, keyed by the
     # corpus fingerprint
     path = artifact_io.gate_path(da.KIND, spark, sf_dir)

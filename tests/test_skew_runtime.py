@@ -86,14 +86,12 @@ def test_grouped_rank_spreads_dominant_group(spark):
 
 
 def test_hot_bucket_cap_engages_at_runtime(spark):
-    from rust_near_indexer_spark.dedup_artifact import (
-        candidate_pair_ids,
-        signatures_for,
-    )
     from rust_near_indexer_spark.queries.dedup import (
         MAX_BUCKET_DOCS,
         bands_from_signatures,
+        candidate_pair_ids,
         cap_hot_buckets,
+        signatures_for,
         verify_pair_ids,
     )
 

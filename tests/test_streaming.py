@@ -102,13 +102,94 @@ def test_streaming_restart_is_noop(spark, chunked_blocks_dir, tmp_path):
     assert before == after
 
 
-@pytest.mark.parametrize("entry", ["ingest_bronze", "process_batch"])
+_NEAR_DUPS = "the quick brown fox jumps over the lazy dog near the river"
+
+
+def _near_dup_docs(spark):
+    return spark.createDataFrame(
+        [(1, _NEAR_DUPS, "web"), (2, _NEAR_DUPS + " bank", "web"), (3, "short", "web")],
+        "doc_id long, text string, source string",
+    )
+
+
+def _curate(spark, tmp_path, monkeypatch):
+    from rust_near_indexer_spark import caching, curation
+
+    assert curation.curate(_near_dup_docs(spark))["decisions"].count() == 3
+    caching.clear_caches()
+
+
+def _write_dedup_artifact(spark, tmp_path, monkeypatch):
+    from rust_near_indexer_spark import dedup_artifact
+    from rust_near_indexer_spark.operators import graph
+
+    def fail(*a, **k):
+        raise RuntimeError("injected components failure")
+
+    monkeypatch.setattr(graph, "connected_components", fail)
+    with pytest.raises(RuntimeError, match="injected components failure"):
+        dedup_artifact.write_dedup_artifact(
+            _near_dup_docs(spark).select("doc_id", "text"), str(tmp_path / "art")
+        )
+
+
+def _append_ann_artifact(spark, tmp_path, monkeypatch):
+    import math
+
+    from rust_near_indexer_spark import ann_artifact
+
+    def emb(ids):
+        rows = []
+        for i in ids:
+            raw = [math.sin(0.7 * i + 1.3 * j) for j in range(64)]
+            norm = math.sqrt(sum(x * x for x in raw))
+            rows.append((i, [x / norm for x in raw], i % 7))
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+
+    path = str(tmp_path / "ann")
+    ann_artifact.write_ann_artifact(emb(range(300, 530)), path)
+    with pytest.raises(ValueError, match="donor range"):
+        ann_artifact.append_ann_artifact(spark, path, emb([110]))
+
+
+def _write_training_shards(spark, tmp_path, monkeypatch):
+    docs = spark.createDataFrame([(i, f"doc {i}") for i in range(6)], "doc_id long, text string")
+    manifest = spark.createDataFrame(
+        [(i, "web", i % 2) for i in range(6)], "doc_id long, source string, shard_id long"
+    )
+    stats = sinks.write_training_shards(docs, manifest, str(tmp_path / "shards"))
+    assert stats == {"n_shards": 2, "n_docs": 6}
+
+
+def _receipt_dag_depths(spark, tmp_path, monkeypatch):
+    from rust_near_indexer_spark import caching
+    from rust_near_indexer_spark.queries import near_events
+
+    # the walk reads the bronze tables of the fixture blocks, not an sf dir
+    assert near_events.receipt_dag_depths(spark, None).count() > 0
+    caching.clear_caches()
+
+
+_OWNERS = {
+    "curate": _curate,
+    "write_dedup_artifact": _write_dedup_artifact,
+    "append_ann_artifact": _append_ann_artifact,
+    "write_training_shards": _write_training_shards,
+    "receipt_dag_depths": _receipt_dag_depths,
+}
+
+
+@pytest.mark.parametrize("entry", ["ingest_bronze", "process_batch", *_OWNERS])
 def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, monkeypatch, entry):
     """Every frame the bronze DAG, the silver fan-out or a micro-batch
     persists is released when the call returns, or raises: Spark's cache
     manager is as empty after a batch ingest, or after several
     micro-batches, as it was before — and again after one that fails
-    inside the state fixpoint."""
+    inside the state fixpoint.  The other owners leave it empty too:
+    curation once ``clear_caches()`` ran, a dedup artifact build whose
+    connected components fail, an ANN append refused for a donor-range
+    id, a training-shard write, and the receipt-DAG walk once
+    ``clear_caches()`` ran."""
     from rust_near_indexer_spark import caching
     from rust_near_indexer_spark.plans import state
     from rust_near_indexer_spark.streaming.pipeline import process_batch
@@ -117,6 +198,10 @@ def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, monkeypatch, ent
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty()
+    if entry in _OWNERS:
+        _OWNERS[entry](spark, tmp_path, monkeypatch)
+        assert cache.isEmpty()
+        return
     blocks, _ = fixtures.generate(n_blocks=60, ttl_blocks=TTL_BLOCKS)
     out = str(tmp_path / "out")
     if entry == "ingest_bronze":

@@ -9,6 +9,8 @@ import json
 import math
 import os
 
+import pytest
+
 from rust_near_indexer_spark import ann_artifact as aa
 from rust_near_indexer_spark import artifact_io
 from rust_near_indexer_spark import dedup_artifact as da
@@ -119,6 +121,22 @@ def test_fold_replay_is_noop(spark, tmp_path):
     assert fold_batch(da.KIND, spark, art, second) == "skip"  # replay
     assert os.path.getmtime(os.path.join(art, "_meta.json")) == mtime
     assert _labels_set(artifact_io.load(da.KIND, spark, art)["labels"]) == before
+
+
+def test_fold_replay_with_a_short_doc_is_noop(spark, tmp_path):
+    """A doc of <3 words gets no signature row, so the replay check
+    compares only the ids the artifact stores: a replayed batch holding
+    one still skips, and a genuine partial overlap still raises."""
+    art = str(tmp_path / "art")
+    seven, six = "one two three four five six seven", "alpha beta gamma delta eps zeta"
+    assert fold_batch(da.KIND, spark, art, spark.createDataFrame(
+        [(1, seven), (2, six)], DOC_SCHEMA)) == "build"
+    batch = spark.createDataFrame([(3, seven), (4, "short doc")], DOC_SCHEMA)
+    assert fold_batch(da.KIND, spark, art, batch) == "append"
+    assert fold_batch(da.KIND, spark, art, batch) == "skip"
+    overlap = spark.createDataFrame([(3, seven), (5, six)], DOC_SCHEMA)
+    with pytest.raises(ValueError, match="append, not upsert"):
+        fold_batch(da.KIND, spark, art, overlap)
 
 
 def test_streamed_ann_folds_equal_cold_build(spark, tmp_path):
