@@ -7,14 +7,16 @@ drives the Spark pipelines::
 
     python -m rust_near_indexer_spark ingest --blocks B.jsonl --out DIR \
         [--start N] [--end N] [--events-only] [--force] [--stream]
+    python -m rust_near_indexer_spark ingest --stream --blocks http://HOST:PORT --out DIR
     python -m rust_near_indexer_spark validate --data DIR
     python -m rust_near_indexer_spark query NAME [--sf-dir DIR]
 
 ``ingest`` resumes from ``max(block_height)`` of the existing sink
 unless ``--force`` (R3); ``--stream`` switches to the Structured
-Streaming formulation (checkpointed, restart-safe).  ``validate`` runs
-the validate.sh invariant suite over an ingested directory.  ``query``
-runs any registry entry and prints it.
+Streaming formulation (checkpointed, restart-safe), the only one that
+reads a blocksapi endpoint (``--blocks http(s)://...``).  ``validate``
+runs the validate.sh invariant suite over an ingested directory.
+``query`` runs any registry entry and prints it.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ def cmd_ingest(args) -> int:
 
     from . import schemas, sinks
     from .streaming.pipeline import run_streaming
+    from .streaming.sources import is_endpoint
 
     # the stream resumes from its checkpoint and reads every block it is
     # given: a batch-only bound must fail, not be silently ignored
@@ -50,6 +53,13 @@ def cmd_ingest(args) -> int:
     ]
     if args.stream and batch_only:
         print(f"ingest --stream does not take {', '.join(batch_only)}", file=sys.stderr)
+        return 2
+    if not args.stream and is_endpoint(args.blocks):
+        print(
+            f"ingest --blocks {args.blocks} is a blocksapi endpoint, which must be "
+            "streamed: add --stream",
+            file=sys.stderr,
+        )
         return 2
     spark = _spark(args.cpus)
     server = None
@@ -388,7 +398,11 @@ def main(argv: list[str] | None = None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     ing = sub.add_parser("ingest", help="run the bronze pipeline into a sink dir")
-    ing.add_argument("--blocks", required=True, help="block-stream JSONL path/dir")
+    ing.add_argument(
+        "--blocks",
+        required=True,
+        help="block JSONL path/dir, or a blocksapi http(s):// endpoint with --stream",
+    )
     ing.add_argument("--out", required=True, help="sink base directory")
     ing.add_argument("--start", type=int, default=0, help="start block height")
     ing.add_argument("--end", type=int, default=None, help="stop after this height (R5)")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
-from . import schemas, sinks
+from . import sinks
 
 ASSETS_PK = ("defuse_asset_id", "price_updated_at_ns")
 

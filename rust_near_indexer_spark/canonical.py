@@ -31,10 +31,15 @@ from pyspark.sql import functions as F
 # --- Spark side -----------------------------------------------------------
 
 
+def md5_60(col: Column | str) -> Column:
+    """60-bit hash of one string column: the first 15 hex digits of its
+    md5 as a long (``duck_hash60`` is the DuckDB spelling)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def hash60(*cols: Column | str) -> Column:
     """60-bit md5-based row hash of '|'-joined column string renderings."""
-    joined = F.concat_ws("|", *[F.col(c) if isinstance(c, str) else c for c in cols])
-    return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
+    return md5_60(F.concat_ws("|", *[F.col(c) if isinstance(c, str) else c for c in cols]))
 
 
 def fingerprint(*cols: Column | str) -> Column:

@@ -32,7 +32,7 @@ Invariants (pinned by tests/test_curation_pipeline.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 

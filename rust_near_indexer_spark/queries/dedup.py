@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..caching import Pins, SessionCache, materialize
-from ..canonical import duck_fingerprint, duck_hash60, fingerprint, hash60
+from ..canonical import duck_fingerprint, duck_hash60, fingerprint, hash60, md5_60
 from ..tables import load, spread
 from . import register
 
@@ -46,10 +46,6 @@ JACCARD_MILLI_THRESHOLD = 400
 # (and by exact dedup).  Measured at sf0.1: max bucket 27, so the cap is
 # inert on the test corpus; the oracle applies the identical rule.
 MAX_BUCKET_DOCS = 64
-
-
-def _hash60(col) -> F.Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -376,7 +372,7 @@ def signatures_from_shingles(shingled: DataFrame) -> DataFrame:
     verification need, with the raw text already shed."""
     hash2 = lambda h: (h % M59 * H2_MUL + H2_ADD) % F.lit(M59)  # noqa: E731
     return (
-        shingled.withColumn("hs1", F.transform(F.col("sh"), _hash60))
+        shingled.withColumn("hs1", F.transform(F.col("sh"), md5_60))
         .withColumn("hs2", F.transform(F.col("hs1"), hash2))
         .select("doc_id", "hs1", *_minhashes())
     )
@@ -397,7 +393,7 @@ def bands_from_signatures(sigs: DataFrame) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        _hash60(
+                        md5_60(
                             F.concat_ws("|", F.lit(str(b)), F.col(f"mh{b}"))
                         ).alias("bucket"),
                     )
@@ -780,7 +776,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     of word-hashes have bit j set (the ±1-sum ≥ 0 formulation).  Near-dup
     docs land at small Hamming distance."""
     aug = augmented_docs(spark, sf_dir)
-    hs = F.transform(F.split(F.col("text"), " "), _hash60)
+    hs = F.transform(F.split(F.col("text"), " "), md5_60)
     d = aug.select("doc_id", hs.alias("hs"))
 
     def bit_pred(mask: int):
@@ -1243,7 +1239,7 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bits(df):
         return df.select(*df.columns, ks).withColumn(
-            "b", _hash60(F.concat_ws("|", F.col("i"), F.col("k"))) % BLOOM_BITS
+            "b", md5_60(F.concat_ws("|", F.col("i"), F.col("k"))) % BLOOM_BITS
         )
 
     bloom = (
@@ -1368,7 +1364,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.size("w") - SPAN_WINDOW),
-                lambda p: _hash60(
+                lambda p: md5_60(
                     F.concat_ws(" ", F.slice(F.col("w"), p + 1, SPAN_WINDOW))
                 ),
             )

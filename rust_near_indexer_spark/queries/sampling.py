@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..canonical import duck_fingerprint, duck_hash60, fingerprint, hash60
+from ..canonical import duck_fingerprint, duck_hash60, fingerprint, hash60, md5_60
 from ..tables import load
 from . import register
 
@@ -621,9 +621,7 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "chunk_idx",
         F.least(F.lit(CHUNK_TOKENS).cast("long"), F.col("n") - F.col("chunk_idx") * CHUNK_STRIDE)
         .alias("chunk_tokens"),
-        F.conv(F.substring(F.md5(F.concat_ws(" ", chunk)), 1, 15), 16, 10)
-        .cast("long")
-        .alias("chunk_fp"),
+        md5_60(F.concat_ws(" ", chunk)).alias("chunk_fp"),
     ).orderBy("doc_id", "chunk_idx")
 
 
@@ -694,9 +692,7 @@ def dedup_chunk_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fp = x.select(
         "doc_id",
-        F.conv(F.substring(F.md5(F.concat_ws(" ", chunk)), 1, 15), 16, 10)
-        .cast("long")
-        .alias("chunk_fp"),
+        md5_60(F.concat_ws(" ", chunk)).alias("chunk_fp"),
     )
     return (
         fp.groupBy("chunk_fp")

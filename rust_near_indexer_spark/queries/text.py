@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..caching import materialize
-from ..canonical import duck_fingerprint, duck_hash60, fingerprint
+from ..canonical import duck_fingerprint, duck_hash60, fingerprint, md5_60
 from ..tables import load, spread
 from . import register
 from .dedup import AUG_SQL
@@ -257,12 +257,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(1), F.size(w) - 2),
         lambda i: F.concat_ws(" ", F.slice(w, i, 3)),
     )
-    fp = F.array_min(
-        F.transform(
-            shingles,
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-        )
-    )
+    fp = F.array_min(F.transform(shingles, md5_60))
     # docs shorter than 3 words have no shingle → NULL (matches the
     # oracle's list_min([]) = NULL)
     return d.select(
@@ -894,9 +889,7 @@ def text_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         g.select(
-            F.conv(F.substring(F.md5("norm"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("norm_fp"),
+            md5_60("norm").alias("norm_fp"),
             "keeper_id",
             "n_docs",
             "member_fingerprint",
@@ -1171,16 +1164,8 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
     ).where(F.col("token") != "")
-    bucket = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long") % QC_BUCKETS
-    weight = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("wgt|"), bucket.cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    )
+    bucket = md5_60("token") % QC_BUCKETS
+    weight = md5_60(F.concat(F.lit("wgt|"), bucket.cast("string"))) % 2001 - 1000
     scored = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(weight).alias("w_sum"),

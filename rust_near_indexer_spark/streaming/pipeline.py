@@ -4,11 +4,11 @@ The reference is a streaming system (R1/R2 sources → R4 ordered map →
 per-block handlers → R23 sink, indexer-clickhouse/src/main.rs:59-79,
 handlers/mod.rs:16-139).  The Spark-first rendering:
 
-- **Source (R1/R2)**: ``readStream`` over a directory of block files
-  (the file source is the stand-in for blocksapi/NEAR-Lake; both are
-  "ordered sequence of block messages from external storage").
-  ``maxFilesPerTrigger`` bounds the micro-batch — the analog of the
-  blocksapi prefetch batch (indexer-common/src/config.rs:98-104).
+- **Source (R1/R2)**: ``readStream`` over a block directory (NEAR
+  Lake) or a blocksapi endpoint, chosen from the location
+  (sources.block_stream).  Both deliver the same schema in the same
+  height order; a per-trigger bound sizes the micro-batch — the analog
+  of the blocksapi prefetch batch (indexer-common/src/config.rs:98-104).
 - **Ordered processing (R4)**: micro-batches run strictly serially
   (Structured Streaming's execution model) and the within-batch fixpoint
   checks mapping-validity windows against reader heights, so replay
@@ -39,7 +39,6 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,8 +50,7 @@ from ..caching import Pins
 from ..plans.pipeline import run_bronze
 from ..plans.state import DEFAULT_TTL_BLOCKS
 from ..tracing import TRACER
-
-log = logging.getLogger(__name__)
+from .sources import block_stream, is_endpoint
 
 _STATE_COLS = ("receipt_id", "tx_hash", "tier", "write_block")
 
@@ -131,37 +129,31 @@ def process_batch(
 
 def run_streaming(
     spark: SparkSession,
-    blocks_dir: str,
+    location: str,
     out_dir: str,
     checkpoint_dir: str,
     state_dir: str | None = None,
     accounts: tuple = schemas.ACCOUNTS_OF_INTEREST,
     ttl_blocks: int = DEFAULT_TTL_BLOCKS,
-    max_files_per_trigger: int = 1,
+    blocks_per_trigger: int | None = None,
     events_only: bool = False,
     with_silver: bool = False,
-    source_kind: str = "file",
 ) -> None:
-    """Run the streaming indexer over all available block files
-    (Trigger.AvailableNow — R5's bounded-stop in streaming form) and
-    block until the backlog drains.
+    """Index every block the source holds when the call starts, then
+    return — R5's bounded stop in streaming form.
 
-    ``source_kind`` selects the block-source adapter (R1/R2 seam —
-    sources.block_stream; the Spark rendering of the reference's
-    data-source switch, indexer-clickhouse/src/main.rs:59-79).  The
-    downstream pipeline is source-agnostic: all kinds deliver the same
-    schema in the same height order.
+    ``location`` is a block directory or a blocksapi endpoint
+    (sources.block_stream); the downstream pipeline does not know which.
+    Each source bounds itself.  The directory runs under
+    Trigger.AvailableNow, which snapshots the file listing at start.  The
+    endpoint's reader stops at the tip it read at start, and
+    ``processAllAvailable`` drains to it: a Python data source does not
+    support AvailableNow (Spark falls back to a single batch).
     """
-    from . import sources
-
     state_dir = state_dir or os.path.join(out_dir, "_state")
-    stream = sources.block_stream(
-        spark, source_kind, blocks_dir, blocks_per_trigger=max_files_per_trigger
-    )
-    processed = {"n": 0}
 
     def _batch(df: DataFrame, bid: int) -> None:
-        processed["n"] += process_batch(
+        process_batch(
             df,
             bid,
             out_dir,
@@ -172,53 +164,16 @@ def run_streaming(
             with_silver=with_silver,
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint_dir
+    writer = (
+        block_stream(spark, location, blocks_per_trigger)
+        .writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
     )
-    if source_kind == "http-poll":
-        # Unbounded network source — bounded-stop (R5) from the driver:
-        # poll until the stream's COMMITTED ordinal reaches the
-        # endpoint's tip height (the same index-until-tip loop a live
-        # blocksapi deployment runs).  The condition must be the
-        # checkpointed offset, not a processed-this-run counter: a
-        # RESUMED run starts mid-log and would never count `tip` blocks.
-        import ast
-        import time
-
-        tip = sources.fetch_height(blocks_dir)
+    if is_endpoint(location):
         query = writer.trigger(processingTime="0 seconds").start()
-
-        def _tip_reached() -> bool:
-            p = query.lastProgress
-            if not p:
-                return False
-            try:
-                eo = p["sources"][0]["endOffset"]
-                if isinstance(eo, str):
-                    # pyspark renders python-datasource offsets with
-                    # str(dict) — repr, not JSON — hence literal_eval
-                    eo = ast.literal_eval(eo)
-                return int(eo.get("next", -1)) >= tip
-            except Exception as e:
-                log.warning("run_streaming: no end offset in stream progress: %r", e)
-                return False
-
-        while query.isActive and not _tip_reached():
-            time.sleep(0.05)
-        query.stop()
-        query.awaitTermination()
-    elif source_kind == "rate-lookup":
-        # The sequence source is unbounded — bounded-stop (R5) comes
-        # from the driver: stop once every block in the lookup table has
-        # been joined through (idle tail triggers join to zero rows).
-        import time
-
-        expected = spark.read.schema(schemas.BLOCK).json(blocks_dir).count()
-        query = writer.trigger(processingTime="0 seconds").start()
-        while query.isActive and processed["n"] < expected:
-            time.sleep(0.05)
-        query.stop()
-        query.awaitTermination()
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
     else:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
+        writer.trigger(availableNow=True).start().awaitTermination()

@@ -1,142 +1,110 @@
-"""Block-source adapters (R1/R2): one schema contract, swappable kinds.
+"""Block sources (R1/R2): a block directory or a blocksapi endpoint.
 
-The reference selects its block source with a config switch — blocksapi
-gRPC vs NEAR-Lake S3/GCS (`indexer-clickhouse/src/main.rs:59-79`,
+The reference selects its block source with one switch — blocksapi
+gRPC or NEAR-Lake S3/GCS (`indexer-clickhouse/src/main.rs:59-79`,
 `indexer-common/src/config.rs:93-107`) — and everything downstream sees
-the same ordered `StreamerMessage` stream.  This module is the Spark
-rendering of that seam: :func:`block_stream` returns a *streaming*
-DataFrame in the canonical ``schemas.BLOCK`` shape regardless of the
-source kind, and the per-trigger bound (the blocksapi prefetch-batch
-analog, `config.rs:98-104`) is applied inside each adapter.
+the same ordered `StreamerMessage` stream.  Here the location is the
+switch: :func:`block_stream` returns a *streaming* DataFrame in the
+canonical ``schemas.BLOCK`` shape for either, and the per-trigger bound
+(the blocksapi prefetch-batch analog, `config.rs:98-104`) is applied
+inside each source.
 
-Kinds
------
-``file``
-    Schema'd JSON directory scan (``maxFilesPerTrigger`` bounding) —
-    the NEAR-Lake stand-in: Lake is "list objects, read JSON blocks in
-    key order", which is exactly Spark's file source against an
-    S3/GCS path (the sandbox has no network; swapping the directory
-    for an ``s3://`` URI is the only change).
-``kafka-envelope``
-    A text-envelope stream parsed with ``from_json`` into the block
-    schema.  This is byte-for-byte the consumer code a real Kafka /
-    blocksapi bridge needs — Kafka delivers ``value`` as an opaque
-    payload column and the adapter owns the envelope→schema parse.  In
-    the sandbox the envelope rows come from the ``text`` file source
-    (one JSON block per line); a production deployment swaps
-    ``.format("text")`` for ``.format("kafka")`` + subscribe options
-    and keeps the parse identical.  Corrupt payloads surface as NULL
-    ``block_height`` rows and are dropped loudly (counted by the
-    caller's observe hook rather than silently vanishing inside a
-    malformed-JSON exception).
-``rate-lookup``
-    Spark's ``rate-micro-batch`` source emits a monotone sequence
-    number per trigger (``rowsPerBatch`` bounding); a stream-static
-    equi-join resolves each sequence number to its block payload from
-    an indexed static table.  This models pull-by-ordinal sources
-    (blocksapi's "give me block N next" replay protocol,
-    `main.rs:100-127` start-block resume): ordering comes from the
-    sequence source, payload from a keyed lookup.
-``http-poll``
-    A REAL network source: a PySpark Python streaming data source
-    (``pyspark.sql.datasource``) that polls a blocksapi-style HTTP
-    endpoint — ``GET {endpoint}/blocks?from=N&limit=K`` returning a
-    JSON array of block objects in height order — with by-ordinal
-    offsets in the checkpoint.  Exactly-once replay falls out of the
-    protocol: offsets are ordinals and the chain is immutable, so
-    ``readBetweenOffsets`` re-fetches a committed range and gets the
-    same bytes (the same property blocksapi's start-block resume
-    relies on).  For this kind ``blocks_dir`` IS the endpoint URL; a
-    production deployment swaps the URL and nothing else.  The gRPC
-    difference is framing, not semantics — this adapter carries the
-    pull-by-range replay protocol over a transport the sandbox can
-    actually exercise end-to-end (tests run it against a live
-    localhost server).
+Directory (NEAR Lake)
+    Schema'd JSON file scan in key order, ``maxFilesPerTrigger``
+    bounding — Lake is "list objects, read JSON blocks in key order",
+    which is exactly Spark's file source against an S3/GCS path.
+``http://`` / ``https://`` endpoint (blocksapi)
+    A PySpark Python streaming data source (``pyspark.sql.datasource``)
+    that polls ``GET {endpoint}/blocks?from=N&limit=K`` — a JSON array
+    of block objects in height order — with by-ordinal offsets in the
+    checkpoint.  The reader reads the endpoint's tip (``GET
+    {endpoint}/height``) once, when the query starts, and never reads
+    past it: that tip is the source's bounded stop (R5).  Exactly-once
+    replay falls out of the protocol: offsets are ordinals and the chain
+    is immutable, so ``readBetweenOffsets`` re-fetches a committed range
+    and gets the same bytes (the property blocksapi's start-block resume
+    relies on, `main.rs:100-127`).  The gRPC difference is framing, not
+    semantics.  Payloads are parsed with ``from_json``; a corrupt one
+    becomes a NULL ``block_height`` row and is dropped instead of
+    failing the stream.
 
-All three kinds produce identical rows in identical height order, so
-the bronze pipeline fingerprint-matches across them (proved by
-tests/test_source_adapters.py).
+Both produce identical rows in identical height order, so the bronze
+pipeline fingerprint-matches across them (tests/test_source_adapters.py).
 """
 
 from __future__ import annotations
 
+import json
+import urllib.request
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .. import schemas
 
-SOURCE_KINDS = ("file", "kafka-envelope", "rate-lookup", "http-poll")
+# blocksapi's prefetch batch (indexer-common/src/config.rs:98-104): the
+# endpoint's default blocks per trigger.  A directory's unit of arrival
+# is a file, and its default is one file per trigger.
+PREFETCH_BLOCKS = 30
 
 
-def fetch_blocks(endpoint: str, start: int, limit: int) -> list[dict]:
-    """GET {endpoint}/blocks?from=start&limit=limit → block dicts."""
-    import json
-    import urllib.request
+def is_endpoint(location: str) -> bool:
+    """True for a blocksapi endpoint URL, False for a block directory."""
+    return location.startswith(("http://", "https://"))
 
-    url = f"{endpoint.rstrip('/')}/blocks?from={start}&limit={limit}"
-    with urllib.request.urlopen(url, timeout=10) as resp:
+
+def _get_json(endpoint: str, path: str):
+    with urllib.request.urlopen(f"{endpoint.rstrip('/')}{path}", timeout=10) as resp:
         return json.loads(resp.read())
-
-
-def fetch_height(endpoint: str) -> int:
-    """GET {endpoint}/height → total block count at the server."""
-    import json
-    import urllib.request
-
-    with urllib.request.urlopen(
-        f"{endpoint.rstrip('/')}/height", timeout=10
-    ) as resp:
-        return int(json.loads(resp.read()))
 
 
 class BlocksHttpReader:
     """SimpleDataSourceStreamReader over the pull-by-range protocol.
 
-    Offsets are block ordinals ``{"next": n}``.  ``read`` advances the
-    tip by at most ``blocksPerTrigger``; ``readBetweenOffsets`` replays
-    a committed range byte-identically (the endpoint serves an
-    immutable height-ordered log).  Runs on the driver — the poll is a
-    metadata-sized fetch; rows fan out to executors as Arrow batches.
+    Offsets are block ordinals ``{"next": n}``.  ``read`` advances by at
+    most ``blocksPerTrigger`` and never past the tip read at query start,
+    so ``processAllAvailable`` drains to that tip and returns.
+    ``readBetweenOffsets`` replays a committed range byte-identically.
+    Runs on the driver — the poll is a metadata-sized fetch; rows fan out
+    to executors as Arrow batches.
     """
 
     def __init__(self, options: dict):
         self.endpoint = options["endpoint"]
-        self.per_batch = int(options.get("blocksPerTrigger", "1"))
+        self.per_batch = int(options["blocksPerTrigger"])
+        self.tip = int(_get_json(self.endpoint, "/height"))  # block count
 
     def initialOffset(self) -> dict:
-        return {"next": int(0)}
+        return {"next": 0}
+
+    def _fetch(self, start: int, n: int) -> list[tuple[str]]:
+        if n <= 0:
+            return []
+        blocks = _get_json(self.endpoint, f"/blocks?from={start}&limit={n}")
+        return [(json.dumps(b, separators=(",", ":")),) for b in blocks]
 
     def read(self, start: dict):
-        import json
-
-        blocks = fetch_blocks(self.endpoint, start["next"], self.per_batch)
-        rows = iter([(json.dumps(b, separators=(",", ":")),) for b in blocks])
-        return rows, {"next": start["next"] + len(blocks)}
+        rows = self._fetch(start["next"], min(self.per_batch, self.tip - start["next"]))
+        return iter(rows), {"next": start["next"] + len(rows)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        import json
-
-        n = end["next"] - start["next"]
-        blocks = fetch_blocks(self.endpoint, start["next"], n)
-        return iter([(json.dumps(b, separators=(",", ":")),) for b in blocks])
+        return iter(self._fetch(start["next"], end["next"] - start["next"]))
 
     def commit(self, end: dict) -> None:
         pass  # the server is a log, not a queue: nothing to ack
 
 
 def _make_blocks_http_datasource():
-    """Build the DataSource subclass lazily (keeps the module importable
-    even if a future pyspark drops the API; the seam degrades to the
-    other three kinds)."""
+    """Build the DataSource subclass lazily, so importing this module
+    needs no ``pyspark.sql.datasource``."""
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
     class _Reader(BlocksHttpReader, SimpleDataSourceStreamReader):
         pass
 
     class BlocksHttpDataSource(DataSource):
-        """`blocksapi-http`: value:string lines of block JSON (the same
-        envelope contract as kafka-envelope, parsed by block_stream)."""
+        """`blocksapi-http`: value:string lines of block JSON, parsed
+        into ``schemas.BLOCK`` by block_stream."""
 
         @classmethod
         def name(cls) -> str:
@@ -152,69 +120,30 @@ def _make_blocks_http_datasource():
 
 
 def block_stream(
-    spark: SparkSession,
-    kind: str,
-    blocks_dir: str,
-    blocks_per_trigger: int = 1,
+    spark: SparkSession, location: str, blocks_per_trigger: int | None = None
 ) -> DataFrame:
-    """Return a streaming DataFrame of block rows (``schemas.BLOCK``).
+    """Return a streaming DataFrame of block rows (``schemas.BLOCK``)
+    from a block directory or a blocksapi endpoint (:func:`is_endpoint`).
 
-    ``blocks_per_trigger`` bounds one micro-batch: files for ``file``
-    and ``kafka-envelope`` (a file is the sandbox's unit of arrival),
-    rows for ``rate-lookup`` (its unit of arrival is one block).
+    ``blocks_per_trigger`` bounds one micro-batch in the source's unit of
+    arrival: files for a directory (default 1), blocks for an endpoint
+    (default :data:`PREFETCH_BLOCKS`).
     """
-    if kind == "file":
+    if not is_endpoint(location):
         return (
             spark.readStream.schema(schemas.BLOCK)
-            .option("maxFilesPerTrigger", blocks_per_trigger)
-            .json(blocks_dir)
+            .option("maxFilesPerTrigger", blocks_per_trigger or 1)
+            .json(location)
         )
-    if kind == "kafka-envelope":
-        envelope = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", blocks_per_trigger)
-            .load(blocks_dir)
-        )
-        return (
-            envelope.select(
-                F.from_json(F.col("value"), schemas.BLOCK).alias("b")
-            )
-            .select("b.*")
-            .where(F.col("block_height").isNotNull())
-        )
-    if kind == "http-poll":
-        spark.dataSource.register(_make_blocks_http_datasource())
-        envelope = (
-            spark.readStream.format("blocksapi-http")
-            .option("endpoint", blocks_dir)  # blocks_dir IS the URL here
-            .option("blocksPerTrigger", str(blocks_per_trigger))
-            .load()
-        )
-        # identical envelope→schema parse as kafka-envelope: corrupt
-        # payloads become NULL block_height rows and are dropped loudly
-        return (
-            envelope.select(F.from_json(F.col("value"), schemas.BLOCK).alias("b"))
-            .select("b.*")
-            .where(F.col("block_height").isNotNull())
-        )
-    if kind == "rate-lookup":
-        # Static lookup side: block payloads keyed by their 0-based
-        # height ordinal.  The window is a one-time driver-side indexing
-        # of the (small) lookup table metadata — the stream side never
-        # sees an unpartitioned window.
-        indexed = (
-            spark.read.schema(schemas.BLOCK)
-            .json(blocks_dir)
-            .withColumn(
-                "seq",
-                F.row_number().over(Window.orderBy("block_height")).cast("long") - 1,
-            )
-        )
-        seqs = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", blocks_per_trigger)
-            .load()
-            .select(F.col("value").alias("seq"))
-        )
-        return seqs.join(indexed, "seq").drop("seq")
-    raise ValueError(f"unknown block source kind {kind!r}; one of {SOURCE_KINDS}")
+    spark.dataSource.register(_make_blocks_http_datasource())
+    envelope = (
+        spark.readStream.format("blocksapi-http")
+        .option("endpoint", location)
+        .option("blocksPerTrigger", str(blocks_per_trigger or PREFETCH_BLOCKS))
+        .load()
+    )
+    return (
+        envelope.select(F.from_json(F.col("value"), schemas.BLOCK).alias("b"))
+        .select("b.*")
+        .where(F.col("block_height").isNotNull())
+    )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import duckdb
 
 from rust_near_indexer_spark.__main__ import main
@@ -51,6 +53,31 @@ def test_cli_stream_rejects_batch_only_flags(tmp_path, capsys):
         assert main([*argv, "--stream", *flag]) == 2
         assert f"does not take {flag[0]}" in capsys.readouterr().err
     assert not (tmp_path / "sink").exists()
+
+
+def test_cli_stream_reads_blocksapi_endpoint(spark, tmp_path):
+    """``ingest --stream --blocks http://...`` streams from a live
+    blocksapi endpoint, with no extra flag, into the same tables as a
+    batch ingest of the blocks the endpoint serves."""
+    from .test_source_adapters import _table_fps, serve_blocks
+
+    with open(BLOCKS_PATH) as f:
+        blocks = [json.loads(line) for line in f if line.strip()]
+    out, ref = str(tmp_path / "stream"), str(tmp_path / "batch")
+    with serve_blocks(blocks) as server:
+        assert main(["ingest", "--stream", "--blocks", server.url, "--out", out]) == 0
+    assert main(["ingest", "--blocks", BLOCKS_PATH, "--out", ref]) == 0
+    assert _table_fps(spark, out) == _table_fps(spark, ref)
+
+
+def test_cli_batch_rejects_endpoint(tmp_path, capsys):
+    """Batch ingest reads files: an endpoint given without --stream exits
+    2 saying it must be streamed, before any Spark work."""
+    sink = tmp_path / "sink"
+    argv = ["ingest", "--blocks", "http://127.0.0.1:9", "--out", str(sink)]
+    assert main(argv) == 2
+    assert "must be streamed" in capsys.readouterr().err
+    assert not sink.exists()
 
 
 def test_register_views_sql_matches_dataframe(spark, sf_dir):

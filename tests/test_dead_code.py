@@ -5,8 +5,8 @@ A function or class that no package module, entry point (``bench.py``,
 dead code: nothing can call it, and no test pins what it does.  The scan
 is textual (an identifier anywhere, comments and strings included), so
 it only catches names that appear nowhere at all; it needs no Spark.
-The same no-Spark scans keep the env-var table and the one persist owner
-honest.
+The same no-Spark scans keep the env-var table, the one persist owner
+and every import honest.
 """
 
 from __future__ import annotations
@@ -81,3 +81,30 @@ def test_only_caching_persists():
                 if re.search(r"\.persist\(|\.cache\(\)|\.unpersist\(", line):
                     spelled.append(f"{os.path.relpath(path, ROOT)}:{n}")
     assert spelled == []
+
+
+def test_every_import_is_used():
+    """An imported name its module never reads is dead weight (and hides
+    which modules really depend on what).  ``__init__.py`` re-exports and
+    lines marked ``# noqa: F401`` are the deliberate exceptions."""
+    unused = []
+    for path in _py_files(PKG):
+        if os.path.basename(path) == "__init__.py":
+            continue
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__":
+                continue
+            if any("noqa: F401" in ln for ln in lines[node.lineno - 1 : node.end_lineno]):
+                continue
+            for alias in node.names:
+                name = (alias.asname or alias.name).split(".")[0]
+                if name not in read:
+                    unused.append(f"{os.path.relpath(path, ROOT)}:{node.lineno} {name}")
+    assert unused == []

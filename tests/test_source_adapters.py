@@ -1,15 +1,22 @@
-"""R1/R2 source-adapter seam: the same bronze pipeline run from every
-source kind must produce identical tables (per-table fingerprints).
+"""R1/R2 block sources: the same bronze pipeline run from a block
+directory and from a blocksapi endpoint must produce identical tables
+(per-table fingerprints).
 
 The reference switches blocksapi vs NEAR-Lake behind one config enum
 (`indexer-clickhouse/src/main.rs:59-79`) and the handlers never know
-which fed them; `sources.block_stream` is the Spark rendering, so the
-proof obligation is source-kind invariance of the output."""
+which fed them; `sources.block_stream` is the Spark rendering, with the
+location as the switch, so the proof obligation is source invariance of
+the output."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import threading
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from types import SimpleNamespace
+from urllib.parse import parse_qs, urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,68 +24,64 @@ from pyspark.sql import functions as F
 from rust_near_indexer_spark import fixtures, sinks
 from rust_near_indexer_spark.canonical import fingerprint
 from rust_near_indexer_spark.queries.near_events import TTL_BLOCKS
-from rust_near_indexer_spark.streaming import SOURCE_KINDS, run_streaming
+from rust_near_indexer_spark.streaming import block_stream, run_streaming
 
 N_BLOCKS = 120
 N_CHUNKS = 3
 
 
-@pytest.fixture(scope="module")
-def blocks_dir(tmp_path_factory):
-    blocks, _ = fixtures.generate(n_blocks=N_BLOCKS, ttl_blocks=TTL_BLOCKS)
-    d = tmp_path_factory.mktemp("adapter_blocks")
-    per = (len(blocks) + N_CHUNKS - 1) // N_CHUNKS
-    for c in range(N_CHUNKS):
-        chunk = blocks[c * per : (c + 1) * per]
-        with open(d / f"chunk-{c:03d}.jsonl", "w") as f:
-            for b in chunk:
-                f.write(json.dumps(b, separators=(",", ":")) + "\n")
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def blocks_server(blocks_dir):
-    """Live localhost blocksapi-style server over the SAME fixture
-    blocks: GET /blocks?from=N&limit=K (height-ordered JSON array) and
-    GET /height (total count) — what the http-poll adapter speaks."""
-    import glob
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
-    blocks: list[dict] = []
-    for p in sorted(glob.glob(os.path.join(blocks_dir, "*.jsonl"))):
-        with open(p) as f:
-            blocks.extend(json.loads(ln) for ln in f if ln.strip())
+@contextlib.contextmanager
+def serve_blocks(blocks: list[dict]):
+    """A live localhost blocksapi-style server over ``blocks``:
+    ``GET /height`` returns the visible count and ``GET
+    /blocks?from=N&limit=K`` a height-ordered JSON array cut at it.
+    Yields ``server`` with ``.url`` and ``.visible`` (initially all
+    blocks); raising ``.visible`` grows the chain."""
+    server = SimpleNamespace(visible=len(blocks))
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802 - stdlib API name
             parsed = urlparse(self.path)
             if parsed.path == "/height":
-                body = json.dumps(len(blocks)).encode()
-            elif parsed.path == "/blocks":
-                q = parse_qs(parsed.query)
-                start = int(q.get("from", ["0"])[0])
-                limit = int(q.get("limit", ["1"])[0])
-                body = json.dumps(blocks[start : start + limit]).encode()
+                body = server.visible
             else:
-                self.send_response(404)
-                self.end_headers()
-                return
+                q = parse_qs(parsed.query)
+                start, limit = int(q["from"][0]), int(q["limit"][0])
+                body = blocks[: server.visible][start : start + limit]
             self.send_response(200)
             self.send_header("Content-Type", "application/json")
             self.end_headers()
-            self.wfile.write(body)
+            self.wfile.write(json.dumps(body).encode())
 
         def log_message(self, *a):
             pass
 
     httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=httpd.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{httpd.server_port}"
-    httpd.shutdown()
-    httpd.server_close()
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    server.url = f"http://127.0.0.1:{httpd.server_port}"
+    try:
+        yield server
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
+@pytest.fixture(scope="module")
+def fixture_blocks():
+    blocks, _ = fixtures.generate(n_blocks=N_BLOCKS, ttl_blocks=TTL_BLOCKS)
+    return blocks
+
+
+@pytest.fixture(scope="module")
+def blocks_dir(tmp_path_factory, fixture_blocks):
+    d = tmp_path_factory.mktemp("adapter_blocks")
+    per = (len(fixture_blocks) + N_CHUNKS - 1) // N_CHUNKS
+    for c in range(N_CHUNKS):
+        chunk = fixture_blocks[c * per : (c + 1) * per]
+        with open(d / f"chunk-{c:03d}.jsonl", "w") as f:
+            for b in chunk:
+                f.write(json.dumps(b, separators=(",", ":")) + "\n")
+    return str(d)
 
 
 def _table_fps(spark, out: str) -> dict[str, tuple]:
@@ -92,155 +95,74 @@ def _table_fps(spark, out: str) -> dict[str, tuple]:
     return fps
 
 
-def test_all_source_kinds_fingerprint_match(spark, blocks_dir, blocks_server, tmp_path):
+def test_all_source_kinds_fingerprint_match(spark, blocks_dir, fixture_blocks, tmp_path):
+    """A block directory (one file per trigger) and a live endpoint over
+    the same blocks (the default prefetch batch per trigger, over a real
+    socket) index identical tables."""
     fps = {}
-    for kind in SOURCE_KINDS:
-        out = str(tmp_path / f"out-{kind}")
-        # http-poll's "location" is a live URL (R1's real-network path:
-        # default urllib transport against an actual socket); the rest
-        # read the fixture directory.  rate-lookup and http-poll batch
-        # by BLOCKS per trigger, the file kinds by files.
-        location = blocks_server if kind == "http-poll" else blocks_dir
-        run_streaming(
-            spark,
-            location,
-            out,
-            checkpoint_dir=str(tmp_path / f"ckpt-{kind}"),
-            ttl_blocks=TTL_BLOCKS,
-            source_kind=kind,
-            max_files_per_trigger=1 if kind in ("file", "kafka-envelope") else 40,
-        )
-        fps[kind] = _table_fps(spark, out)
-    base = fps["file"]
-    assert all(base[t][0] > 0 for t in base), base  # non-trivial corpus
-    for kind in SOURCE_KINDS[1:]:
-        assert fps[kind] == base, f"{kind} diverged from file source"
-
-
-def test_unknown_kind_rejected(spark, blocks_dir):
-    from rust_near_indexer_spark.streaming import block_stream
-
-    with pytest.raises(ValueError, match="unknown block source kind"):
-        block_stream(spark, "grpc", blocks_dir)
+    with serve_blocks(fixture_blocks) as server:
+        for kind, location in (("dir", blocks_dir), ("endpoint", server.url)):
+            out = str(tmp_path / f"out-{kind}")
+            run_streaming(
+                spark,
+                location,
+                out,
+                checkpoint_dir=str(tmp_path / f"ckpt-{kind}"),
+                ttl_blocks=TTL_BLOCKS,
+            )
+            fps[kind] = _table_fps(spark, out)
+    assert all(fps["dir"][t][0] > 0 for t in fps["dir"]), fps  # non-trivial corpus
+    assert fps["endpoint"] == fps["dir"]
 
 
 def test_http_poll_resumes_from_checkpoint_as_tip_advances(
-    spark, blocks_dir, tmp_path
+    spark, blocks_dir, fixture_blocks, tmp_path
 ):
     """The live scenario R3 + R1 compose into: index to the server's
     tip, stop, the chain grows, restart from the same checkpoint — the
     second run must pick up at the committed ordinal (initialOffset/
     readBetweenOffsets from checkpoint restore over a real socket) and
     the final tables must fingerprint-match a single uninterrupted
-    file-source run."""
-    import glob
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
-    blocks: list[dict] = []
-    for p in sorted(glob.glob(os.path.join(blocks_dir, "*.jsonl"))):
-        with open(p) as f:
-            blocks.extend(json.loads(ln) for ln in f if ln.strip())
-    visible = {"n": len(blocks) // 2}
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_GET(self):  # noqa: N802
-            parsed = urlparse(self.path)
-            if parsed.path == "/height":
-                body = json.dumps(visible["n"]).encode()
-            else:
-                q = parse_qs(parsed.query)
-                start = int(q.get("from", ["0"])[0])
-                limit = int(q.get("limit", ["1"])[0])
-                window = blocks[: visible["n"]][start : start + limit]
-                body = json.dumps(window).encode()
-            self.send_response(200)
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):
-            pass
-
-    httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=httpd.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{httpd.server_port}"
-    try:
+    directory run."""
+    with serve_blocks(fixture_blocks) as server:
+        server.visible = len(fixture_blocks) // 2
         out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        common = dict(
-            checkpoint_dir=ckpt, ttl_blocks=TTL_BLOCKS,
-            source_kind="http-poll", max_files_per_trigger=40,
-        )
-        run_streaming(spark, url, out, **common)   # indexes to half-tip
-        visible["n"] = len(blocks)                 # the chain grows
-        run_streaming(spark, url, out, **common)   # resume to new tip
+        common = dict(checkpoint_dir=ckpt, ttl_blocks=TTL_BLOCKS, blocks_per_trigger=40)
+        run_streaming(spark, server.url, out, **common)  # indexes to half-tip
+        server.visible = len(fixture_blocks)  # the chain grows
+        run_streaming(spark, server.url, out, **common)  # resume to new tip
 
-        ref = str(tmp_path / "ref")
-        run_streaming(
-            spark, blocks_dir, ref,
-            checkpoint_dir=str(tmp_path / "ckpt-ref"),
-            ttl_blocks=TTL_BLOCKS, source_kind="file",
-        )
-        assert _table_fps(spark, out) == _table_fps(spark, ref)
-    finally:
-        httpd.shutdown()
-        httpd.server_close()
+    ref = str(tmp_path / "ref")
+    run_streaming(
+        spark, blocks_dir, ref, checkpoint_dir=str(tmp_path / "ckpt-ref"), ttl_blocks=TTL_BLOCKS
+    )
+    assert _table_fps(spark, out) == _table_fps(spark, ref)
 
 
 def test_http_poll_drops_corrupt_payloads_loudly(spark, tmp_path):
-    """kafka-envelope's corrupt-payload contract holds for http-poll
-    too: a block the server serves as unparseable JSON becomes a NULL
-    block_height row and is dropped by the adapter — the stream keeps
-    going instead of dying inside from_json."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
-    from rust_near_indexer_spark.streaming import block_stream
-
+    """A block the endpoint serves in the wrong shape parses to a NULL
+    block_height row and is dropped by block_stream — the stream keeps
+    going to the tip instead of dying inside from_json."""
     blocks, _ = fixtures.generate(n_blocks=6, ttl_blocks=TTL_BLOCKS)
     served = [dict(b) for b in blocks]
     served[2] = {"garbage": "\x00not-a-block"}  # parses as JSON, wrong shape
     served[4] = {"block_height": None}
+    got = []
 
-    class Handler(BaseHTTPRequestHandler):
-        def do_GET(self):  # noqa: N802
-            p = urlparse(self.path)
-            if p.path == "/height":
-                body = json.dumps(len(served)).encode()
-            else:
-                q = parse_qs(p.query)
-                s, l = int(q["from"][0]), int(q["limit"][0])
-                body = json.dumps(served[s : s + l]).encode()
-            self.send_response(200)
-            self.end_headers()
-            self.wfile.write(body)
+    def _b(df, bid):
+        got.extend(r["block_height"] for r in df.select("block_height").collect())
 
-        def log_message(self, *a):
-            pass
-
-    httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=httpd.serve_forever, daemon=True).start()
-    try:
-        url = f"http://127.0.0.1:{httpd.server_port}"
-        stream = block_stream(spark, "http-poll", url, blocks_per_trigger=6)
-        got = []
-
-        def _b(df, bid):
-            got.extend(r["block_height"] for r in df.select("block_height").collect())
-
-        q = (stream.writeStream.foreachBatch(_b)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(processingTime="0 seconds").start())
-        import time
-
-        t0 = time.time()
-        while time.time() - t0 < 60 and len(got) < 4:
-            time.sleep(0.2)
-        q.stop()
-        q.awaitTermination()
-        want = [b["block_height"] for i, b in enumerate(blocks) if i not in (2, 4)]
-        assert sorted(got) == sorted(want)
-    finally:
-        httpd.shutdown()
-        httpd.server_close()
+    with serve_blocks(served) as server:
+        q = (
+            block_stream(spark, server.url, blocks_per_trigger=4)
+            .writeStream.foreachBatch(_b)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    want = [b["block_height"] for i, b in enumerate(blocks) if i not in (2, 4)]
+    assert sorted(got) == sorted(want)
