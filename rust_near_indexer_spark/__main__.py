@@ -11,11 +11,12 @@ drives the Spark pipelines::
     python -m rust_near_indexer_spark validate --data DIR
     python -m rust_near_indexer_spark query NAME [--sf-dir DIR]
 
-``ingest`` resumes from ``max(block_height)`` of the existing sink
-unless ``--force`` (R3); ``--stream`` switches to the Structured
-Streaming formulation (checkpointed, restart-safe), the only one that
-reads a blocksapi endpoint (``--blocks http(s)://...``).  ``validate``
-runs the validate.sh invariant suite over an ingested directory.
+``ingest`` resumes past the lowest ``max(block_height)`` over the
+tables it writes unless ``--force`` (R3); ``--stream`` switches to the
+Structured Streaming formulation (checkpointed, restart-safe), the only
+one that reads a blocksapi endpoint (``--blocks http(s)://...``).
+``validate`` runs the validate.sh invariant suite over an ingested
+directory.
 ``query`` runs any registry entry and prints it.
 """
 
@@ -37,6 +38,7 @@ def cmd_ingest(args) -> int:
     from pyspark.sql import functions as F
 
     from . import schemas, sinks
+    from .plans.silver import SILVER_TABLES
     from .streaming.pipeline import run_streaming
     from .streaming.sources import is_endpoint
 
@@ -86,7 +88,12 @@ def cmd_ingest(args) -> int:
         return 0
 
     blocks = spark.read.schema(schemas.BLOCK).json(args.blocks)
-    last = sinks.last_indexed_height(spark, f"{args.out}/events")
+    # every table this run writes must hold a block before it is skipped:
+    # a pass that failed part-way committed some appends and not others
+    written = ("events",) if args.events_only else tuple(sinks.TABLE_PKS)
+    if args.with_silver:
+        written += tuple(f"silver/{name}" for name in SILVER_TABLES)
+    last = sinks.high_water_mark(spark, args.out, written)
     start = sinks.resume_start(args.start, args.force, last)
     if start > args.start:
         print(f"resuming at {start} (sink has up to {last})", file=sys.stderr)

@@ -166,6 +166,12 @@ DATABASE_INSERT_RETRIES_TOTAL = REGISTRY.counter(
     "database_insert_retries_total",
     "Total number of retry attempts for database inserts",
 )
+# not in the reference's set: a block the source cannot parse is dropped
+# (streaming.pipeline.process_batch), and this counts what was dropped
+CORRUPT_BLOCKS_DROPPED_TOTAL = REGISTRY.counter(
+    "corrupt_blocks_dropped_total",
+    "Total number of source blocks dropped because they did not parse",
+)
 VERSION_INFO = REGISTRY.gauge_vec(
     "indexer_version_info",
     "Indexer binary version info (value always 1, label 'version'=crate version)",

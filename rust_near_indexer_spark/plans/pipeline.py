@@ -12,9 +12,18 @@ What the DAG persists (the flattened outcomes and the resolved reader
 rows) is pinned in a ``caching.Pins`` that the returned tables carry: a
 failure inside the call releases it, and after a return the caller
 closes ``tables.pins`` once every table has been consumed.
+
+A sink hands ``run_bronze`` an ``emit(name, df)`` callback and receives
+each table the moment it exists (``sinks.Appends.emit`` starts its
+append at once): ``transactions`` needs only the flattened transactions
+and is emitted before the state fixpoint starts, the three tables that
+read resolved state once one job has filled its cache — the reference's
+insert-transactions-then-``try_join!`` order (handlers/mod.rs:115-125).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -40,6 +49,7 @@ def run_bronze(
     block_end: int | None = None,
     events_only: bool = False,
     carried: DataFrame | None = None,
+    emit: Callable[[str, DataFrame], None] | None = None,
 ) -> BronzeTables:
     """Return the four bronze tables as DataFrames.
 
@@ -63,16 +73,29 @@ def run_bronze(
     there are no forward cross-batch dependencies because a parent
     executes before its children are spawned.
 
+    emit: called with each table's name and frame as soon as the frame
+    is built (``transactions`` first, before the fixpoint); without it
+    nothing is written here.
+
     The caller owns the persisted intermediates and closes
     ``tables.pins`` once every table has been consumed.
     """
     if block_end is not None:
         blocks = blocks.where(blocks["block_height"] <= block_end)
 
+    out: dict[str, DataFrame] = {}
+
+    def add(name: str, df: DataFrame) -> None:
+        out[name] = df
+        if emit is not None:
+            emit(name, df)
+
     # the fixpoint runs eagerly, so a failure inside this block releases
     # the pins before the caller ever holds them
     with Pins() as pins:
         flat_txs = bronze.flatten_transactions(blocks)
+        if not events_only:
+            add("transactions", bronze.transaction_rows(flat_txs, accounts))
         flat_outcomes = pins.pin(bronze.flatten_outcomes(blocks))
 
         seeds = state.seed_mappings(flat_txs, accounts)
@@ -91,16 +114,23 @@ def run_bronze(
                 state.readers_from_outcomes(flat_outcomes), mappings, accounts, ttl_blocks
             )
         )
+        if not events_only:
+            # its three consumers run at once (a sink's concurrent appends):
+            # one job fills the cache here, or each consumer runs the
+            # join/agg chain itself while the cache is still empty
+            resolved.count()
 
-        events = bronze.event_rows(flat_outcomes, resolved.where("event_readable"), accounts)
-        out: dict[str, DataFrame] = {"events": events}
+        add(
+            "events",
+            bronze.event_rows(flat_outcomes, resolved.where("event_readable"), accounts),
+        )
         if not events_only:
             outcomes_rows, receipt_rows = bronze.outcome_and_receipt_rows(
                 flat_outcomes, resolved, accounts
             )
-            out["transactions"] = bronze.transaction_rows(flat_txs, accounts)
-            out["execution_outcomes"] = outcomes_rows.unionByName(
-                bronze.tx_outcome_rows(flat_txs, accounts)
+            add(
+                "execution_outcomes",
+                outcomes_rows.unionByName(bronze.tx_outcome_rows(flat_txs, accounts)),
             )
-            out["receipts"] = receipt_rows
+            add("receipts", receipt_rows)
         return BronzeTables(out, mappings, pins.pop_all())

@@ -332,6 +332,21 @@ def dip4_transfers_r25(
     # on a micro-batch, sort-merge on a 100 TB backfill.
 
 
+# the names all_silver_tables returns, in its order: what --with-silver
+# writes under silver/, known before any frame is built
+SILVER_TABLES = (
+    "silver_nep_245_events",
+    "silver_dip4_token_diff",
+    "silver_dip4_public_keys",
+    "silver_dip4_intents_executed",
+    "silver_dip4_fee_changed",
+    "silver_dip4_transfer",
+    "staging_silver_dip4_transfer",
+    "silver_transfers",
+    "staging_silver_transfers",
+)
+
+
 def all_silver_tables(events: DataFrame) -> dict[str, DataFrame]:
     """The complete silver layer from one bronze events DataFrame — the
     batch rendering of the 7-MV insert fan-out (SURVEY §3.2)."""

@@ -27,6 +27,16 @@ height-bucket, embarrassingly parallel, and idempotent.
 
 Concurrency contract (VERDICT r07 #5 audit):
 
+- **within one pass — CONCURRENT, ONE APPEND PER TABLE.**  ``Appends``
+  starts each table's append as soon as ``run_bronze`` emits the table
+  (``transactions`` while the state fixpoint runs, the rest as each
+  frame is built) — the reference's insert-transactions-then-
+  ``try_join!`` shape (handlers/mod.rs:115-125).  Concurrent appends of
+  one pass go to DIFFERENT tables, so they share no staging dir or part
+  file; the pass returns (and a streaming batch saves its state) only
+  after every append committed.  A failed pass may have committed any
+  subset of its tables, which is why the batch CLI resumes from
+  ``high_water_mark`` over all of them.
 - **append vs append — EXACTLY-ONCE (r12; was tolerated-re-append).**
   Each append job writes its whole batch into a PRIVATE
   ``_staging-<uuid>`` subtree and publishes by atomic per-file rename,
@@ -73,8 +83,10 @@ Concurrency contract (VERDICT r07 #5 audit):
 
 from __future__ import annotations
 
+import logging
 import os
 import time
+from concurrent.futures import Future, wait
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -82,7 +94,10 @@ from pyspark.sql.window import Window
 
 from . import metrics, schemas
 from .caching import Pins
+from .concurrency import submit
 from .tracing import TRACER
+
+log = logging.getLogger(__name__)
 
 HEIGHT_BUCKET_SIZE = 10_000
 
@@ -392,11 +407,24 @@ def retain(path: str, min_height: int) -> int:
 
 
 def last_indexed_height(spark: SparkSession, path: str) -> int | None:
-    """SELECT max(block_height) on the sink (R3, database.rs:14-39)."""
-    if not os.path.exists(path):
+    """SELECT max(block_height) on the sink (R3, database.rs:14-39); None
+    for a table with no committed part file (never written, or only by an
+    append that failed)."""
+    if not os.path.exists(path) or not _part_inventory(path):
         return None
     row = spark.read.parquet(path).agg(F.max("block_height").alias("h")).collect()[0]
     return row["h"]
+
+
+def high_water_mark(spark: SparkSession, base_dir: str, names) -> int | None:
+    """The lowest :func:`last_indexed_height` over the tables ``names``:
+    every block at or below it is in all of them, whichever of a pass's
+    concurrent appends committed before a failure.  None if any table
+    holds nothing.  A sparse table (a silver MV whose last row is old)
+    pulls the mark back to its last row; re-ingesting the overlap is
+    safe, only slower."""
+    heights = [last_indexed_height(spark, os.path.join(base_dir, n)) for n in names]
+    return None if None in heights else min(heights)
 
 
 def resume_start(cli_start: int, force: bool, last_height: int | None) -> int:
@@ -406,47 +434,74 @@ def resume_start(cli_start: int, force: bool, last_height: int | None) -> int:
     return max(cli_start, last_height + 1)
 
 
-def append_tables(
-    tables: dict[str, DataFrame],
-    base_dir: str,
-    ingest_seq: int,
-    with_silver: bool = False,
-) -> dict[str, str]:
-    """Append each table to ``base_dir/<name>``; return the paths.
+class Appends:
+    """The one sink fan-out: ``emit(name, df)`` starts appending ``df`` to
+    ``base_dir/<name>`` on a thread of its own (``concurrency.submit``)
+    and returns at once, so a pass's appends run while it builds its
+    next table.  Leaving the ``with`` block waits for every append,
+    releases what the fan-out pinned, then raises the first append's
+    error; an error raised inside the block wins.  Every append error
+    that is not raised is logged.  Callers release their own pins only
+    after that.
 
-    ``with_silver`` also appends the 9 silver MVs under ``silver/`` (S18:
-    each ClickHouse MV sees only the inserted batch, and the transforms
-    are stateless projections of the events batch).  Each append is
-    retried (R23), traced as the reference's insert span (database.rs:41)
-    and sets the R22 per-asset-type captured gauge from a row count that
-    rides the write job via ``observe`` — zero extra Spark jobs."""
-    tables = dict(tables)
+    ``with_silver`` also appends the 9 silver MVs under ``silver/`` when
+    ``events`` is emitted (S18: each ClickHouse MV sees only the inserted
+    batch, and the transforms are stateless projections of the events
+    batch).  Each append is retried (R23), traced as the reference's
+    insert span (database.rs:41) and sets the R22 per-asset-type captured
+    gauge from a row count that rides the write job via ``observe`` —
+    zero extra Spark jobs.  ``paths`` maps every emitted table to its
+    path."""
 
-    def append_observed(df: DataFrame, path: str) -> int:
-        # a fresh Observation per attempt: one attaches only once
-        obs = Observation()
-        append(df.observe(obs, F.count(F.lit(1)).alias("n")), path, ingest_seq)
-        return obs.get["n"]
+    def __init__(self, base_dir: str, ingest_seq: int, with_silver: bool = False) -> None:
+        self.base_dir, self.ingest_seq, self.with_silver = base_dir, ingest_seq, with_silver
+        self.paths: dict[str, str] = {}
+        self._writes: list[Future] = []
+        # the events pin only exists to share the scan across the 9 silver
+        # writes — released once they're flushed instead of pinning the
+        # batch in executor memory for the rest of the session (ADVICE r04 #4)
+        self._pins = Pins()
 
-    paths = {}
-    # the events pin only exists to share the scan across the 9 silver
-    # writes — released once they're flushed instead of pinning the batch
-    # in executor memory for the rest of the session (ADVICE r04 #4)
-    with Pins() as pins:
-        if with_silver:
+    def emit(self, name: str, df: DataFrame) -> None:
+        if self.with_silver and name == "events":
             from .plans.silver import all_silver_tables
 
-            events = pins.pin(tables["events"])
-            for sname, sdf in all_silver_tables(events).items():
-                tables[f"silver/{sname}"] = sdf
-        for name, df in tables.items():
-            path = os.path.join(base_dir, name)
+            df = self._pins.pin(df)
+            for sname, sdf in all_silver_tables(df).items():
+                self._start(f"silver/{sname}", sdf)
+        self._start(name, df)
+
+    def _start(self, name: str, df: DataFrame) -> None:
+        path = os.path.join(self.base_dir, name)
+
+        def append_observed() -> int:
+            # a fresh Observation per attempt: one attaches only once
+            obs = Observation()
+            append(df.observe(obs, F.count(F.lit(1)).alias("n")), path, self.ingest_seq)
+            return obs.get["n"]
+
+        def write() -> None:
             with TRACER.span("sink_append", table=name) as sp:
-                n = with_retries(lambda d=df, p=path: append_observed(d, p))
+                n = with_retries(append_observed)
                 sp.attributes["rows"] = n
             metrics.ASSETS_IN_BLOCK_CAPTURED_TOTAL.labels(asset_type=name).set(n)
-            paths[name] = path
-    return paths
+
+        self.paths[name] = path
+        self._writes.append(submit(df.sparkSession, write))
+
+    def __enter__(self) -> "Appends":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        wait(self._writes)
+        self._pins.close()
+        errors = [f.exception() for f in self._writes if f.exception() is not None]
+        # one error propagates (the block's own, else the first append's);
+        # every append error that does not is logged
+        for e in errors if exc is not None else errors[1:]:
+            log.warning("sink append failed", exc_info=e)
+        if errors and exc is None:
+            raise errors[0]
 
 
 def ingest_bronze(
@@ -460,14 +515,20 @@ def ingest_bronze(
     with_silver: bool = False,
 ) -> dict[str, str]:
     """Run the bronze pipeline and append every table to its sink — the
-    batch twin of the streaming micro-batch (SURVEY §3.1)."""
+    batch twin of the streaming micro-batch (SURVEY §3.1).  Each append
+    starts as soon as ``run_bronze`` emits its table."""
     from .plans.pipeline import run_bronze
 
-    tables = run_bronze(
-        blocks, accounts=accounts, block_end=block_end, events_only=events_only
-    )
-    with tables.pins:
-        return append_tables(tables, base_dir, ingest_seq, with_silver)
+    with Pins() as pins, Appends(base_dir, ingest_seq, with_silver) as appends:
+        tables = run_bronze(
+            blocks,
+            accounts=accounts,
+            block_end=block_end,
+            events_only=events_only,
+            emit=appends.emit,
+        )
+        pins.enter_context(tables.pins)
+    return appends.paths
 
 
 # ---------------------------------------------------------------------------

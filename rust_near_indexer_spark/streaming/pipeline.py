@@ -9,6 +9,9 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
   (sources.block_stream).  Both deliver the same schema in the same
   height order; a per-trigger bound sizes the micro-batch — the analog
   of the blocksapi prefetch batch (indexer-common/src/config.rs:98-104).
+  A block that does not parse arrives as a NULL-height row;
+  ``process_batch`` drops it, logs a warning and counts it in
+  ``corrupt_blocks_dropped_total``, from the batch's one max/count job.
 - **Ordered processing (R4)**: micro-batches run strictly serially
   (Structured Streaming's execution model) and the within-batch fixpoint
   checks mapping-validity windows against reader heights, so replay
@@ -22,8 +25,8 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
   inexpressible there.  The idiomatic Spark equivalent of a shared KV
   is an incrementally-maintained **state table**: each batch passes the
   carried mappings to the one bronze DAG (``run_bronze(carried=...)``,
-  shared with batch ingest, as is the ``sinks.append_tables`` loop with
-  its silver MV fan-out), which adds them to the seeds of the bounded
+  shared with batch ingest, as is the ``sinks.Appends`` fan-out with
+  its silver MVs), which adds them to the seeds of the bounded
   fixpoint; the batch then saves the surviving window of mappings
   (TTL-pruned by height distance).  Deterministic, and the whole state
   lives in columnar storage instead of an external Redis.
@@ -31,7 +34,10 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
   every append is stamped with ``ingest_seq = batch_id`` and the sinks
   dedup by declared PK on read/compact (sinks.py), so replays collapse —
   the same ReplacingMergeTree + re-insert-overlap idempotency model the
-  reference relies on (SURVEY §1.3).  The state is saved last, as a new
+  reference relies on (SURVEY §1.3).  A batch's appends run
+  concurrently, each starting as soon as its table exists (the
+  reference's ``try_join!``, handlers/mod.rs:115-125).  The state is
+  saved last, once every append has committed, as a new
   generation swapped in by symlink (artifact_io.publish_artifact): a
   crash anywhere, inside the state write included, leaves the previous
   generation, so the replay reads the state the first attempt read.
@@ -39,6 +45,7 @@ handlers/mod.rs:16-139).  The Spark-first rendering:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +58,8 @@ from ..plans.pipeline import run_bronze
 from ..plans.state import DEFAULT_TTL_BLOCKS
 from ..tracing import TRACER
 from .sources import block_stream, is_endpoint
+
+log = logging.getLogger(__name__)
 
 _STATE_COLS = ("receipt_id", "tx_hash", "tier", "write_block")
 
@@ -94,24 +103,35 @@ def process_batch(
         sp.attributes["n_blocks"] = 0
         # One JSON parse per batch: blocks feeds both flattens (each read
         # by several consumers).  The max-height/count job fills the cache,
-        # answers the empty-trigger check and feeds the TTL prune and the
+        # answers the empty-trigger check, counts the blocks that did not
+        # parse (a NULL block_height row) and feeds the TTL prune and the
         # R22 throughput/height metrics.
         blocks = pins.pin(blocks)
         agg = blocks.agg(
-            F.max("block_height").alias("h"), F.count(F.lit(1)).alias("n")
+            F.max("block_height").alias("h"),
+            F.count("block_height").alias("n"),
+            F.count(F.lit(1)).alias("rows"),
         ).collect()[0]
         max_h, n = agg["h"], int(agg["n"])
+        corrupt = int(agg["rows"]) - n
+        if corrupt:
+            log.warning("batch %d: dropped %d block(s) that did not parse", batch_id, corrupt)
+            metrics.CORRUPT_BLOCKS_DROPPED_TOTAL.inc(corrupt)
+            blocks = blocks.where(F.col("block_height").isNotNull())
         if not n:
             return 0
-        tables = run_bronze(
-            blocks,
-            accounts,
-            ttl_blocks,
-            events_only=events_only,
-            carried=_load_state(blocks.sparkSession, state_dir),
-        )
-        pins.enter_context(tables.pins)
-        sinks.append_tables(tables, out_dir, batch_id, with_silver)
+        # every append has committed when the Appends block exits, so the
+        # state save below still comes last
+        with sinks.Appends(out_dir, batch_id, with_silver) as appends:
+            tables = run_bronze(
+                blocks,
+                accounts,
+                ttl_blocks,
+                events_only=events_only,
+                carried=_load_state(blocks.sparkSession, state_dir),
+                emit=appends.emit,
+            )
+            pins.enter_context(tables.pins)
         metrics.BLOCK_PROCESSED_TOTAL.inc(n)
         metrics.LATEST_BLOCK_HEIGHT.set(max_h)
         # TTL prune: a mapping written at W is unreadable once every

@@ -25,8 +25,9 @@ Directory (NEAR Lake)
     and gets the same bytes (the property blocksapi's start-block resume
     relies on, `main.rs:100-127`).  The gRPC difference is framing, not
     semantics.  Payloads are parsed with ``from_json``; a corrupt one
-    becomes a NULL ``block_height`` row and is dropped instead of
-    failing the stream.
+    becomes a NULL ``block_height`` row instead of failing the stream,
+    as a corrupt line in a block file does, and ``process_batch`` drops,
+    logs and counts it.
 
 Both produce identical rows in identical height order, so the bronze
 pipeline fingerprint-matches across them (tests/test_source_adapters.py).
@@ -142,8 +143,4 @@ def block_stream(
         .option("blocksPerTrigger", str(blocks_per_trigger or PREFETCH_BLOCKS))
         .load()
     )
-    return (
-        envelope.select(F.from_json(F.col("value"), schemas.BLOCK).alias("b"))
-        .select("b.*")
-        .where(F.col("block_height").isNotNull())
-    )
+    return envelope.select(F.from_json(F.col("value"), schemas.BLOCK).alias("b")).select("b.*")

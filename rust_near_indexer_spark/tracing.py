@@ -14,7 +14,9 @@ inserts — so that is what this module traces.  Spans follow the W3C
 Trace Context / OTLP data model (public standards):
 
 - 128-bit trace ids / 64-bit span ids, hex-encoded;
-- parenthood via a context-local current-span stack;
+- parenthood via a thread-local current-span stack; work handed to
+  another thread carries its parent along (``Tracer.context`` /
+  ``Tracer.attached``, used by ``concurrency.submit``);
 - ``traceparent()`` renders the standard ``00-<trace>-<span>-01``
   header for cross-service propagation;
 - exporters: ``JsonlExporter`` (always available — newline-delimited
@@ -219,6 +221,30 @@ class Tracer:
                         log.warning("tracing: %d spans not exported", len(batch), exc_info=True)
             elif not stack:
                 self._local.finished.clear()
+
+    def context(self) -> tuple:
+        """The calling thread's current span and its unexported spans, for
+        work it hands to another thread (:meth:`attached`)."""
+        stack = self._stack()
+        return (stack[-1] if stack else None), self._local.finished
+
+    @contextmanager
+    def attached(self, context: tuple):
+        """Run the block under another thread's :meth:`context`: a span
+        opened here is a child of that thread's current span and joins its
+        export batch.  With no current span there, spans here are roots of
+        their own traces, as on any thread."""
+        parent, finished = context
+        self._stack()
+        saved = self._local.stack, self._local.finished
+        if parent is None:
+            self._local.stack, self._local.finished = [], []
+        else:
+            self._local.stack, self._local.finished = [parent], finished
+        try:
+            yield
+        finally:
+            self._local.stack, self._local.finished = saved
 
     def traceparent(self) -> Optional[str]:
         """W3C Trace Context header for the current span, or None."""

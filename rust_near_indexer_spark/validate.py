@@ -18,10 +18,13 @@ such chains are rare there).
 
 from __future__ import annotations
 
+from concurrent.futures import wait
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import schemas
+from .concurrency import submit
 
 
 def _valid_json(col) -> F.Column:
@@ -46,13 +49,11 @@ def validate_bronze(
 
     # one aggregation job per table (map-side conditional counts), plus
     # the two RI anti-joins — 6 jobs, not 11 sequential counts.  The six
-    # actions are independent, so they are submitted from a small thread
-    # pool (guide §2.6): each job's tail no longer serializes the whole
+    # actions are independent, so each is submitted from a thread of its
+    # own (guide §2.6): each job's tail no longer serializes the whole
     # suite, later jobs back-fill executors freed by earlier stragglers.
     # Spark's scheduler runs concurrent jobs FIFO; cached bronze blocks
     # are read under block-level locks, so results are unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
     tx_hashes = tx.select(F.col("transaction_hash").alias("h"))
     actions = {
         "ev": lambda: ev.agg(
@@ -79,9 +80,9 @@ def validate_bronze(
             tx_hashes, oc["parent_transaction_hash"] == tx_hashes["h"], "left_anti"
         ).count(),
     }
-    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
-        futs = {k: pool.submit(f) for k, f in actions.items()}
-        res = {k: f.result() for k, f in futs.items()}
+    futs = {k: submit(ev.sparkSession, f) for k, f in actions.items()}
+    wait(futs.values())  # none still running if one raises
+    res = {k: f.result() for k, f in futs.items()}
     ev_row, tx_row, rc_row, oc_row = res["ev"], res["tx"], res["rc"], res["oc"]
     ri_receipts, ri_outcomes = res["ri_rc"], res["ri_oc"]
 

@@ -5,8 +5,8 @@ A function or class that no package module, entry point (``bench.py``,
 dead code: nothing can call it, and no test pins what it does.  The scan
 is textual (an identifier anywhere, comments and strings included), so
 it only catches names that appear nowhere at all; it needs no Spark.
-The same no-Spark scans keep the env-var table, the one persist owner
-and every import honest.
+The same no-Spark scans keep the env-var table, the one persist owner,
+the one thread helper and every import honest.
 """
 
 from __future__ import annotations
@@ -79,6 +79,21 @@ def test_only_caching_persists():
         with open(path, encoding="utf-8") as f:
             for n, line in enumerate(f, 1):
                 if re.search(r"\.persist\(|\.cache\(\)|\.unpersist\(", line):
+                    spelled.append(f"{os.path.relpath(path, ROOT)}:{n}")
+    assert spelled == []
+
+
+def test_only_concurrency_starts_spark_threads():
+    """``concurrency.submit`` is the one way to run Spark jobs from another
+    thread: it hands each task the caller's Spark local properties and
+    trace parent.  No other package module builds a thread pool."""
+    spelled = []
+    for path in _py_files(PKG):
+        if os.path.basename(path) == "concurrency.py":
+            continue
+        with open(path, encoding="utf-8") as f:
+            for n, line in enumerate(f, 1):
+                if "ThreadPoolExecutor" in line:
                     spelled.append(f"{os.path.relpath(path, ROOT)}:{n}")
     assert spelled == []
 

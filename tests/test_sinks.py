@@ -5,6 +5,7 @@ makes the reference's resume-and-reinsert-overlap model exactly-once)."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -495,3 +496,61 @@ def test_compact_raced_with_live_appends_loses_nothing(spark, tmp_path):
     raw = spark.read.parquet(path).count()
     assert raw == 10
     assert _kv_final(spark, path) == {k: "s5" for k in range(10)}
+
+
+def test_transactions_append_overlaps_the_fixpoint(spark, tmp_path, monkeypatch):
+    """``transactions`` needs only the flattened transactions, so its
+    append is submitted before the state fixpoint returns: the patched
+    fixpoint waits for the patched append to see it."""
+    from rust_near_indexer_spark.plans import state
+
+    seen = threading.Event()
+    append, resolve_mappings = sinks.append, state.resolve_mappings
+
+    def spy_append(df, path, *a, **kw):
+        if os.path.basename(path) == "transactions":
+            seen.set()
+        return append(df, path, *a, **kw)
+
+    def waiting_resolve(*a, **kw):
+        assert seen.wait(timeout=30), "transactions was not submitted before the fixpoint"
+        return resolve_mappings(*a, **kw)
+
+    monkeypatch.setattr(sinks, "append", spy_append)
+    monkeypatch.setattr(state, "resolve_mappings", waiting_resolve)
+    blocks, _ = fixtures.generate(n_blocks=30, ttl_blocks=5)
+    paths = sinks.ingest_bronze(spark, fixtures.blocks_df(spark, blocks), str(tmp_path), 1)
+    assert sorted(paths) == sorted(sinks.TABLE_PKS)
+
+
+@pytest.mark.parametrize("body_fails", [False, True])
+def test_appends_raise_one_error_and_log_the_rest(
+    spark, tmp_path, monkeypatch, caplog, body_fails
+):
+    """Two of three concurrent appends fail: leaving the ``Appends`` block
+    raises the first emitted one's error (or the block's own) after the
+    third append committed, and logs every append error it does not
+    raise."""
+    import logging
+
+    def failing(df, path, *a, **kw):
+        name = os.path.basename(path)
+        if name != "ok":
+            raise RuntimeError(f"{name} failed")
+        return append(df, path, *a, **kw)
+
+    append = sinks.append
+    monkeypatch.setattr(sinks, "append", failing)
+    monkeypatch.setattr(sinks, "with_retries", lambda fn: fn())
+    df = spark.range(3).withColumn("block_height", F.col("id"))
+    want = "body failed" if body_fails else "a failed"
+    with caplog.at_level(logging.WARNING, logger="rust_near_indexer_spark.sinks"):
+        with pytest.raises(RuntimeError, match=want):
+            with sinks.Appends(str(tmp_path), 1) as appends:
+                for name in ("a", "ok", "b"):
+                    appends.emit(name, df)
+                if body_fails:
+                    raise RuntimeError("body failed")
+    logged = sorted(str(r.exc_info[1]) for r in caplog.records if r.exc_info)
+    assert logged == (["a failed", "b failed"] if body_fails else ["b failed"])
+    assert spark.read.parquet(str(tmp_path / "ok")).count() == 3

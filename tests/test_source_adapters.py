@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from rust_near_indexer_spark import fixtures, sinks
 from rust_near_indexer_spark.canonical import fingerprint
 from rust_near_indexer_spark.queries.near_events import TTL_BLOCKS
-from rust_near_indexer_spark.streaming import block_stream, run_streaming
+from rust_near_indexer_spark.streaming import run_streaming
 
 N_BLOCKS = 120
 N_CHUNKS = 3
@@ -139,30 +139,45 @@ def test_http_poll_resumes_from_checkpoint_as_tip_advances(
     assert _table_fps(spark, out) == _table_fps(spark, ref)
 
 
-def test_http_poll_drops_corrupt_payloads_loudly(spark, tmp_path):
+def test_http_poll_drops_corrupt_payloads_loudly(spark, tmp_path, caplog):
     """A block the endpoint serves in the wrong shape parses to a NULL
-    block_height row and is dropped by block_stream — the stream keeps
-    going to the tip instead of dying inside from_json."""
-    blocks, _ = fixtures.generate(n_blocks=6, ttl_blocks=TTL_BLOCKS)
+    block_height row: the stream keeps going to the tip instead of dying
+    inside from_json, each micro-batch drops those rows with a warning
+    and a count in ``corrupt_blocks_dropped_total``, and the tables equal
+    a directory run over the good blocks alone."""
+    import logging
+
+    from rust_near_indexer_spark import metrics
+
+    blocks, _ = fixtures.generate(n_blocks=12, ttl_blocks=TTL_BLOCKS)
     served = [dict(b) for b in blocks]
     served[2] = {"garbage": "\x00not-a-block"}  # parses as JSON, wrong shape
     served[4] = {"block_height": None}
-    got = []
-
-    def _b(df, bid):
-        got.extend(r["block_height"] for r in df.select("block_height").collect())
-
-    with serve_blocks(served) as server:
-        q = (
-            block_stream(spark, server.url, blocks_per_trigger=4)
-            .writeStream.foreachBatch(_b)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
+    dropped0 = metrics.CORRUPT_BLOCKS_DROPPED_TOTAL.value
+    processed0 = metrics.BLOCK_PROCESSED_TOTAL.value
+    out = str(tmp_path / "out")
+    with serve_blocks(served) as server, caplog.at_level(logging.WARNING):
+        run_streaming(
+            spark, server.url, out, str(tmp_path / "ckpt"),
+            ttl_blocks=TTL_BLOCKS, blocks_per_trigger=4,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    want = [b["block_height"] for i, b in enumerate(blocks) if i not in (2, 4)]
-    assert sorted(got) == sorted(want)
+    # triggers of 4 blocks: block 2 is in batch 0, block 4 in batch 1
+    warned = [r.getMessage() for r in caplog.records if "did not parse" in r.getMessage()]
+    assert warned == [
+        "batch 0: dropped 1 block(s) that did not parse",
+        "batch 1: dropped 1 block(s) that did not parse",
+    ]
+    assert metrics.CORRUPT_BLOCKS_DROPPED_TOTAL.value - dropped0 == 2
+    assert metrics.BLOCK_PROCESSED_TOTAL.value - processed0 == len(blocks) - 2
+
+    good_dir = tmp_path / "good"
+    good_dir.mkdir()
+    with open(good_dir / "blocks.jsonl", "w") as f:
+        for i, b in enumerate(blocks):
+            if i not in (2, 4):
+                f.write(json.dumps(b, separators=(",", ":")) + "\n")
+    ref = str(tmp_path / "ref")
+    run_streaming(
+        spark, str(good_dir), ref, str(tmp_path / "ckpt-ref"), ttl_blocks=TTL_BLOCKS
+    )
+    assert _table_fps(spark, out) == _table_fps(spark, ref)

@@ -170,7 +170,36 @@ def _receipt_dag_depths(spark, tmp_path, monkeypatch):
     caching.clear_caches()
 
 
+def _failing_concurrent_append(spark, tmp_path, monkeypatch):
+    import functools
+
+    append = sinks.append
+
+    def fail_receipts(df, path, *a, **kw):
+        if os.path.basename(path) == "receipts":
+            raise RuntimeError("injected append failure")
+        return append(df, path, *a, **kw)
+
+    monkeypatch.setattr(sinks, "append", fail_receipts)
+    monkeypatch.setattr(
+        sinks, "with_retries", functools.partial(sinks.with_retries, attempts=1)
+    )
+    blocks, _ = fixtures.generate(n_blocks=60, ttl_blocks=TTL_BLOCKS)
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="injected append failure"):
+        sinks.ingest_bronze(
+            spark, fixtures.blocks_df(spark, blocks), str(out), 1, with_silver=True
+        )
+    # the other appends ran to the end before the error surfaced: each
+    # committed its rows and no staging dir is left in flight
+    for name in ("events", "transactions", "execution_outcomes", "silver/silver_transfers"):
+        assert not [d for d in os.listdir(out / name) if d.startswith("_staging-")]
+        assert spark.read.parquet(str(out / name)).count() > 0, name
+    assert not (out / "receipts").exists()
+
+
 _OWNERS = {
+    "failing_concurrent_append": _failing_concurrent_append,
     "curate": _curate,
     "write_dedup_artifact": _write_dedup_artifact,
     "append_ann_artifact": _append_ann_artifact,
@@ -185,7 +214,9 @@ def test_no_persisted_frame_outlives_its_batch(spark, tmp_path, monkeypatch, ent
     persists is released when the call returns, or raises: Spark's cache
     manager is as empty after a batch ingest, or after several
     micro-batches, as it was before — and again after one that fails
-    inside the state fixpoint.  The other owners leave it empty too:
+    inside the state fixpoint, and after a batch ingest whose receipts
+    append fails while the other appends run.  The other owners leave it
+    empty too:
     curation once ``clear_caches()`` ran, a dedup artifact build whose
     connected components fail, an ANN append refused for a donor-range
     id, a training-shard write, and the receipt-DAG walk once
